@@ -23,8 +23,7 @@ input is generated once (deterministic, seeded) and cached under
 
 Set BENCH_SCALING=1 to also run the N-vs-4N scaling measurement
 (interleaved local[4/8/16/32] rounds with a same-moment hardware
-control, see run_scaling); scripts/bench_scaling.py wraps this and
-writes BENCH/BASELINE.md.
+control, see run_scaling).
 """
 
 from __future__ import annotations
@@ -285,8 +284,8 @@ def main():
     timings["pipeline_transcripts"] = pipe["wall_sec"]
 
     # FLAGSHIP at bench4x (~8M turns) by default when benching the full
-    # sf0.1 tier: the session-fixed per-job tail (measured 2.1-3.6 s by
-    # scripts/profile_tail.py) is 15-25% of a ~13 s 2M-turn wall but
+    # sf0.1 tier: the session-fixed per-job tail (measured 2.1-3.6 s on a
+    # 32-vCPU host) is 15-25% of a ~13 s 2M-turn wall but
     # ~1.4% at bench4x, so the larger scale reports the ENGINE's
     # turns/sec, not the harness tail. The 2M-turn block above stays for
     # cross-round comparability (BENCH_r2/r3 measured it).

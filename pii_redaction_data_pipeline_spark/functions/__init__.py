@@ -16,7 +16,6 @@ from pii_redaction_data_pipeline_spark.functions.perplexity import (
 from pii_redaction_data_pipeline_spark.functions.quality import (
     repetition_frac_series,
     make_repetition_udf,
-    with_heuristic_columns,
 )
 
 __all__ = [
@@ -31,5 +30,4 @@ __all__ = [
     "train_char_trigram_lm",
     "repetition_frac_series",
     "make_repetition_udf",
-    "with_heuristic_columns",
 ]

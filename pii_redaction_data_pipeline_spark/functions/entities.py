@@ -132,12 +132,13 @@ def entities_frame(texts: pd.Series) -> pd.Series:
     # hand-copied literal list: a pattern added to scrub.PATTERNS whose
     # trigger the copy lacked would pass scrub_frame but silently fail
     # this prescan — entities and scrub_counts disagreeing with no error
-    # (the parity the module docstring pins). A trigger kind this
-    # prescan cannot express (None) disables the prefilter entirely.
+    # (the parity the module docstring pins). Any trigger kind this
+    # prescan cannot express (None, or a kind it does not know)
+    # disables the prefilter entirely.
     from pii_redaction_data_pipeline_spark.functions.scrub import _TRIGGERS
 
     kinds = set(_TRIGGERS.values())
-    if None in kinds:
+    if not kinds <= {"digit", "@", ":", "profanity"}:
         cand = np.ones(len(s), dtype=bool)
     else:
         cand = np.zeros(len(s), dtype=bool)

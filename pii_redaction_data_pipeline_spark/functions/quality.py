@@ -183,17 +183,6 @@ def make_repetition_udf():
     return repetition_udf
 
 
-def with_heuristic_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add n_chars, n_words, symbol_ratio, rep_frac columns."""
-    text = F.col(text_col)
-    return (
-        df.withColumn("n_chars", F.length(text))
-        .withColumn("n_words", n_words_col(text))
-        .withColumn("symbol_ratio", symbol_ratio_col(text))
-        .withColumn("rep_frac", make_repetition_udf()(text))
-    )
-
-
 # --- Gopher repetition panel (the paper's remaining repetition signals) -----
 
 

@@ -143,7 +143,10 @@ def build_config(args: argparse.Namespace):
 def main(argv: list[str] | None = None) -> dict:
     args = parse_args(argv)
     from pii_redaction_data_pipeline_spark import get_spark
-    from pii_redaction_data_pipeline_spark.plans.pipeline import run_pipeline
+    from pii_redaction_data_pipeline_spark.plans.pipeline import (
+        annotated_run_rows,
+        run_pipeline,
+    )
 
     spark = get_spark(
         master=args.master,
@@ -203,11 +206,8 @@ def main(argv: list[str] | None = None) -> dict:
         # data column and cannot); completed_buckets covers earlier
         # sessions of a resumed run-id, not just this invocation's.
         buckets = LineageStore(spark, args.lineage).completed_buckets(args.run_id)
-        out_df = spark.read.parquet(args.output)
-        if "run_id" not in out_df.columns:  # pre-run_id-column files
-            out_df = out_df.withColumn("run_id", F.lit(args.run_id))
-        out_df = out_df.filter(
-            F.col(BUCKET_COL).isin(buckets) & (F.col("run_id") == args.run_id)
+        out_df = annotated_run_rows(spark, args.output, args.run_id).filter(
+            F.col(BUCKET_COL).isin(buckets)
         )
     if args.report:
         from pii_redaction_data_pipeline_spark.sources.report import (

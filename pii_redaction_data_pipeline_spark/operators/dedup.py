@@ -313,29 +313,6 @@ def make_jaccard_udf(shingle_k: int = 3):
     return jaccard_udf
 
 
-def conversation_documents(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    text_col: str = "text",
-    order_col: str = "turn_idx",
-    sep: str = "\n",
-) -> DataFrame:
-    """Collapse a transcript table to one document per conversation:
-    (conv_id, conv_text) with turns concatenated in stable order.
-
-    One groupBy (map-side combined collect_list) — the collected array
-    is bounded by the conversation's own size, the unit every
-    conversation-level stage already holds together. The in-group sort
-    happens JVM-side via array_sort over (order_col, text) structs, so
-    no window/shuffle beyond the groupBy."""
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(text_col).alias("t")))
-    )
-    return df.groupBy(F.col(conv_col).alias("conv_id")).agg(
-        F.array_join(F.transform(ordered, lambda s: s["t"]), sep).alias("conv_text")
-    )
-
-
 def conversation_turn_shingles(
     df: DataFrame,
     conv_col: str = "conv_id",

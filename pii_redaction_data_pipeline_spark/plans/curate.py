@@ -64,6 +64,10 @@ from pii_redaction_data_pipeline_spark.operators.sampling import (
 from pii_redaction_data_pipeline_spark.operators.windows import (
     conversation_verdict,
 )
+from pii_redaction_data_pipeline_spark.plans.pipeline import (
+    annotated_run_rows,
+    run_pipeline,
+)
 from pii_redaction_data_pipeline_spark.sources.lineage import (
     LINEAGE_SCHEMA,
     LineageStore,
@@ -214,112 +218,6 @@ def dedup_survivor_convs(
     return kept_convs.select("conv_id").join(dropped, "conv_id", "anti")
 
 
-def _footer_null_stats(path: str, column: str):
-    """Parquet-footer verdict on `column` NULLs across the WHOLE
-    directory: False = no row group anywhere holds a NULL (metadata-only
-    proof, no data read), True = some row group does, None = stats
-    unavailable (column missing from some footer, stats not written, or
-    a non-local/unlistable path).
-
-    Iceberg note: at production scale the same answer comes from the
-    manifest's null_value_counts — also metadata-only; this is the
-    plain-parquet stand-in."""
-    try:
-        import pyarrow.dataset as pds
-
-        dataset = pds.dataset(path, format="parquet")
-        saw_any = False
-        for frag in dataset.get_fragments():
-            md = frag.metadata
-            names = md.schema.names  # leaf columns of THIS file's footer
-            if column not in names:
-                return None  # pre-upgrade file: its rows read as NULL
-            ci = names.index(column)
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(ci).statistics
-                if stats is None or not stats.has_null_count:
-                    return None
-                if stats.null_count > 0:
-                    return True
-            saw_any = True
-        return False if saw_any else None
-    except Exception:
-        return None
-
-
-def _fp_nulls_per_footer_stats(annotated_path: str):
-    """_footer_null_stats over turn_fp (kept as the named probe the
-    dedup fast path and its tests pin)."""
-    return _footer_null_stats(annotated_path, "turn_fp")
-
-
-def _run_scoped_annotated(spark, annotated_path: str, run_id: str) -> DataFrame:
-    """The annotated table filtered to THIS run's rows, with the same
-    pre-run_id-column migration semantics as run_pipeline: a directory
-    written before the run_id column existed is stamped with the
-    literal run_id (it can only hold this work dir's rows), while a
-    MIXED directory — pre-upgrade files whose rows read run_id as NULL
-    next to stamped files — is rejected loudly: the filter below would
-    silently drop the NULL rows, whole conversations vanishing from the
-    verdict/pack stages with no error. The NULL probe is parquet-footer
-    metadata in the healthy case (one row-level check only when footers
-    are inconclusive)."""
-    ann = spark.read.parquet(annotated_path)
-    if "run_id" not in ann.columns:
-        ann = ann.withColumn("run_id", F.lit(run_id))
-    elif _footer_null_stats(annotated_path, "run_id") is not False:
-        if not ann.filter(F.col("run_id").isNull()).isEmpty():
-            raise ValueError(
-                f"{annotated_path} mixes files with and without run_id "
-                "values; rows reading run_id as NULL cannot be attributed "
-                "to a run — re-annotate (delete the stage:annotate lineage "
-                "row) or migrate the table"
-            )
-    return ann.filter(F.col("run_id") == run_id)
-
-
-def _dedup_fp_source(spark, annotated_path: str, run_id: str):
-    """The conv_dedup shingle source: the annotated table's pruned
-    (conv_id, turn_idx, turn_fp) scan — or None, telling the caller to
-    fall back to a raw-source re-read.
-
-    The guard is ROW-level, not schema-level: a per-bucket resume that
-    crossed the turn_fp upgrade (or a shared output dir holding an old
-    run) leaves a MIXED directory whose merged schema shows the column
-    while rows from pre-upgrade files read it as NULL — and xxhash64
-    skips NULL inputs, so all-NULL fingerprint sequences would collapse
-    every such conversation onto ONE shingle value and dedup them
-    against each other (silent mass data loss).
-
-    Cost: the healthy common case (every footer proves null_count == 0
-    for turn_fp) is decided from parquet metadata alone — no data pass.
-    Only when footer stats are inconclusive, or show NULLs that might
-    belong to ANOTHER run sharing the directory, does the row-level
-    Spark probe run — and that probe scans the pruned fp column of this
-    run, the honest price of proving the fast path safe on a mixed
-    directory (with Iceberg the null_value_counts manifest field makes
-    even that case metadata-only)."""
-    ann = spark.read.parquet(annotated_path)
-    if "turn_fp" not in ann.columns:
-        return None
-    if "run_id" not in ann.columns:
-        # pre-run_id-column files (migration): such a directory predates
-        # turn_fp as well, but guard the filter below anyway
-        ann = ann.withColumn("run_id", F.lit(run_id))
-    fpdf = (
-        ann.filter(F.col("run_id") == run_id)
-        .select("conv_id", "turn_idx", "turn_fp")
-    )
-    footer = _fp_nulls_per_footer_stats(annotated_path)
-    if footer is False:
-        return fpdf  # metadata proof: zero NULL fps anywhere in the dir
-    # footer saw NULLs (possibly another run's files) or couldn't tell:
-    # decide at row level for THIS run's rows
-    if not fpdf.filter(F.col("turn_fp").isNull()).isEmpty():
-        return None
-    return fpdf
-
-
 def run_curation(
     spark: SparkSession,
     input_path: str,
@@ -339,12 +237,17 @@ def run_curation(
     retain_original_text=True. The effective choice is echoed in the
     returned summary under ``retain_original_text``.
 
+    The verdict, dedup and pack stages read the annotated table only
+    through `annotated_run_rows`: this run's rows, with `run_id` and
+    `turn_fp` required in the schema and NULLs in them failing the scan
+    that meets them, so a mixed-layout directory raises an error naming
+    its path instead of silently losing or mass-deduping conversations.
+
     `fail_after_stage` injects a crash after the named stage completes
     (its lineage row IS written first) — the cross-stage analog of
     run_pipeline's fail_after_buckets, for the kill-and-resume test.
     """
     from pii_redaction_data_pipeline_spark.operators.packing import pack_sequences
-    from pii_redaction_data_pipeline_spark.plans.pipeline import run_pipeline
 
     if cfg is None:
         # The curation DAG's product is the scrubbed text; the raw text is
@@ -400,8 +303,7 @@ def run_curation(
         Observation riding ALONG the write job — no post-write re-read
         (round-3 VERDICT: the four per-stage `.count()` re-reads were
         one extra scan each; at 100 TB the annotate/pack ones are real
-        money). Same pattern as run_pipeline's run totals
-        (plans/pipeline.py:382-391)."""
+        money). Same pattern as run_pipeline's run totals."""
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -458,7 +360,7 @@ def run_curation(
     # the annotated table (e.g. only 'sample' pending) must not fail
     # on a missing/GC'd annotated directory.
     def annotated_scan(*cols: str) -> DataFrame:
-        return _run_scoped_annotated(spark, paths["annotated"], run_id).select(
+        return annotated_run_rows(spark, paths["annotated"], run_id).select(
             "conv_id", "keep", *cols
         )
 
@@ -480,26 +382,19 @@ def run_curation(
             .select("conv_id")
         )
         # shingle off the annotate stage's persisted ``turn_fp``
-        # (xxhash64 of the RAW turn bytes — the same normalization-free
-        # identity the old path hashed from the source table, computed
-        # once during annotate's scan): the dedup stage becomes one
-        # column-pruned (conv_id, turn_idx, turn_fp) read of the
-        # annotated parquet instead of a SECOND full raw-text scan of
-        # the corpus — at 100 TB that deletes an entire text scan.
-        # Fallback for resumes over annotated tables written before
-        # turn_fp existed: re-read the source through TableIO as before.
-        src = _dedup_fp_source(spark, paths["annotated"], run_id)
-        fp_col = "turn_fp" if src is not None else None
-        if src is None:
-            from pii_redaction_data_pipeline_spark.sources.tables import TableIO
-
-            src = TableIO(spark, n_buckets=cfg.n_buckets).read(input_path)
+        # (xxhash64 of the RAW turn bytes, computed once during annotate's
+        # scan): the dedup stage is one column-pruned (conv_id, turn_idx,
+        # turn_fp) read of the annotated parquet instead of a SECOND full
+        # raw-text scan of the corpus
         surv = dedup_survivor_convs(
-            src, kept, ccfg.dedup_jaccard, est_margin=ccfg.dedup_est_margin,
+            annotated_run_rows(spark, paths["annotated"], run_id).select(
+                "conv_id", "turn_idx", "turn_fp"
+            ),
+            kept, ccfg.dedup_jaccard, est_margin=ccfg.dedup_est_margin,
             checkpoint_dir=(
                 f"{work}/dedup_ck" if ccfg.durable_dedup_checkpoints else None
             ),
-            fp_col=fp_col,
+            fp_col="turn_fp",
         )
         mark("conv_dedup", write_counted(surv, paths["survivor_convs"]))
         ran.append("conv_dedup")

@@ -26,7 +26,7 @@ from __future__ import annotations
 import posixpath
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark.config import PipelineConfig
@@ -38,22 +38,6 @@ from pii_redaction_data_pipeline_spark.sources.tables import (
     TableIO,
     with_bucket,
 )
-
-# expression budget for riding per-bucket lineage aggregates on the write
-# job's Observation (CollectMetrics evaluates them per row OUTSIDE
-# whole-stage codegen); above this, run_pipeline falls back to the
-# column-pruned re-read of the written table. Measured A/B at bench
-# scale (2M turns, 32 cores, scripts/profile_pack_lineage.py, warm
-# medians): the default 16-bucket config emits 256 expressions and the
-# observe path costs 18.4-20.4 s vs 15.3-16.2 s for the re-read — the
-# interpreted per-row aggregate eval loses to one text-free pruned scan
-# well before the codegen cliff the original 1024 budget guarded. Set
-# so only genuinely small runs (<=10 buckets at the default taxonomy,
-# where the per-row cost is a wash and skipping the second job's
-# scheduling latency wins) ride the observation; everything larger
-# re-reads.
-LINEAGE_OBS_MAX_EXPRS = 160
-
 
 def tune_shuffle_partitions(
     spark: SparkSession,
@@ -322,6 +306,38 @@ def annotate(
     return df
 
 
+def annotated_run_rows(spark: SparkSession, path: str, run_id: str) -> DataFrame:
+    """`run_id`'s rows of the annotated table at `path`.
+
+    Raises ValueError naming the path when the schema lacks `run_id` or
+    `turn_fp`. Spark infers the schema from one file's footer, so a
+    directory mixing older files in can still pass that check; such files'
+    rows read the column as NULL, and the scan itself fails on them: the
+    run filter raises on a NULL `run_id` (the row cannot be attributed to
+    a run, and dropping it would silently lose whole conversations), and
+    `turn_fp` raises on a NULL in THIS run's rows (xxhash64 skips NULLs, so
+    NULL fingerprints would collapse conversations onto one shingle and
+    mass-dedup them). Both guards are expressions inside the scan: a
+    healthy table costs no extra job, and a scan that does not select
+    `turn_fp` never evaluates its guard."""
+    ann = spark.read.parquet(path)
+    missing = [c for c in ("run_id", "turn_fp") if c not in ann.columns]
+    if missing:
+        raise ValueError(
+            f"{path} has no {' or '.join(missing)} column; re-annotate it"
+        )
+
+    def required(col: str) -> F.Column:
+        return F.coalesce(F.col(col), F.raise_error(F.lit(
+            f"{path} holds rows with NULL {col} (a file written before the "
+            "column existed); re-annotate it"
+        )))
+
+    return ann.filter(required("run_id") == run_id).withColumn(
+        "turn_fp", required("turn_fp")
+    )
+
+
 def lineage_metrics(
     annotated_out: DataFrame, run_id: str, buckets: list[int] | None = None
 ) -> DataFrame:
@@ -419,8 +435,16 @@ def run_pipeline(
 ) -> dict:
     """Full job with checkpoint/resume.
 
-    Returns a summary dict. `fail_after_buckets` injects a crash after N
-    buckets for the kill-and-resume test.
+    Annotates every bucket with no `complete` lineage row for `run_id` in
+    ONE write job (dynamic overwrite of just those buckets), then appends
+    their lineage rows, aggregated by `lineage_metrics` from a pruned
+    re-read of the written buckets (`annotated_run_rows`, so a mixed-layout
+    output directory fails loudly). The write job carries an Observation
+    of the run totals (`rows_in`, `rows_out`, `pii_types_hit`).
+
+    Returns a summary dict; `totals` holds the observed run totals.
+    `fail_after_buckets` injects a crash after N buckets (their lineage
+    rows written first) for the kill-and-resume test.
     """
     cfg = cfg or PipelineConfig()
     io = TableIO(spark, n_buckets=cfg.n_buckets)
@@ -465,110 +489,25 @@ def run_pipeline(
     # scope by run_id, not by directory
     ann = ann.withColumn("run_id", F.lit(run_id))
 
-    # run-level totals AND per-bucket lineage metrics ride ALONG the
-    # write job via the Observation API — no second pass over the data.
-    # The per-bucket aggregates are conditional sums over the fixed
-    # taxonomies (one expression per bucket x {rows, reason, pii type});
-    # the write job that commits the rows is the same job that counts
-    # them, so the observed values equal what was durably persisted
-    # (dynamic overwrite replaces every touched bucket with exactly this
-    # run's rows). Guarded by an expression budget: at production bucket
-    # counts (e.g. 4096 buckets at 100 TB) the expression list would
-    # leave whole-stage codegen, so large runs fall back to the original
-    # column-pruned re-read of the written table — one cheap scan that
-    # never decodes text.
-    from pyspark.sql import Observation
-
-    from pii_redaction_data_pipeline_spark.config import DROP_REASONS
-    from pii_redaction_data_pipeline_spark.functions.scrub import PII_TYPES
-    from pii_redaction_data_pipeline_spark.sources.lineage import LINEAGE_SCHEMA
-
-    obs_aggs = [
+    # run-level totals ride ALONG the write job via the Observation API —
+    # the job that commits the rows is the job that counts them
+    obs = Observation(f"pipeline-{run_id}")
+    ann = ann.observe(
+        obs,
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.col("keep").cast("long")).alias("rows_out"),
         F.sum(F.size(F.map_values(F.coalesce(
             F.col("scrub_counts"), F.create_map())))).alias("pii_types_hit"),
-    ]
-    obs_metrics = (
-        len(todo) * (2 + len(DROP_REASONS) + len(PII_TYPES))
-        <= LINEAGE_OBS_MAX_EXPRS
     )
-    helper_cols: list[str] = []
-    if obs_metrics:
-        # per-row primitives computed ONCE as helper columns (projected
-        # away again right after the observe node) — the naive
-        # formulation re-evaluated array_contains/element_at inside
-        # every bucket's conditional, i.e. n_buckets x per row
-        reasons = F.coalesce("drop_reasons", F.array().cast("array<string>"))
-        scrubs = F.coalesce(
-            "scrub_counts", F.create_map().cast("map<string,int>")
-        )
-        helpers: dict[str, F.Column] = {"_lm_keep": F.col("keep").cast("long")}
-        for r in DROP_REASONS:
-            helpers[f"_lm_r_{r}"] = F.array_contains(reasons, r).cast("long")
-        for t in PII_TYPES:
-            helpers[f"_lm_s_{t}"] = F.coalesce(
-                F.element_at(scrubs, F.lit(t)), F.lit(0)
-            ).cast("long")
-        ann = ann.withColumns(helpers)
-        helper_cols = list(helpers)
-        zero = F.lit(0).cast("long")
-        for b in todo:
-            cond = F.col(BUCKET_COL) == b
-            obs_aggs.append(F.sum(
-                F.when(cond, F.lit(1).cast("long")).otherwise(zero)
-            ).alias(f"_b{b}_in"))
-            obs_aggs.append(F.sum(
-                F.when(cond, F.col("_lm_keep")).otherwise(zero)
-            ).alias(f"_b{b}_out"))
-            for r in DROP_REASONS:
-                obs_aggs.append(F.sum(
-                    F.when(cond, F.col(f"_lm_r_{r}")).otherwise(zero)
-                ).alias(f"_b{b}_r_{r}"))
-            for t in PII_TYPES:
-                obs_aggs.append(F.sum(
-                    F.when(cond, F.col(f"_lm_s_{t}")).otherwise(zero)
-                ).alias(f"_b{b}_s_{t}"))
-
-    obs = Observation(f"pipeline-{run_id}")
-    ann = ann.observe(obs, *obs_aggs)
-    if helper_cols:
-        ann = ann.drop(*helper_cols)
     io.write_bucketed(ann, output_path)
-    vals = dict(obs.get)
-    run_totals = {k: vals[k] for k in ("rows_in", "rows_out", "pii_types_hit")}
+    run_totals = dict(obs.get)
 
-    if obs_metrics:
-        # assemble the LINEAGE_SCHEMA rows driver-side from the observed
-        # longs — same shape as lineage_metrics: maps in sorted key
-        # order, zero counts dropped, all-zero maps NULL
-        seq = int(time.time() * 1000)
-        rows = []
-        for b in todo:
-            rmap = {
-                r: int(vals[f"_b{b}_r_{r}"] or 0)
-                for r in sorted(DROP_REASONS)
-                if (vals[f"_b{b}_r_{r}"] or 0) > 0
-            } or None
-            smap = {
-                t: int(vals[f"_b{b}_s_{t}"] or 0)
-                for t in sorted(PII_TYPES)
-                if (vals[f"_b{b}_s_{t}"] or 0) > 0
-            } or None
-            rows.append((
-                run_id, str(b), int(vals[f"_b{b}_in"] or 0),
-                int(vals[f"_b{b}_out"] or 0), rmap, smap, "complete", seq,
-            ))
-        metrics = spark.createDataFrame(rows, LINEAGE_SCHEMA)
-    else:
-        out = spark.read.parquet(output_path)
-        if "run_id" not in out.columns:  # pre-run_id-column files (migration)
-            out = out.withColumn("run_id", F.lit(run_id))
-        out = out.filter(
-            F.col(BUCKET_COL).isin(todo) & (F.col("run_id") == run_id)
-        )
-        metrics = lineage_metrics(out, run_id, buckets=todo)
-    lineage.append(metrics)
+    # per-bucket lineage: one column-pruned re-read of THIS run's rows in
+    # the buckets just written (partition-pruned, never decodes text)
+    out = annotated_run_rows(spark, output_path, run_id).filter(
+        F.col(BUCKET_COL).isin(todo)
+    )
+    lineage.append(lineage_metrics(out, run_id, buckets=todo))
 
     if fail_after_buckets is not None:
         raise RuntimeError("injected failure after %d buckets" % fail_after_buckets)

@@ -37,11 +37,7 @@ import math
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
-
-    return hadoop_fs(spark, path)
+from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
 
 
 def _hidden(file_path, root_path) -> bool:
@@ -56,7 +52,7 @@ def _hidden(file_path, root_path) -> bool:
 
 def dir_stats(spark: SparkSession, path: str) -> dict:
     """Recursive (n_files, total_bytes) for a parquet dir."""
-    jvm, fs, hpath = _fs(spark, path)
+    jvm, fs, hpath = hadoop_fs(spark, path)
     n_files = 0
     total = 0
     it = fs.listFiles(hpath, True)
@@ -78,7 +74,7 @@ def _partition_sizes(
     them against the data columns CAST TO STRING; exotic values needing
     Hive path escaping (spaces, slashes) are out of scope for the
     parquet fallback — the online path is Iceberg rewrite_data_files."""
-    _, fs, hpath = _fs(spark, path)
+    _, fs, hpath = hadoop_fs(spark, path)
     sizes: dict[tuple, int] = {}
     it = fs.listFiles(hpath, True)
     while it.hasNext():
@@ -136,7 +132,7 @@ def compact_parquet(
     cleaned up).
     """
     staging = path.rstrip("/") + "__compact_staging"
-    jvm, fs, hpath = _fs(spark, path)
+    jvm, fs, hpath = hadoop_fs(spark, path)
     spath = jvm.org.apache.hadoop.fs.Path(staging)
     old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_old")
     # leftovers from a crashed compaction — handled BEFORE planning, so
@@ -165,11 +161,10 @@ def compact_parquet(
     # segments exactly; downstream readers re-infer their own types.
     inf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     inf_old = spark.conf.get(inf_key)
-    spark.conf.set(inf_key, "false")
-    df = spark.read.parquet(path)
-    rows_before = df.count()
-
     try:
+        spark.conf.set(inf_key, "false")
+        df = spark.read.parquet(path)
+        rows_before = df.count()
         if partition_cols:
             # Size each partition DIRECTORY independently from the file
             # listing (no data scan): partition value p gets

@@ -59,20 +59,15 @@ class TableIO:
         """Is `path` an Iceberg target? Catalog identifiers (no '/')
         always are; a filesystem path is decided by the table-format
         marker — the `metadata` directory — probed through the Hadoop
-        FS (a driver-side existence check, no scan). An unprobeable
-        path falls back to the plain-parquet read, whose own error
-        surfaces the real problem."""
+        FS (a driver-side existence check, no scan). A probe error
+        propagates: guessing "not Iceberg" would read a real table's
+        location as raw parquet, superseded snapshots included."""
         if "/" not in path:
             return True
-        try:
-            from pii_redaction_data_pipeline_spark.sources.fsutil import (
-                hadoop_fs,
-            )
+        from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
 
-            _, fs, p = hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
-            return bool(fs.exists(p))
-        except Exception:
-            return False
+        _, fs, p = hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
+        return bool(fs.exists(p))
 
     def write_bucketed(self, df: DataFrame, path: str, overwrite_partitions: bool = True):
         """Write partitioned by part_bucket. overwrite_partitions=True

@@ -169,3 +169,18 @@ def test_compaction_preserves_zero_padded_partition_segments(spark, tmp_path):
         spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled")
         == "true"
     )
+
+
+def test_failed_read_restores_inference_conf(spark, tmp_path):
+    """The inference conf is restored however the compaction fails: on a
+    missing path (the listing raises) and on a directory whose file is
+    not parquet (the read raises after the conf was set)."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_text("not parquet")
+    for path in (tmp_path / "missing", bad):
+        with pytest.raises(Exception):
+            compact_parquet(spark, str(path))
+        assert spark.conf.get(key) == "true"
+    assert not os.path.exists(str(bad) + "__compact_staging")

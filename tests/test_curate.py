@@ -168,73 +168,6 @@ def test_dedup_fp_col_matches_text_path(spark, tinydup_path):
     assert via_fp == via_text and len(via_text) > 0
 
 
-def test_fp_source_guard_is_row_level(spark, tmp_path):
-    """_dedup_fp_source must refuse the fast path when ANY row of the
-    run reads turn_fp as NULL (mixed pre/post-upgrade files), not just
-    when the merged schema lacks the column — NULL fps would collapse
-    every affected conversation onto one shingle value and mass-dedup
-    them (round-5 review finding)."""
-    from pii_redaction_data_pipeline_spark.plans.curate import _dedup_fp_source
-
-    schema = "run_id string, conv_id string, turn_idx int, turn_fp long"
-    clean = str(tmp_path / "clean")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11), ("r", "c1", 1, 12)], schema
-    ).write.parquet(clean)
-    assert _dedup_fp_source(spark, clean, "r") is not None
-    # same run, one NULL fp row (as read from a pre-upgrade file)
-    mixed = str(tmp_path / "mixed")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11), ("r", "c2", 0, None)], schema
-    ).write.parquet(mixed)
-    assert _dedup_fp_source(spark, mixed, "r") is None
-    # NULL fps confined to ANOTHER run must not disable this run's path
-    other = str(tmp_path / "other")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11), ("old", "c9", 0, None)], schema
-    ).write.parquet(other)
-    assert _dedup_fp_source(spark, other, "r") is not None
-    # pre-upgrade schema (no column at all)
-    old = str(tmp_path / "old")
-    spark.createDataFrame(
-        [("r", "c1", 0)], "run_id string, conv_id string, turn_idx int"
-    ).write.parquet(old)
-    assert _dedup_fp_source(spark, old, "r") is None
-
-
-def test_fp_footer_stats_decide_clean_case_from_metadata(spark, tmp_path):
-    """_fp_nulls_per_footer_stats answers the healthy case from parquet
-    footers alone: False on an all-non-null directory (no data pass
-    needed — the scale-relevant path), True when any row group holds a
-    NULL turn_fp, None when a file predates the column (its rows read
-    as NULL, so footers cannot vouch for it)."""
-    from pii_redaction_data_pipeline_spark.plans.curate import (
-        _fp_nulls_per_footer_stats,
-    )
-
-    schema = "run_id string, conv_id string, turn_idx int, turn_fp long"
-    clean = str(tmp_path / "fclean")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11), ("r", "c2", 0, 12)], schema
-    ).repartition(2).write.parquet(clean)
-    assert _fp_nulls_per_footer_stats(clean) is False
-    withnull = str(tmp_path / "fnull")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11), ("old", "c9", 0, None)], schema
-    ).write.parquet(withnull)
-    assert _fp_nulls_per_footer_stats(withnull) is True
-    # a directory mixing a pre-upgrade file (no turn_fp column) in
-    old = str(tmp_path / "fmixed")
-    spark.createDataFrame(
-        [("r", "c1", 0, 11)], schema
-    ).write.parquet(old)
-    spark.createDataFrame(
-        [("r", "c0", 0)], "run_id string, conv_id string, turn_idx int"
-    ).write.mode("append").parquet(old)
-    assert _fp_nulls_per_footer_stats(old) is None
-    assert _fp_nulls_per_footer_stats(str(tmp_path / "nowhere")) is None
-
-
 def test_est_margin_none_disables_prefilter(spark, tinydup_path):
     """est_margin must be a caller choice end-to-end (round-3 ADVICE):
     None routes every band candidate to the exact verify; on the planted
@@ -281,36 +214,63 @@ def test_resume_with_only_sample_pending_skips_annotated_read(
     assert s.get("resumed") is True and s["stages_ran"] == []
 
 
-def test_run_scoped_annotated_migration_semantics(spark, tmp_path):
-    """Pre-run_id directories are stamped (run_pipeline's migration
-    fallback, mirrored); MIXED directories — NULL run_id rows next to
-    stamped ones — are rejected loudly instead of silently dropping
-    whole conversations from the verdict (round-5 review finding)."""
-    import pytest
+_ANN = "run_id string, conv_id string, turn_idx int, keep boolean, turn_fp long"
+_OLD = "conv_id string, turn_idx int, keep boolean"
+_FAILS = (Exception, "")  # a scan error naming the directory
+_NO_COLUMNS = (ValueError, " has no run_id or turn_fp column")
 
-    from pii_redaction_data_pipeline_spark.plans.curate import (
-        _run_scoped_annotated,
-    )
 
-    old = str(tmp_path / "old")
-    spark.createDataFrame(
-        [("c1", True)], "conv_id string, keep boolean"
-    ).write.parquet(old)
-    assert _run_scoped_annotated(spark, old, "r").count() == 1
+@pytest.mark.parametrize(
+    "files, verdict_raises, dedup_raises",
+    [
+        # a clean directory shared with another run
+        ([(_ANN, [("r", "c1", 0, True, 11), ("r", "c1", 1, False, 12),
+                  ("o", "c9", 0, True, 13)])], None, None),
+        # NULL fingerprints confined to ANOTHER run do not trip the guard
+        ([(_ANN, [("r", "c1", 0, True, 11), ("r", "c1", 1, False, 12)]),
+          (_ANN, [("o", "c9", 0, True, None)])], None, None),
+        # rows with NULL run_id cannot be attributed: every scan fails
+        ([(_ANN, [("r", "c1", 0, True, 11), ("r", "c1", 1, False, 12)]),
+          (_ANN, [(None, "c2", 0, True, 21)])],
+         (Exception, ".*NULL run_id"), (Exception, ".*NULL run_id")),
+        # this run's NULL fingerprint fails the dedup scan, which reads it
+        ([(_ANN, [("r", "c1", 0, True, 11), ("r", "c1", 1, False, 12)]),
+          (_ANN, [("r", "c2", 0, True, None)])], None, (Exception, ".*NULL turn_fp")),
+        # a schema without the columns is refused before any scan
+        ([(_OLD, [("c1", 0, True)])], _NO_COLUMNS, _NO_COLUMNS),
+        # a file written before both columns existed, next to a current one:
+        # fails by the schema check or in the scan, per the footer inferred
+        ([(_ANN, [("r", "c1", 0, True, 11), ("r", "c1", 1, False, 12)]),
+          (_OLD, [("c2", 0, True)])], _FAILS, _FAILS),
+    ],
+    ids=["clean", "other_run_null_fp", "null_run_id", "null_fp_dedup",
+         "no_columns", "mixed_layout"],
+)
+def test_annotated_run_rows(spark, tmp_path, files, verdict_raises, dedup_raises):
+    """run_curation's one read of the annotated table: this run's rows;
+    a schema without run_id / turn_fp raises ValueError, and NULL run_id
+    or (on the dedup scan) NULL turn_fp fail the scan itself, each error
+    naming the directory."""
+    import re
 
-    mixed = str(tmp_path / "mixed")
-    spark.createDataFrame(
-        [("r", "c1", True)], "run_id string, conv_id string, keep boolean"
-    ).write.parquet(mixed)
-    spark.createDataFrame(
-        [(None, "c2", True)], "run_id string, conv_id string, keep boolean"
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes files"):
-        _run_scoped_annotated(spark, mixed, "r").count()
+    from pii_redaction_data_pipeline_spark.plans.pipeline import annotated_run_rows
 
-    clean = str(tmp_path / "cleanr")
-    spark.createDataFrame(
-        [("r", "c1", True), ("other", "c9", True)],
-        "run_id string, conv_id string, keep boolean",
-    ).write.parquet(clean)
-    assert _run_scoped_annotated(spark, clean, "r").count() == 1
+    path = str(tmp_path / "annotated")
+    for schema, rows in files:
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(path)
+
+    def scan(cols, raises):
+        if raises is None:
+            return sorted(map(tuple, annotated_run_rows(spark, path, "r").select(*cols).collect()))
+        exc, text = raises
+        with pytest.raises(exc, match=re.escape(path) + text):
+            annotated_run_rows(spark, path, "r").select(*cols).collect()
+
+    verdict = scan(["conv_id", "keep"], verdict_raises)
+    dedup = scan(["conv_id", "turn_idx", "turn_fp"], dedup_raises)
+    if verdict_raises is None:
+        assert verdict == [("c1", False), ("c1", True)] + (
+            [("c2", True)] if dedup_raises else []
+        )
+    if dedup_raises is None:
+        assert dedup == [("c1", 0, 11), ("c1", 1, 12)]

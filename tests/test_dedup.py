@@ -257,22 +257,6 @@ def test_turn_granularity_separates_boilerplate_heavy_convs(spark):
     assert pairs[0].jaccard == pytest.approx(25 / 28, abs=1e-6)
 
 
-def test_conversation_documents_stable_concat(spark):
-    """conversation_documents (the text-granularity conv rollup for
-    whole-conversation text ops, e.g. conv-level perplexity): turns
-    concatenate in (turn_idx) order regardless of input row order."""
-    from pii_redaction_data_pipeline_spark.operators.dedup import (
-        conversation_documents,
-    )
-
-    df = spark.createDataFrame(
-        [("c1", 2, "third"), ("c1", 1, "second"), ("c1", 0, "first"), ("c2", 0, "solo")],
-        ["conv_id", "turn_idx", "text"],
-    ).repartition(4)
-    out = {r.conv_id: r.conv_text for r in conversation_documents(df).collect()}
-    assert out == {"c1": "first\nsecond\nthird", "c2": "solo"}
-
-
 class TestSimhashBanding:
     """Round-3 VERDICT item: the fixed 4x16-bit chunk banding was
     quadratic-within-bucket at scale. The replacement is multi-table

@@ -59,24 +59,38 @@ def test_tableio_iceberg_skips_parquet_suffix_paths(monkeypatch):
     assert log == [("parquet", "/data/in.parquet")]
 
 
-def test_tableio_falls_back_to_parquet_on_iceberg_error(monkeypatch):
-    """Layout-probe contract (round 5): a filesystem path WITHOUT an
-    Iceberg `metadata` marker reads as plain parquet (here the probe
-    itself fails — no JVM on the fake — which conservatively means
-    'not Iceberg'); a path WITH the marker is a real Iceberg table and
-    read errors PROPAGATE instead of silently re-scanning the location
-    as raw parquet (deleted/superseded rows from all snapshots)."""
+def test_tableio_iceberg_probe_and_read_errors_propagate(monkeypatch):
+    """Layout-probe contract: a filesystem path is Iceberg iff its
+    `metadata` marker exists. A probe that fails raises instead of
+    guessing 'not Iceberg' (that guess would read a real table's location
+    as raw parquet, superseded snapshots included); a path without the
+    marker reads as plain parquet; a path WITH it is a real Iceberg table
+    whose read errors propagate."""
     import pytest
 
-    from pii_redaction_data_pipeline_spark.sources import tables
+    from pii_redaction_data_pipeline_spark.sources import fsutil, tables
 
     monkeypatch.setattr(tables, "iceberg_available", lambda s: True)
     log = []
     io = tables.TableIO(_FakeSpark(log, iceberg_fails=True))
+
+    def unprobeable(spark, path):
+        raise OSError("filesystem unreachable")
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", unprobeable)
+    with pytest.raises(OSError, match="unreachable"):
+        io.read("some/dir")
+    assert log == []
+
+    def probe(has_marker):
+        fs = types.SimpleNamespace(exists=lambda p: has_marker)
+        monkeypatch.setattr(fsutil, "hadoop_fs", lambda s, p: (None, fs, p))
+
+    probe(False)
     assert io.read("some/dir") == "df:parquet:some/dir"
     assert log == [("parquet", "some/dir")]
     # metadata marker present -> the iceberg failure must surface
-    monkeypatch.setattr(tables.TableIO, "_iceberg_layout", lambda self, p: True)
+    probe(True)
     with pytest.raises(RuntimeError, match="no iceberg catalog"):
         io.read("some/dir")
 

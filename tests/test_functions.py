@@ -781,6 +781,30 @@ def test_entities_prefilter_derives_from_scrub_triggers():
         del scrub._TRIGGERS[fake_idx]
 
 
+def test_entities_prefilter_off_for_unknown_trigger_kind(monkeypatch):
+    """A trigger kind the prescan does not know (here a future
+    'colon-digit') must disable the prefilter like None does: every row
+    is scanned, including rows no known trigger would select."""
+    import pandas as pd
+
+    from pii_redaction_data_pipeline_spark.functions import entities, scrub
+
+    monkeypatch.setattr(
+        scrub, "_TRIGGERS", {**scrub._TRIGGERS, len(scrub.PATTERNS): "colon-digit"}
+    )
+    scanned = []
+    real = entities.extract_entities_value
+
+    def spy(text):
+        scanned.append(text)
+        return real(text)
+
+    monkeypatch.setattr(entities, "extract_entities_value", spy)
+    texts = ["plain words only", "no triggers here either", "mail a@b.co"]
+    entities.entities_frame(pd.Series(texts))
+    assert scanned == texts
+
+
 def test_png_malformed_inputs_raise_valueerror_only():
     """Truncated IHDR and corrupt IDAT must raise ValueError (the
     module's uniform malformed-input contract), not leak struct.error /

@@ -68,48 +68,3 @@ def test_salting_invariance(spark, tiny):
     a = annotate(src, cfg, spark)
     b = annotate(salted_repartition(src, salt_buckets=8), cfg, spark)
     assert _fingerprint(a) == _fingerprint(b)
-
-
-def test_lineage_paths_identical(spark, tiny, tmp_path, monkeypatch):
-    """The two per-bucket lineage-metrics paths — aggregates riding the
-    write job's Observation vs the column-pruned re-read of the written
-    table — must persist identical lineage rows. Pins both branches of
-    the LINEAGE_OBS_MAX_EXPRS gate with the same 8-bucket config (the
-    observe side fits the budget; the re-read side is forced by zeroing
-    it)."""
-    import dataclasses
-
-    from pii_redaction_data_pipeline_spark.plans import pipeline as P
-
-    cfg = dataclasses.replace(PipelineConfig(), n_buckets=8)
-
-    def lineage_rows(lin_path):
-        rows = (
-            spark.read.parquet(lin_path)
-            .select(
-                "partition_id", "rows_in", "rows_out",
-                F.coalesce(
-                    F.to_json(F.array_sort(F.map_entries("drop_reason_counts"))),
-                    F.lit("\x00"),
-                ).alias("r"),
-                F.coalesce(
-                    F.to_json(F.array_sort(F.map_entries("scrub_counts"))),
-                    F.lit("\x00"),
-                ).alias("s"),
-                "status",
-            )
-            .collect()
-        )
-        return sorted(map(tuple, rows))
-
-    out1, lin1 = str(tmp_path / "obs"), str(tmp_path / "obs-lin")
-    run_pipeline(spark, tiny[0], out1, lin1, run_id="r", cfg=cfg)
-
-    monkeypatch.setattr(P, "LINEAGE_OBS_MAX_EXPRS", 0)
-    out2, lin2 = str(tmp_path / "rr"), str(tmp_path / "rr-lin")
-    run_pipeline(spark, tiny[0], out2, lin2, run_id="r", cfg=cfg)
-
-    assert lineage_rows(lin1) == lineage_rows(lin2)
-    assert _fingerprint(spark.read.parquet(out1)) == _fingerprint(
-        spark.read.parquet(out2)
-    )
