@@ -2249,7 +2249,14 @@ _REPEATED_SPAN_SQL = r"""
     """
 
 
-_NGRAM_TRUTH_SQL = r"""
+# Exact word-3-gram jaccard pairs (doc_id < 200). The empty gram (an
+# empty or whitespace-only document) pairs only where the operator under
+# test pairs it: ngram_jaccard_pairs excludes it from pair generation,
+# so ngram_jaccard and simhash (whose truth side is that operator) use
+# _NGRAM_TRUTH_SQL; minhash_lsh_pairs pairs two empty documents
+# (identical sentinel signatures, jaccard 1.0), so minhash_lsh and
+# dup_components (built on its pairs) use _MINHASH_TRUTH_SQL.
+_NGRAM_PAIRS_SQL = r"""
     WITH norm AS (
         SELECT doc_id, regexp_split_to_array(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
         FROM documents WHERE doc_id < 200),
@@ -2263,6 +2270,7 @@ _NGRAM_TRUTH_SQL = r"""
     pairs AS (
         SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS inter
         FROM grams x JOIN grams y ON x.g = y.g AND x.doc_id < y.doc_id
+            __EMPTY_GRAM__
         GROUP BY 1, 2)
     SELECT id_a, id_b,
            round(inter / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
@@ -2272,13 +2280,15 @@ _NGRAM_TRUTH_SQL = r"""
     WHERE inter / (sa.n_sh + sb.n_sh - inter) >= 0.12
     ORDER BY id_a, id_b
 """
+_NGRAM_TRUTH_SQL = _NGRAM_PAIRS_SQL.replace("__EMPTY_GRAM__", "AND x.g <> ''")
+_MINHASH_TRUTH_SQL = _NGRAM_PAIRS_SQL.replace("__EMPTY_GRAM__", "")
 
-# Duplicate clusters over the same truth edges: a recursive CTE
+# Duplicate clusters over the minhash_lsh truth edges: a recursive CTE
 # propagates min-reachable-id (UNION dedups, so it converges), giving
 # the independent oracle for the Spark large-star/small-star algorithm.
 _COMPONENTS_SQL = f"""
     WITH RECURSIVE
-    truth AS ({_NGRAM_TRUTH_SQL}),
+    truth AS ({_MINHASH_TRUTH_SQL}),
     edges AS (SELECT id_a AS s, id_b AS d FROM truth
               UNION ALL SELECT id_b, id_a FROM truth),
     walk(id, reach) AS (
@@ -2732,7 +2742,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents ORDER BY doc_id
         """,
         "ngram_jaccard": _NGRAM_TRUTH_SQL,
-        "minhash_lsh": _NGRAM_TRUTH_SQL,
+        "minhash_lsh": _MINHASH_TRUTH_SQL,
         "dup_components": _COMPONENTS_SQL,
         "cosine_topk": _COSINE_TOPK_SQL,
         "semdedup": _SEMDEDUP_SQL,

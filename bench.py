@@ -20,10 +20,6 @@ HEADLINE — the session-fixed 2-4 s per-job tail is ~1% of its wall
 instead of 15-25%). Set BENCH_4X=0 to skip the larger scale. Transcript
 input is generated once (deterministic, seeded) and cached under
 .bench_cache/.
-
-Set BENCH_SCALING=1 to also run the N-vs-4N scaling measurement
-(interleaved local[4/8/16/32] rounds with a same-moment hardware
-control, see run_scaling).
 """
 
 from __future__ import annotations
@@ -127,15 +123,9 @@ def time_curation(spark, transcripts_path: str, out_dir: str) -> dict:
 
     n_turns = pq.read_metadata(transcripts_path).num_rows
     t0 = time.monotonic()  # stage walls use monotonic too (curate.tick)
-    # durable_dedup_checkpoints=False: the durable variant exists so a
-    # REAL cluster survives executor loss mid-dedup (shared-storage
-    # parquet spill); in this single-JVM microbenchmark the executor IS
-    # the driver, so localCheckpoint gives identical fault semantics and
-    # skips two write+read round-trips (the CurationConfig docstring
-    # sanctions exactly this). Measured ~3 s at bench scale.
     summary = run_curation(
         spark, transcripts_path, out_dir, run_id="bench",
-        ccfg=CurationConfig(pack_buckets=128, durable_dedup_checkpoints=False),
+        ccfg=CurationConfig(pack_buckets=128),
     )
     wall = time.monotonic() - t0
     stage_walls = summary.get("stage_walls_sec", {})
@@ -171,7 +161,7 @@ def timed_median(
     MEDIAN run with all raw walls and the controls attached. One
     implementation so the 2M/bench4x/curation blocks cannot drift onto
     different rules."""
-    ctrl_before = hardware_control((cpus,), n=40000)[cpus]
+    ctrl_before = hardware_control(cpus)
     runs = [run_fn() for _ in range(n_runs)]
     t_budget = time.time() + budget_sec
     while (
@@ -180,7 +170,7 @@ def timed_median(
         and time.time() < t_budget
     ):
         runs.append(run_fn())
-    ctrl_after = hardware_control((cpus,), n=40000)[cpus]
+    ctrl_after = hardware_control(cpus)
     out = dict(sorted(runs, key=lambda r: r["wall_sec"])[len(runs) // 2])
     out["runs_wall_sec"] = [r["wall_sec"] for r in runs]
     out["control_work_per_sec"] = [ctrl_before, ctrl_after]
@@ -193,7 +183,7 @@ def timed_median(
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     sf = _sf_of(sf_dir)
     scale = SF_TO_SCALE.get(sf, "bench")
 
@@ -234,7 +224,7 @@ def main():
     query_runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     query_controls: list[float] = []
     for _round in range(3):
-        query_controls.append(hardware_control((int(cpus),), n=40000)[int(cpus)])
+        query_controls.append(hardware_control(int(cpus)))
         for name in HEADLINE:
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -330,9 +320,6 @@ def main():
         "cpus": int(cpus),
     }
 
-    if os.environ.get("BENCH_SCALING") == "1":
-        result["scaling"] = run_scaling(scale)
-
     # persist for scripts/update_baseline_stats.py (claims regenerate
     # from this artifact, never hand-written); also append to a run
     # history so the stats block can state the spread across windows
@@ -375,12 +362,6 @@ def main():
         },
         "full_detail": "BENCH/last_run.json",
     }
-    if "scaling" in result:
-        compact["scaling_eff"] = {
-            k: v
-            for k, v in result["scaling"].items()
-            if isinstance(v, float) and "efficiency" in k
-        }
     print(json.dumps(compact))
 
 
@@ -394,8 +375,9 @@ def _burn(n: int) -> int:
     return s
 
 
-def hardware_control(levels: tuple[int, ...], n: int = 150000) -> dict:
-    """Raw multiprocessing throughput (work-units/sec) per process count.
+def hardware_control(procs: int, n: int = 40000) -> float:
+    """Raw multiprocessing throughput (work-units/sec) over `procs`
+    processes.
 
     Run alongside the pipeline measurements: this shared VM's deliverable
     parallelism drifts over minutes, so control numbers are only
@@ -403,104 +385,10 @@ def hardware_control(levels: tuple[int, ...], n: int = 150000) -> dict:
     """
     import multiprocessing as mp
 
-    out = {}
-    for procs in levels:
-        with mp.Pool(procs) as pool:
-            t0 = time.time()
-            pool.map(_burn, [n] * procs)
-            out[procs] = round(procs * n / (time.time() - t0), 0)
-    return out
-
-
-SCALING_SNIPPET = """
-import sys, json
-sys.path.insert(0, {repo!r})
-from pii_redaction_data_pipeline_spark import get_spark
-import bench
-
-levels = {levels!r}
-tp = {tp!r}
-outdir = {outdir!r}
-walls = {{n: [] for n in levels}}
-ctrl = {{n: [] for n in levels}}
-rounds = 3
-for r in range(rounds):
-    # INTERLEAVED visits: each round measures every level back-to-back,
-    # plus a same-moment hardware control, so slow periods of this
-    # shared VM hit all levels equally and are visible in the control.
-    c = bench.hardware_control(levels)
-    for n in levels:
-        ctrl[n].append(c[n])
-    for n in levels:
-        spark = get_spark(master='local[%d]' % n, app_name='bench-scale')
-        # warm-up: run the IDENTICAL plan shape on the small cached input
-        # (no limit operator!) so the codegen cache is hot for the timed
-        # run -- a limit() warm-up compiles a DIFFERENT plan and the
-        # timed run would pay full-plan codegen as fake 'serial' cost
-        bench.time_pipeline(spark, {warm_tp!r}, outdir + '_warm')
-        walls[n].append(bench.time_pipeline(spark, tp, outdir)['wall_sec'])
-        spark.stop()
-res = {{}}
-for n in levels:
-    ws = sorted(walls[n])
-    cs = sorted(ctrl[n])
-    res['local[%d]' % n] = {{
-        'wall_sec': ws[len(ws) // 2], 'runs_wall_sec': walls[n],
-        'turns_per_sec': round({n_turns} / ws[len(ws) // 2], 1),
-        'turns': {n_turns},
-        'control_work_per_sec': cs[len(cs) // 2], 'control_runs': ctrl[n],
-    }}
-print('RESULT ' + json.dumps(res))
-"""
-
-
-def run_scaling(scale: str, levels: tuple[int, ...] = (4, 8, 16, 32)) -> dict:
-    """Same pipeline job at local[N] for every N, interleaved in time.
-
-    One subprocess runs all levels in alternating rounds (level A, level
-    B, ... repeated 3x) with a fresh SparkSession per visit and a warm-up
-    slice before each timed run; the reported wall is the per-level
-    median. Interleaving matters on this shared VM: throughput drifts
-    +/-30% over minutes, so sequential per-level runs can corrupt the
-    ratio. Efficiency is reported for every (N, 4N) pair present.
-    """
-    import subprocess
-
-    tp = ensure_transcripts(scale)
-    import pyarrow.parquet as pq
-
-    n_turns = pq.read_metadata(tp).num_rows
-    code = SCALING_SNIPPET.format(
-        repo=REPO,
-        levels=tuple(levels),
-        tp=tp,
-        warm_tp=ensure_transcripts("small"),
-        outdir=os.path.join(REPO, ".bench_cache", scale, "out_scale"),
-        n_turns=n_turns,
-    )
-    proc = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        env=dict(os.environ),
-    )
-    line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
-    out = json.loads(line[0][7:]) if line else {"error": proc.stderr[-1000:]}
-    for n in levels:
-        lo, hi = f"local[{n}]", f"local[{4 * n}]"
-        if "turns_per_sec" in out.get(lo, {}) and "turns_per_sec" in out.get(hi, {}):
-            eff = out[hi]["turns_per_sec"] / (4 * out[lo]["turns_per_sec"])
-            out[f"efficiency_{n}_to_{4 * n}"] = round(eff, 3)
-            c_lo = out[lo].get("control_work_per_sec")
-            c_hi = out[hi].get("control_work_per_sec")
-            if c_lo and c_hi:
-                c_eff = c_hi / (4 * c_lo)
-                out[f"control_efficiency_{n}_to_{4 * n}"] = round(c_eff, 3)
-                # pipeline scaling as a share of what the box delivered
-                out[f"normalized_efficiency_{n}_to_{4 * n}"] = round(
-                    eff / c_eff, 3
-                )
-    return out
+    with mp.Pool(procs) as pool:
+        t0 = time.time()
+        pool.map(_burn, [n] * procs)
+        return round(procs * n / (time.time() - t0), 0)
 
 
 if __name__ == "__main__":

@@ -53,7 +53,8 @@ class PipelineConfig:
     # the corpus register differs from generic support-transcript
     # English (code-heavy, other domains) — and recalibrate max_ppl:
     # in-domain text scores LOWER against its own model, so the default
-    # gate becomes more permissive, never less.
+    # gate becomes more permissive, never less. run_pipeline fits the
+    # model; annotate and streaming take it as a pre-fitted ppl_model.
     train_ppl_on_corpus: bool = False
 
     # conversation-window rules

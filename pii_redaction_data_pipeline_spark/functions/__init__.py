@@ -1,7 +1,6 @@
 from pii_redaction_data_pipeline_spark.functions.scrub import (
     scrub_frame,
     scrub_text_value,
-    make_scrub_udf,
 )
 from pii_redaction_data_pipeline_spark.functions.langid import (
     langid_frame,
@@ -15,13 +14,11 @@ from pii_redaction_data_pipeline_spark.functions.perplexity import (
 )
 from pii_redaction_data_pipeline_spark.functions.quality import (
     repetition_frac_series,
-    make_repetition_udf,
 )
 
 __all__ = [
     "scrub_frame",
     "scrub_text_value",
-    "make_scrub_udf",
     "langid_frame",
     "make_langid_udf",
     "CharTrigramLM",
@@ -29,5 +26,4 @@ __all__ = [
     "make_ppl_udf",
     "train_char_trigram_lm",
     "repetition_frac_series",
-    "make_repetition_udf",
 ]

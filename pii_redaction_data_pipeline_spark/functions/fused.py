@@ -160,33 +160,27 @@ def annotate_frame(texts: pd.Series, logp=None, normalize: bool = True) -> pd.Da
     )
 
 
-def make_annotate_udf(spark=None, normalize: bool = True, ppl_model=None):
+def make_annotate_udf(spark, normalize: bool = True, ppl_model=None):
     """pandas UDF: text -> struct<text_norm, lang, lang_conf,
     scrubbed_text, scrub_counts, ppl, rep_frac, n_chars, n_words,
-    symbol_ratio>. The KN log-prob table is broadcast once. With
-    normalize=True (default) every stage sees the D1-normalized text and
-    text_norm carries the normalization delta back to the JVM. Pass
-    ppl_model (a CharTrigramLM, e.g. from train_char_trigram_lm) to
-    score fluency with a corpus-trained table instead of the embedded
-    default — same ~400 KB broadcast either way."""
-    # The UDF closure must capture ONLY (bc, local_logp, normalize) —
-    # never ppl_model itself: referencing the model object inside the UDF
+    symbol_ratio>. The KN log-prob table is broadcast once through
+    `spark`. With normalize=True (default) every stage sees the
+    D1-normalized text and text_norm carries the normalization delta
+    back to the JVM. Pass ppl_model (a CharTrigramLM, e.g. from
+    train_char_trigram_lm) to score fluency with a corpus-trained table
+    instead of the embedded default — same ~400 KB broadcast either
+    way."""
+    # The UDF closure must capture ONLY (bc, normalize) — never
+    # ppl_model itself: referencing the model object inside the UDF
     # would cloudpickle its ~470 KB logp ndarray into every task closure
     # IN ADDITION to the broadcast, defeating the broadcast.
-    bc = None
-    local_logp = None
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(
-            (ppl_model if ppl_model is not None else default_model()).logp
-        )
-    elif ppl_model is not None:
-        # no session to broadcast through: close over the table directly
-        # (tests / local pandas use)
-        local_logp = ppl_model.logp
+    bc = spark.sparkContext.broadcast(
+        (ppl_model if ppl_model is not None else default_model()).logp
+    )
 
     @F.pandas_udf(ANNOTATE_SCHEMA)
     def annotate_udf(texts: pd.Series) -> pd.DataFrame:
-        logp = bc.value if bc is not None else local_logp
+        logp = bc.value
         # sub-chunk oversized Arrow batches: the batch-wide numpy
         # temporaries are the UDF's memory footprint, and beyond ~10k
         # rows the fresh-page cost of each big temp dominates (measured

@@ -297,36 +297,26 @@ def _artifact_committed(spark, artifact_path: str) -> bool:
         return False
 
 
-def make_ppl_udf(spark=None, model: CharTrigramLM | None = None):
+def make_ppl_udf(spark, model: CharTrigramLM | None = None):
     """pandas UDF: text -> ppl double.
 
-    The log-prob table is broadcast once (SparkContext.broadcast) instead
-    of being pickled into every task closure; each executor rebuilds the
+    The log-prob table is broadcast once through `spark` instead of
+    being pickled into every task closure; each executor rebuilds the
     lightweight LM wrapper around the shared ndarray. Pass `model` to
     score with a corpus-trained LM (train_char_trigram_lm) instead of
     the embedded-corpus default.
     """
-    # capture ONLY (bc, local_logp) in the UDF closure — closing over the
-    # model object would cloudpickle its logp ndarray into every task in
-    # addition to the broadcast (same contract as fused.make_annotate_udf)
-    bc = None
-    local_logp = None
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(
-            (model if model is not None else default_model()).logp
-        )
-    elif model is not None:
-        local_logp = model.logp
+    # capture ONLY bc in the UDF closure — closing over the model object
+    # would cloudpickle its logp ndarray into every task in addition to
+    # the broadcast (same contract as fused.make_annotate_udf)
+    bc = spark.sparkContext.broadcast(
+        (model if model is not None else default_model()).logp
+    )
 
     @F.pandas_udf(T.DoubleType())
     def ppl_udf(texts: pd.Series) -> pd.Series:
         m = CharTrigramLM.__new__(CharTrigramLM)
-        if bc is not None:
-            m.logp = bc.value
-        elif local_logp is not None:
-            m.logp = local_logp
-        else:
-            m = default_model()
+        m.logp = bc.value
         return m.ppl_series(texts)
 
     return ppl_udf

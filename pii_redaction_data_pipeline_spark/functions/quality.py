@@ -175,14 +175,6 @@ def repetition_frac_series(texts: pd.Series) -> pd.Series:
     return top_ngram_char_frac_series(texts, 3)
 
 
-def make_repetition_udf():
-    @F.pandas_udf(T.DoubleType())
-    def repetition_udf(texts: pd.Series) -> pd.Series:
-        return repetition_frac_series(texts)
-
-    return repetition_udf
-
-
 # --- Gopher repetition panel (the paper's remaining repetition signals) -----
 
 

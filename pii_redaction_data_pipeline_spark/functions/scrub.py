@@ -27,8 +27,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # --- pattern table (ordered: precedence = application order) -------------
 
@@ -244,21 +242,3 @@ def scrub_frame(texts: pd.Series) -> pd.DataFrame:
         for i in range(len(s))
     ]
     return pd.DataFrame({"scrubbed_text": s, "scrub_counts": counts}, index=texts.index)
-
-
-_SCRUB_SCHEMA = T.StructType(
-    [
-        T.StructField("scrubbed_text", T.StringType()),
-        T.StructField("scrub_counts", T.MapType(T.StringType(), T.IntegerType())),
-    ]
-)
-
-
-def make_scrub_udf():
-    """pandas UDF: text -> struct<scrubbed_text, scrub_counts>."""
-
-    @F.pandas_udf(_SCRUB_SCHEMA)
-    def scrub_udf(texts: pd.Series) -> pd.DataFrame:
-        return scrub_frame(texts)
-
-    return scrub_udf

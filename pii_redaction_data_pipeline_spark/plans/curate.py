@@ -87,13 +87,6 @@ class CurationConfig:
     # a quantified ~1e-4 per-pair recall loss just above threshold for
     # not joining shingle arrays to doomed candidates (dedup.py:162).
     dedup_est_margin: float | None = 0.2
-    # durable (shared-storage parquet) materialization of the dedup
-    # stage's reused shingle/pair frames, instead of localCheckpoint
-    # whose blocks die with their executor. Default ON: the frames are
-    # rows-of-the-conversation-count small, and on a real cluster an
-    # executor loss mid-dedup must not kill the run. Single-JVM
-    # microbenchmarks can set False to shave two tiny write+read jobs.
-    durable_dedup_checkpoints: bool = True
     sample_rate: float = 0.85
     sample_seed: int = 5
     seq_tokens: int = 256
@@ -133,7 +126,8 @@ def dedup_survivor_convs(
     disk — lose an executor mid-stage and the lineage-truncated frame
     is unrecoverable, failing the job; a parquet spill to the (shared)
     work dir survives executor loss at the cost of one write+read per
-    frame. Single-JVM callers (tests, bench) keep the default None.
+    frame. run_curation always passes one; the `curate_full` query in
+    __spark_entry__.py keeps the default None.
     """
     # no forced broadcast: these conv-id lists are ~rows-of-the-corpus at
     # 10^9-conversation scale (far past the 8 GB broadcast limit); AQE
@@ -242,6 +236,9 @@ def run_curation(
     `turn_fp` required in the schema and NULLs in them failing the scan
     that meets them, so a mixed-layout directory raises an error naming
     its path instead of silently losing or mass-deduping conversations.
+    The dedup stage spills its reused shingle/pair frames as parquet
+    under `{work_dir}/dedup_ck`, so an executor loss mid-dedup does not
+    kill the run.
 
     `fail_after_stage` injects a crash after the named stage completes
     (its lineage row IS written first) — the cross-stage analog of
@@ -391,9 +388,7 @@ def run_curation(
                 "conv_id", "turn_idx", "turn_fp"
             ),
             kept, ccfg.dedup_jaccard, est_margin=ccfg.dedup_est_margin,
-            checkpoint_dir=(
-                f"{work}/dedup_ck" if ccfg.durable_dedup_checkpoints else None
-            ),
+            checkpoint_dir=f"{work}/dedup_ck",
             fp_col="turn_fp",
         )
         mark("conv_dedup", write_counted(surv, paths["survivor_convs"]))

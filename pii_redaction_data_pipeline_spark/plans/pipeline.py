@@ -31,7 +31,11 @@ from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark.config import PipelineConfig
 from pii_redaction_data_pipeline_spark.functions.fused import make_annotate_udf
-from pii_redaction_data_pipeline_spark.operators.windows import with_conversation_flags
+from pii_redaction_data_pipeline_spark.operators.skew import salted_repartition
+from pii_redaction_data_pipeline_spark.operators.windows import (
+    _norm_text,
+    with_conversation_flags,
+)
 from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
 from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
@@ -64,50 +68,26 @@ def tune_shuffle_partitions(
 def annotate(
     df: DataFrame,
     cfg: PipelineConfig,
-    spark: SparkSession | None = None,
-    conv_partitioned: bool = False,
-    ppl_train_df: DataFrame | None = None,
+    spark: SparkSession,
     ppl_model=None,
 ) -> DataFrame:
     """transcripts -> annotated (adds lang, lang_conf, ppl, heuristic cols,
     keep, drop_reasons, scrubbed_text, scrub_counts).
 
-    conv_partitioned=True declares that the input is the engine's OWN
-    bucketed output (a Spark bucketed table written by
-    TableIO.write_conv_bucketed_table, or an Iceberg bucket(conv_id)
-    layout): the window stage runs FIRST, directly on the scan — its
-    required distribution is satisfied by the bucket metadata, so the
-    plan contains ZERO exchange — and the fused UDF runs after it
-    (ArrowEvalPython resets partitioning metadata in Spark's planner, so
-    UDF-before-window would re-introduce the exchange; after the window
-    nothing downstream needs a distribution). The dup-detection hash is
-    computed JVM-side on the input text, which by the input contract is
-    already D1-normalized — so it equals the standard path's
-    normalized-text hash. For resumed/incremental re-processing this
-    removes the plan's only corpus-wide shuffle (pinned by
-    tests/test_plans.py::test_bucketed_table_windows_need_no_exchange)."""
-    if cfg.train_ppl_on_corpus and spark is not None and ppl_model is None:
-        # Fit the fluency model on THIS corpus (one extra column-pruned
-        # counting pass, bounded sparse aggregation — see config flag
-        # docstring). Trained on the raw text column: normalization only
-        # strips zero-width/control chars, which the closed alphabet
-        # already folds to OOV, so the register the model learns is the
-        # register the scorer sees.
-        from pii_redaction_data_pipeline_spark.functions.perplexity import (
-            train_char_trigram_lm,
-        )
-
-        # Fit on ppl_train_df when given — the training frame must be
-        # the FULL input (never a resume remainder) so every bucket of a
-        # run_id scores against the same model no matter where a prior
-        # attempt died; fitting on the filtered remainder would make ppl,
-        # the high_ppl gate, and keep/drop depend on resume state,
-        # breaking the deterministic checkpoint/resume contract.
-        # run_pipeline goes one step further and passes a pre-fitted
-        # `ppl_model` (load_or_train_char_trigram_lm): the fitted counts
-        # persist as a per-run artifact so resumes skip this scan.
-        ppl_model = train_char_trigram_lm(
-            df if ppl_train_df is None else ppl_train_df, "text"
+    One plan: the fused UDF on the scan's splits (salted repartition
+    first only when the scan has too few), then the `conv_id` shuffle
+    for the conversation windows, then the verdict. `ppl_model` is the
+    fluency model to score with; the embedded default when None. With
+    cfg.train_ppl_on_corpus the caller fits it first, on the FULL input
+    (run_pipeline: load_or_train_char_trigram_lm), so ValueError when it
+    is missing: a model fitted on whatever frame reaches annotate (a
+    resume remainder, a micro-batch) would make ppl and keep/drop depend
+    on how the input was split."""
+    if cfg.train_ppl_on_corpus and ppl_model is None:
+        raise ValueError(
+            "cfg.train_ppl_on_corpus needs a pre-fitted ppl_model "
+            "(train_char_trigram_lm / load_or_train_char_trigram_lm over "
+            "the full input)"
         )
     fused_udf = make_annotate_udf(
         spark, normalize=cfg.normalize_unicode, ppl_model=ppl_model
@@ -144,39 +124,20 @@ def annotate(
     # advisory coalescing can't shrink the exchange below the core
     # count, salted so a skewed 30k-turn conversation spreads across
     # workers (safe: these stages are strictly per-row).
-    n_parts = None
-    if spark is not None and not conv_partitioned:
-        # volume-tuned shuffle partitions (run_pipeline sets the conf via
-        # tune_shuffle_partitions), floored at 2x cores so AQE coalescing
-        # and tiny inputs can't under-parallelize the exchange
-        n_parts = max(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            spark.sparkContext.defaultParallelism * 2,
+    # Volume-tuned shuffle partitions (run_pipeline sets the conf via
+    # tune_shuffle_partitions), floored at 2x cores so AQE coalescing
+    # and tiny inputs can't under-parallelize the exchange.
+    n_parts = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism * 2,
+    )
+    if df.rdd.getNumPartitions() < n_parts:
+        # (conv_id, turn_idx) is the per-row discriminator: hashing
+        # it salts deterministically without touching the text bytes
+        df = salted_repartition(
+            df, salt_buckets=cfg.salt_buckets, num_partitions=n_parts,
+            salt_cols=["conv_id", "turn_idx"],
         )
-        n_src = df.rdd.getNumPartitions()
-        if n_src < n_parts:
-            from pii_redaction_data_pipeline_spark.operators.skew import (
-                salted_repartition,
-            )
-
-            # (conv_id, turn_idx) is the per-row discriminator: hashing
-            # it salts deterministically without touching the text bytes
-            df = salted_repartition(
-                df, salt_buckets=cfg.salt_buckets, num_partitions=n_parts,
-                salt_cols=["conv_id", "turn_idx"],
-            )
-
-    if conv_partitioned:
-        # fast path: conversation windows BEFORE the UDF, on the scan's
-        # bucket distribution (zero exchange; see docstring)
-        from pii_redaction_data_pipeline_spark.operators.windows import (
-            _norm_text,
-            with_conversation_flags as _flags,
-        )
-
-        df = df.withColumn("_th", F.xxhash64(_norm_text(text)))
-        df = _flags(df, tool_loop_min_run=cfg.tool_loop_min_run, hash_col="_th")
-        df = df.drop("_th")
 
     # --- narrow, Arrow-batched stages (no shuffle) ---
     # ONE fused pandas UDF (langid + scrub + ppl-on-stripped-scrubbed +
@@ -226,35 +187,22 @@ def annotate(
     # reference's retain_orig_docs=false: originals deleted after
     # redaction, redact.py:240-243) — that halves phase-2 shuffle and
     # output bytes at corpus scale.
-    if not conv_partitioned:
-        from pii_redaction_data_pipeline_spark.operators.windows import _norm_text
-
-        df = df.withColumn("_th", F.xxhash64(_norm_text(text)))
-        if not cfg.retain_original_text:
-            df = df.drop("text")
-        else:
-            # delta-encode the scrubbed text across the shuffle: for the
-            # (typical) PII-free row it equals the raw text, so shipping
-            # it twice wastes ~45% of the exchange's text bytes — NULL it
-            # when identical and reconstruct from `text` after the windows
-            df = df.withColumn(
-                "_scrubbed", F.when(F.col("_scrubbed") != text, F.col("_scrubbed"))
-            )
-        df = df.repartition(n_parts, "conv_id") if n_parts else df.repartition("conv_id")
-        df = with_conversation_flags(
-            df, tool_loop_min_run=cfg.tool_loop_min_run, hash_col="_th"
-        )
-        df = df.drop("_th")
+    df = df.withColumn("_th", F.xxhash64(_norm_text(text)))
+    if not cfg.retain_original_text:
+        df = df.drop("text")
     else:
-        # windows already computed pre-UDF; no shuffle anywhere, so the
-        # scrubbed delta-encoding would only save output bytes — still
-        # worth it when the raw text is retained
-        if not cfg.retain_original_text:
-            df = df.drop("text")
-        else:
-            df = df.withColumn(
-                "_scrubbed", F.when(F.col("_scrubbed") != text, F.col("_scrubbed"))
-            )
+        # delta-encode the scrubbed text across the shuffle: for the
+        # (typical) PII-free row it equals the raw text, so shipping
+        # it twice wastes ~45% of the exchange's text bytes — NULL it
+        # when identical and reconstruct from `text` after the windows
+        df = df.withColumn(
+            "_scrubbed", F.when(F.col("_scrubbed") != text, F.col("_scrubbed"))
+        )
+    df = df.repartition(n_parts, "conv_id")
+    df = with_conversation_flags(
+        df, tool_loop_min_run=cfg.tool_loop_min_run, hash_col="_th"
+    )
+    df = df.drop("_th")
 
     # --- verdict assembly (pure JVM expressions) ---
     lang_fail = (~F.col("lang").isin(*cfg.allowed_langs)) & (
@@ -339,7 +287,7 @@ def annotated_run_rows(spark: SparkSession, path: str, run_id: str) -> DataFrame
 
 
 def lineage_metrics(
-    annotated_out: DataFrame, run_id: str, buckets: list[int] | None = None
+    annotated_out: DataFrame, run_id: str, buckets: list[int]
 ) -> DataFrame:
     """Aggregate per-bucket lineage rows from the written annotated table.
 
@@ -400,15 +348,13 @@ def lineage_metrics(
         tax_map("_r_", DROP_REASONS).alias("drop_reason_counts"),
         tax_map("_s_", PII_TYPES).alias("scrub_counts"),
     )
-    if buckets is not None:
-        spark = annotated_out.sparkSession
-        all_buckets = spark.createDataFrame(
-            [(int(b),) for b in buckets], f"{BUCKET_COL} int"
-        )
-        totals = (
-            all_buckets.join(totals, BUCKET_COL, "left")
-            .na.fill({"rows_in": 0, "rows_out": 0})
-        )
+    all_buckets = annotated_out.sparkSession.createDataFrame(
+        [(int(b),) for b in buckets], f"{BUCKET_COL} int"
+    )
+    totals = (
+        all_buckets.join(totals, BUCKET_COL, "left")
+        .na.fill({"rows_in": 0, "rows_out": 0})
+    )
     out = (
         totals.select(
             F.lit(run_id).alias("run_id"),
@@ -472,7 +418,10 @@ def run_pipeline(
     # reloads ~2 MB of metadata instead of re-scanning the corpus to
     # refit the identical model (determinism at artifact altitude, not
     # recompute altitude). The leading '_' keeps the artifact dir
-    # invisible to parquet reads of the annotated table.
+    # invisible to parquet reads of the annotated table. It is fit on the
+    # raw text: normalization only strips zero-width/control chars, which
+    # the closed alphabet already folds to OOV, so the register the model
+    # learns is the register the scorer sees.
     ppl_model = None
     if cfg.train_ppl_on_corpus:
         from pii_redaction_data_pipeline_spark.functions.perplexity import (

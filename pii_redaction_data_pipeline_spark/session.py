@@ -2,8 +2,8 @@
 
 Local mode is a single JVM with N executor threads; on a real cluster the
 same config ships via spark-submit. Parallelism (master) and shuffle
-partitions are injectable so the bench can run the identical job at
-local[8] vs local[32] to evidence scaling efficiency (BASELINE.md).
+partitions are injectable; both default to the host's CPU count, and
+the driver heap to about half its RAM.
 """
 
 from __future__ import annotations
@@ -11,6 +11,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _half_physical_ram() -> str:
+    """About half the host's physical RAM, in whole GiB (at least 1g):
+    local mode runs every executor thread inside the driver JVM, and the
+    Python UDF workers need the other half."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(total // 2**31, 1)}g"
 
 
 def get_spark(
@@ -43,7 +51,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _half_physical_ram()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

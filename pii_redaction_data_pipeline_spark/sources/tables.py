@@ -88,24 +88,3 @@ class TableIO:
 
     def append(self, df: DataFrame, path: str):
         df.write.mode("append").parquet(path)
-
-    def write_conv_bucketed_table(
-        self, df: DataFrame, table: str, sort_within: bool = True
-    ):
-        """Persist as a Spark BUCKETED table on conv_id (bucketBy +
-        sortBy(conv_id, turn_idx) + saveAsTable): the scan of such a
-        table reports HashPartitioning(conv_id), so downstream
-        conversation windows run with ZERO exchange — the scan's bucket
-        metadata satisfies the window's required distribution (pinned by
-        tests/test_plans.py::test_bucketed_table_windows_need_no_exchange).
-        This is the resume/incremental fast path: re-processing the
-        engine's own output never pays the conv_id shuffle again. The
-        Iceberg equivalent is a bucket(conv_id) partition transform +
-        sorted write order."""
-        w = df.write.bucketBy(self.n_buckets, "conv_id")
-        if sort_within:
-            w = w.sortBy("conv_id", "turn_idx")
-        w.format("parquet").mode("overwrite").saveAsTable(table)
-
-    def read_table(self, table: str) -> DataFrame:
-        return self.spark.table(table)

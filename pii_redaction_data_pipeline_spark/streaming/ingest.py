@@ -58,10 +58,10 @@ def run_streaming_pipeline(
 
     cfg.train_ppl_on_corpus requires a pre-fitted `ppl_model`
     (functions/perplexity.train_char_trigram_lm over the landed corpus,
-    or load_or_train_char_trigram_lm's durable artifact): letting
-    annotate() fit per micro-batch would score the same turn differently
-    depending on which files happened to land together — the exact
-    batching-dependence annotate's own contract forbids for resumes.
+    or load_or_train_char_trigram_lm's durable artifact): a model fit
+    per micro-batch would score the same turn differently depending on
+    which files happened to land together. annotate() raises on the same
+    condition; checking here fails before the stream starts.
     """
     cfg = cfg or PipelineConfig()
     if cfg.train_ppl_on_corpus and ppl_model is None:

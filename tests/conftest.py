@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pii_redaction_data_pipeline_spark import get_spark
 
-    s = get_spark(master="local[8]", app_name="tests")
+    s = get_spark(app_name="tests")
     yield s
     s.stop()
 

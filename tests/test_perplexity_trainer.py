@@ -103,9 +103,9 @@ def test_trained_model_through_broadcast_udf(spark):
 
 
 def test_annotate_with_corpus_trained_model(spark, tiny):
-    """cfg.train_ppl_on_corpus swaps the fluency table under the fused
+    """A corpus-trained ppl_model swaps the fluency table under the fused
     UDF: same rows/schema, different ppl values, deterministic across
-    runs (the --train-ppl-on-corpus job surface)."""
+    fits (the --train-ppl-on-corpus job surface)."""
     import dataclasses
 
     from pyspark.sql import functions as F
@@ -116,7 +116,7 @@ def test_annotate_with_corpus_trained_model(spark, tiny):
     tr = spark.read.parquet(tiny[0])
     base = annotate(tr, PipelineConfig(), spark)
     cfg = dataclasses.replace(PipelineConfig(), train_ppl_on_corpus=True)
-    trained1 = annotate(tr, cfg, spark)
+    trained1 = annotate(tr, cfg, spark, ppl_model=train_char_trigram_lm(tr, "text"))
     assert trained1.schema == base.schema
     assert trained1.count() == base.count()
     j = (
@@ -128,8 +128,8 @@ def test_annotate_with_corpus_trained_model(spark, tiny):
     )
     diff = j.filter(F.abs(F.col("p0") - F.col("p1")) > 1e-9).count()
     assert diff > 0, "trained table should change ppl on real text"
-    # determinism: a second trained run reproduces ppl exactly
-    trained2 = annotate(tr, cfg, spark)
+    # determinism: a second fit and run reproduces ppl exactly
+    trained2 = annotate(tr, cfg, spark, ppl_model=train_char_trigram_lm(tr, "text"))
     j2 = (
         trained1.select("conv_id", "turn_idx", F.col("ppl").alias("a"))
         .join(
@@ -138,6 +138,20 @@ def test_annotate_with_corpus_trained_model(spark, tiny):
         )
     )
     assert j2.filter(~F.col("a").eqNullSafe(F.col("b"))).count() == 0
+
+
+def test_annotate_requires_prefitted_model_for_corpus_ppl(spark, tiny):
+    """cfg.train_ppl_on_corpus without a ppl_model raises instead of
+    fitting on whatever frame annotate was handed (a resume remainder
+    or a micro-batch would each get their own model)."""
+    import dataclasses
+
+    from pii_redaction_data_pipeline_spark.config import PipelineConfig
+    from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
+
+    cfg = dataclasses.replace(PipelineConfig(), train_ppl_on_corpus=True)
+    with pytest.raises(ValueError, match="pre-fitted ppl_model"):
+        annotate(spark.read.parquet(tiny[0]), cfg, spark)
 
 
 def test_job_cli_flag_sets_config():

@@ -172,40 +172,6 @@ def test_tune_shuffle_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
-def test_bucketed_table_windows_need_no_exchange(spark, tiny, tmp_path):
-    """Resume/incremental fast path: a Spark table bucketed on conv_id
-    (TableIO.write_conv_bucketed_table) satisfies the window stage's
-    required distribution from scan metadata, so annotate with
-    conv_partitioned=True runs with ZERO exchange — the plan's only
-    corpus-wide shuffle disappears. Results must equal the standard
-    (repartitioning) path exactly."""
-    from pii_redaction_data_pipeline_spark.config import PipelineConfig
-    from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
-    from pii_redaction_data_pipeline_spark.sources.tables import TableIO
-
-    src = spark.read.parquet(tiny[0])
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bktest LOCATION '{tmp_path}/wh'")
-    io = TableIO(spark, n_buckets=8)
-    io.write_conv_bucketed_table(src, "bktest.transcripts_b")
-    try:
-        t = io.read_table("bktest.transcripts_b")
-        ann = annotate(t, PipelineConfig(), spark, conv_partitioned=True)
-        plan = ann._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan
-        assert "Exchange" not in plan, plan[:1500]
-
-        cols = ["conv_id", "turn_idx", "keep", "drop_reasons", "scrubbed_text"]
-        fast = ann.select(*cols).orderBy("conv_id", "turn_idx").collect()
-        ref = (
-            annotate(src, PipelineConfig(), spark)
-            .select(*cols).orderBy("conv_id", "turn_idx").collect()
-        )
-        assert fast == ref
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bktest.transcripts_b")
-        spark.sql("DROP DATABASE IF EXISTS bktest")
-
-
 def test_ann_and_topk_broadcast_probe_side(spark):
     """The similarity queries must broadcast their (tiny) probe side —
     a shuffled probe set at corpus scale would exchange the whole
