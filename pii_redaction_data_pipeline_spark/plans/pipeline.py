@@ -14,8 +14,13 @@ Scale notes (the plan you'd want at 100 TB):
     byte-balanced input splits — a skewed conversation costs nothing in
     the UDF stages (rows are independent) and the only stage that needs
     conv_id locality is cheap window algebra.
-  * Exactly ONE shuffle in the whole plan (repartition by conv_id for
-    the windows); verdicts and writes reuse that partitioning.
+  * One conv_id shuffle feeds the windows; verdicts and writes reuse its
+    partitioning. A scan with enough splits pays only that one; a
+    few-split scan pays a salted repartition before the UDF as well.
+  * The conv_id exchange count is aligned with the output buckets
+    (sources/tables.aligned_partitions): the bucket is Spark's shuffle
+    hash of conv_id, so every write task holds whole buckets and the
+    bucketed write opens max(tasks, buckets) files, not tasks × buckets.
   * Filters on the final `keep` column and column pruning push into the
     parquet/Iceberg scan of downstream consumers — the annotated table
     is written with plain Spark SQL types only.
@@ -40,6 +45,7 @@ from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
 from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
     TableIO,
+    aligned_partitions,
     with_bucket,
 )
 
@@ -198,7 +204,10 @@ def annotate(
         df = df.withColumn(
             "_scrubbed", F.when(F.col("_scrubbed") != text, F.col("_scrubbed"))
         )
-    df = df.repartition(n_parts, "conv_id")
+    # the count is aligned with the output buckets (with_bucket hashes
+    # conv_id with this exchange's own hash), so each write task holds
+    # whole buckets and the bucketed write opens one file per bucket
+    df = df.repartition(aligned_partitions(n_parts, cfg.n_buckets), "conv_id")
     df = with_conversation_flags(
         df, tool_loop_min_run=cfg.tool_loop_min_run, hash_col="_th"
     )

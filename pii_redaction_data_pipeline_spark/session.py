@@ -60,8 +60,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # task-side (parallel) file commit: the default v1 renames every
         # output file serially on the driver during commitJob — with
-        # partitionBy(bucket) writes producing tasks x buckets files,
-        # that serial tail grows WITH parallelism. v2's tradeoff
+        # partitionBy(bucket) writes producing max(tasks, buckets)
+        # files, that serial tail grows WITH parallelism. v2's tradeoff
         # (partial files visible on job failure) is safe here: the
         # lineage checkpoint only marks buckets complete after the job
         # succeeds, so a failed run's stragglers are overwritten on

@@ -1,6 +1,6 @@
 """One shared Hadoop FileSystem accessor.
 
-Three call sites (sources/compact.py, sources/lineage.py,
+Three call sites (sources/tables.py, sources/lineage.py,
 functions/perplexity.py) each need driver-side filesystem metadata —
 listings, existence probes — on any storage the session can reach
 (file://, hdfs://, s3a://). The JVM incantation uses private

@@ -43,9 +43,9 @@ class LineageStore:
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
+    def _exists(self) -> bool:
         # probe existence via the Hadoop FS (works for s3a://, hdfs://,
-        # file:// alike) BEFORE building the reader: with an explicit
+        # file:// alike) BEFORE building a reader: with an explicit
         # schema the parquet read resolves lazily, so a missing first-run
         # path used to fail during ANALYSIS of the first action — the
         # result was still an empty frame, but every miss logged a
@@ -55,7 +55,10 @@ class LineageStore:
         from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
 
         _, fs, jpath = hadoop_fs(self.spark, self.path)
-        if not fs.exists(jpath):
+        return bool(fs.exists(jpath))
+
+    def read(self) -> DataFrame:
+        if not self._exists():
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         try:
             return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
@@ -63,6 +66,10 @@ class LineageStore:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
     def completed_buckets(self, run_id: str) -> list[int]:
+        # a store that does not exist yet (every fresh run) answers
+        # without a Spark job
+        if not self._exists():
+            return []
         # partition_id also carries stage-boundary rows ("stage:<name>",
         # plans/curate.py) — bucket resume only reads the numeric ones
         df = self.read().filter(
@@ -73,7 +80,10 @@ class LineageStore:
         return [int(r.partition_id) for r in df.select("partition_id").distinct().collect()]
 
     def append(self, df: DataFrame):
-        df.write.mode("append").parquet(self.path)
+        # one file per append: a frame here is at most one row per bucket
+        # (or one stage row), so the write's partitioning would only
+        # spray tiny files that every later read opens one task each for
+        df.coalesce(1).write.mode("append").parquet(self.path)
 
     def status(
         self,

@@ -30,9 +30,29 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
+    """Add `part_bucket` = pmod(hash(key), n_buckets). `F.hash` is
+    Spark's shuffle hash (Murmur3, seed 42): the function
+    `repartition(n, key)` applies to pick a partition, which is what
+    lets `aligned_partitions` line the exchange up with the buckets."""
     return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(n_buckets)).cast("int")
     )
+
+
+def aligned_partitions(n: int, n_buckets: int) -> int:
+    """The smallest exchange count >= `n` that divides `n_buckets` or is
+    a multiple of it (at least 1).
+
+    With `count` from here, `repartition(count, key)` and `with_bucket`
+    hash the same key the same way, so partition `p` holds only buckets
+    `b ≡ p (mod min(count, n_buckets))`: every bucket lives whole in one
+    partition (count <= n_buckets) or every partition holds one bucket
+    (count >= n_buckets). A write partitioned by bucket then opens
+    max(count, n_buckets) files instead of up to count × n_buckets."""
+    n = max(n, 1)
+    if n >= n_buckets:
+        return -(-n // n_buckets) * n_buckets
+    return min(d for d in range(n, n_buckets + 1) if n_buckets % d == 0)
 
 
 class TableIO:
