@@ -1,75 +1,25 @@
-"""Minimal pure-stdlib image codecs (zlib + struct + numpy) so the
-multimodal operators exercise a REAL decode/resize path in containers
-without Pillow/ffmpeg: a PNG decode/resample/encode round-trip plus a
-JPEG SOF-marker dimension parse (jpeg_dims) for metadata passes.
-
-Supports the subset a training-data pipeline actually meets in its own
-artifacts: 8-bit RGB / RGBA / greyscale, non-interlaced, any of the
-five standard scanline filters on decode (encode emits filter 0). This
-is NOT a general-purpose image library — Pillow remains the preferred
-production decoder (operators/multimodal.py tries it first for non-PNG
-formats); this codec guarantees the real branch is testable offline.
+"""Dependency-free image header parsers (struct only) so the
+multimodal metadata pass reads TRUE dimensions in containers without
+Pillow: png_dims reads the fixed-offset IHDR chunk, jpeg_dims walks the
+JPEG marker stream to the first SOF segment. Neither inflates or
+decodes pixels — a metadata pass reads two ints per image.
 
 PNG structure per the W3C spec (public): 8-byte signature, then chunks
-[len u32][type 4s][data][crc32 u32]; pixels = zlib(concat of
-per-scanline [filter byte][row bytes]).
+[len u32][type 4s][data][crc32 u32], IHDR first.
 """
 
 from __future__ import annotations
 
 import struct
-import zlib
-from binascii import crc32
-
-import numpy as np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
-
-
-def _chunk(ctype: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(pixels: np.ndarray) -> bytes:
-    """(h, w) / (h, w, 1) greyscale, (h, w, 2) grey+alpha, (h, w, 3) RGB,
-    or (h, w, 4) RGBA uint8 -> PNG. Accepts every shape decode_png can
-    return so decode -> transform -> encode round-trips for all four
-    supported color types."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    if px.ndim == 3 and px.shape[2] in (1, 2, 3, 4):
-        color_type = {1: 0, 2: 4, 3: 2, 4: 6}[px.shape[2]]
-    else:
-        raise ValueError(f"unsupported pixel shape {px.shape}")
-    h, w = px.shape[:2]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    # filter byte 0 per scanline
-    raw = np.concatenate(
-        [np.zeros((h, 1), dtype=np.uint8), px.reshape(h, -1)], axis=1
-    ).tobytes()
-    return (
-        PNG_MAGIC
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw, 6))
-        + _chunk(b"IEND", b"")
-    )
 
 
 def png_dims(buf: bytes) -> tuple[int, int]:
     """(width, height) from the IHDR chunk alone — a 24-byte header
-    parse, no zlib inflate, no scanline defiltering. Metadata passes
-    over large-PNG corpora must use this, not decode_png: full pixel
-    reconstruction costs O(h*w) pure Python per image just to read two
-    ints that sit at fixed offsets (IHDR is required to be the first
-    chunk, PNG spec 5.6)."""
+    parse, no zlib inflate, no scanline defiltering: the two ints sit at
+    fixed offsets (IHDR is required to be the first chunk, PNG spec
+    5.6)."""
     if buf[:8] != PNG_MAGIC:
         raise ValueError("not a PNG (bad signature)")
     if len(buf) < 24 or buf[12:16] != b"IHDR":
@@ -122,92 +72,3 @@ def jpeg_dims(buf: bytes) -> tuple[int, int]:
             break
         pos += 2 + seglen
     raise ValueError("no SOF marker found")
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
-def decode_png(buf: bytes) -> tuple[int, int, np.ndarray]:
-    """PNG bytes -> (width, height, pixels[h, w, channels] uint8)."""
-    if buf[:8] != PNG_MAGIC:
-        raise ValueError("not a PNG (bad signature)")
-    pos, width = 8, None
-    idat = []
-    while pos + 8 <= len(buf):
-        (length,) = struct.unpack(">I", buf[pos : pos + 4])
-        ctype = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if ctype == b"IHDR":
-            try:
-                width, height, depth, color_type, comp, filt, interlace = (
-                    struct.unpack(">IIBBBBB", data)
-                )
-            except struct.error as e:
-                # uniform malformed-input contract: ValueError, never a
-                # leaked struct.error on a truncated IHDR
-                raise ValueError(f"malformed PNG IHDR: {e}") from e
-            if depth != 8 or color_type not in _CHANNELS:
-                raise ValueError(f"unsupported PNG (depth={depth}, color={color_type})")
-            if interlace:
-                raise ValueError("interlaced PNG unsupported")
-            ch = _CHANNELS[color_type]
-        elif ctype == b"IDAT":
-            if width is None:
-                # keep the malformed-input contract uniform (ValueError,
-                # never NameError): IHDR must be the first chunk (PNG 5.6)
-                raise ValueError("malformed PNG: IDAT before IHDR")
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-    if width is None or not idat:
-        raise ValueError("truncated PNG")
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:
-        raise ValueError(f"malformed PNG IDAT: {e}") from e
-    stride = width * ch
-    try:
-        rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
-    except ValueError as e:  # wrong decompressed size for the declared dims
-        raise ValueError(f"malformed PNG: {e}") from e
-    filters, data = rows[:, 0], rows[:, 1:]
-    out = np.zeros((height, stride), dtype=np.uint8)
-    for y in range(height):
-        f, cur = int(filters[y]), data[y].astype(np.uint8)
-        prev = out[y - 1] if y else np.zeros(stride, dtype=np.uint8)
-        if f == 0:
-            out[y] = cur
-        elif f == 2:  # up
-            out[y] = cur + prev
-        else:  # sub / average / paeth need the left neighbor: scan pixels
-            row = np.zeros(stride, dtype=np.uint8)
-            left = np.zeros(ch, dtype=np.uint8)
-            ul = np.zeros(ch, dtype=np.uint8)
-            for x in range(0, stride, ch):
-                up = prev[x : x + ch]
-                c = cur[x : x + ch]
-                if f == 1:
-                    px = c + left
-                elif f == 3:
-                    px = c + ((left.astype(np.int16) + up.astype(np.int16)) // 2).astype(np.uint8)
-                elif f == 4:
-                    px = c + _paeth(left, up, ul)
-                else:
-                    raise ValueError(f"bad PNG filter {f}")
-                row[x : x + ch] = px
-                left, ul = px, up.copy()
-            out[y] = row
-    return width, height, out.reshape(height, width, ch)
-
-
-def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resample — deterministic, dependency-free."""
-    h, w = px.shape[:2]
-    ys = np.minimum((np.arange(out_h) * h) // max(out_h, 1), h - 1)
-    xs = np.minimum((np.arange(out_w) * w) // max(out_w, 1), w - 1)
-    return px[ys][:, xs]

@@ -1,16 +1,12 @@
 """Text analysis for corpus curation: token counting, fingerprinting,
-composite quality scoring. JVM-side where possible (regexp/length
-expressions compile into whole-stage codegen); the rolling-hash
-winnowing fingerprint is the only pandas UDF.
+composite quality scoring. All JVM-side column expressions
+(regexp/length expressions compile into whole-stage codegen).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, single non-space symbol
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -41,45 +37,3 @@ def quality_score(
     rep_pen = F.least(rep_frac * 2.0, F.lit(1.0))
     raw = F.lit(1.0) - (len_pen + word_pen + sym_pen + rep_pen) / 4.0
     return F.greatest(raw, F.lit(0.0))
-
-
-# Winnow hash parameters: polynomial base and a Mersenne-prime modulus.
-# Winnowing is hash-agnostic (any deterministic gram hash works); mod-p
-# int arithmetic (p < 2^31) is chosen over uint64 wraparound so the
-# EXACT same hash is computable in DuckDB BIGINT SQL — which is what
-# makes the `winnow_fingerprint` driver query value-checkable instead of
-# rows-only. Products stay < 2^55, safely inside int64/BIGINT.
-WINNOW_BASE = 263
-WINNOW_MOD = (1 << 31) - 1
-
-
-def make_winnow_udf(k: int = 5, window: int = 4):
-    """Winnowing document fingerprint: rolling mod-p polynomial hash
-    over CODEPOINT k-grams of the whitespace-normalized lowercased text,
-    min per sliding window, distinct sorted -> array<long>.
-    (Schleimer et al., SIGMOD'03 — public algorithm.)"""
-    weights = np.power(
-        np.int64(WINNOW_BASE), np.arange(k - 1, -1, -1, dtype=np.int64)
-    ) % np.int64(WINNOW_MOD)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def winnow_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts.fillna(""):
-            s = " ".join(t.lower().split())
-            if len(s) < k:
-                out.append([])
-                continue
-            cp = np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-            n = len(cp) - k + 1
-            idx = np.arange(n)[:, None] + np.arange(k)[None, :]
-            h = (cp[idx] * weights[None, :]).sum(axis=1) % WINNOW_MOD
-            if len(h) <= window:
-                mins = np.array([h.min()])
-            else:
-                win_idx = np.arange(len(h) - window + 1)[:, None] + np.arange(window)[None, :]
-                mins = np.unique(h[win_idx].min(axis=1))
-            out.append(mins.tolist())
-        return pd.Series(out, index=texts.index)
-
-    return winnow_udf

@@ -1,20 +1,15 @@
 """Multimodal column plumbing: images/audio/video as opaque binary
 columns with typed metadata.
 
-Codec strategy, in order:
-  1. REAL PNG path — a pure-stdlib codec (functions/png_codec.py):
-     genuine decode of dimensions/pixels and a real nearest-neighbor
-     resample + re-encode, exercised by tests against generated PNG
-     bytes (no Pillow/ffmpeg exists in this container and installs are
-     unavailable — round-2 VERDICT item 4 is closed by this path).
-  2. Pillow, when present — the production decoder for everything
-     beyond the stdlib codec's 8-bit PNG subset.
+decode_image_meta reads dimensions, in order:
+  1. REAL PNG / JPEG header parses (functions/png_codec.py): the IHDR
+     chunk or the first SOF marker, no pixel decode, no dependency;
+     tests feed them generated PNG and JPEG bytes.
+  2. Pillow, when present, for every other format.
   3. Deterministic stub — fake dimensions derived from the content
      hash, so the Spark-side plumbing (schema, partition-preserving
-     mapInPandas, Arrow batch shape) stays real and SQL-replayable for
-     non-image bytes (the driver's multimodal_* oracles).
-Video demux (sample_frames) remains stub-only: there is no stdlib
-container parser worth hand-rolling.
+     mapInPandas, Arrow batch shape) stays real for non-image bytes.
+There is no resize or video-frame path.
 """
 
 from __future__ import annotations
@@ -46,9 +41,7 @@ def _decode_one(buf: bytes) -> tuple[int, int, str]:
     )
 
     if buf[:8] == PNG_MAGIC:  # real header parse, dependency-free:
-        # dims come from the fixed-offset IHDR chunk — a metadata pass
-        # must never pay the O(h*w) full pixel reconstruction just to
-        # read two ints (decode_png is for when pixels are needed)
+        # dims come from the fixed-offset IHDR chunk, no pixel decode
         try:
             w, h = png_dims(buf)
             return w, h, "png"
@@ -106,100 +99,3 @@ def decode_image_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             yield pd.concat([ids, meta], axis=1)
 
     return df.select(id_col, "media").mapInPandas(op, schema=MEDIA_META_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "doc_id long, width int, height int, resized binary, out_w int, out_h int"
-)
-
-
-def resize_images(
-    df: DataFrame, max_side: int = 224, id_col: str = "doc_id"
-) -> DataFrame:
-    """Image resize plumbing via mapInPandas: computes the target
-    dimensions (aspect-preserving fit into max_side x max_side) for every
-    blob and emits a `resized` binary column. PNG bytes take the REAL
-    path (stdlib decode -> nearest-neighbor resample -> re-encode,
-    functions/png_codec.py); other formats try Pillow; otherwise the
-    original bytes pass through while the dimension math, schema, and
-    batch shape remain the production plumbing."""
-    from pii_redaction_data_pipeline_spark.functions.png_codec import (
-        PNG_MAGIC,
-        decode_png,
-        encode_png,
-        resize_nearest,
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                px = None
-                if b[:8] == PNG_MAGIC:
-                    # decode ONCE: dims and pixels come from the same
-                    # pass (the resample needs the pixels anyway)
-                    try:
-                        w, h, px = decode_png(b)
-                    except Exception:
-                        px = None
-                if px is None:
-                    w, h, _codec = _decode_one(b)
-                scale = min(max_side / max(w, 1), max_side / max(h, 1), 1.0)
-                ow, oh = max(int(w * scale), 1), max(int(h * scale), 1)
-                resized = None
-                if px is not None:
-                    try:
-                        resized = encode_png(resize_nearest(px, ow, oh))
-                    except Exception:
-                        resized = None
-                if resized is None:
-                    try:
-                        import io
-
-                        from PIL import Image  # noqa: PLC0415
-
-                        img = Image.open(io.BytesIO(b)).resize((ow, oh))
-                        out = io.BytesIO()
-                        img.save(out, format="PNG")
-                        resized = out.getvalue()
-                    except Exception:
-                        resized = b  # stub: pass-through bytes
-                rows.append((did, w, h, resized, ow, oh))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "resized", "out_w", "out_h"]
-            )
-
-    return df.select(id_col, "media").mapInPandas(op, schema=RESIZED_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = "doc_id long, frame_idx int, frame_ts_ms long, frame binary"
-
-
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000, id_col: str = "doc_id"
-) -> DataFrame:
-    """Video frame-sampling plumbing (one row per sampled frame) via
-    mapInPandas — a 1:N exploding operator, which is why it cannot be a
-    scalar pandas UDF. The demux/decode is STUBBED (no av/ffmpeg in the
-    container): a deterministic fake duration is derived from the bytes
-    and each 'frame' is a content-addressed slice, so frame counts,
-    timestamps, schema, and the explode shape are real and tested."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, buf in zip(pdf[id_col], pdf["media"]):
-                b = bytes(buf) if buf is not None else b""
-                h = hashlib.sha256(b).digest()
-                duration_ms = 500 + int.from_bytes(h[:2], "big") % 9500
-                n_frames = max(duration_ms // every_ms, 1)
-                for i in range(n_frames):
-                    ts = i * every_ms
-                    lo = (i * 17) % max(len(b), 1)
-                    rows.append((did, i, ts, b[lo : lo + 32]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_ts_ms", "frame"]
-            )
-
-    return df.select(id_col, "media").mapInPandas(op, schema=FRAME_SAMPLE_SCHEMA)

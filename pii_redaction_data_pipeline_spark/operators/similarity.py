@@ -1,12 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline; random-hyperplane
-LSH bucketing as the scale path (candidates shrink ~bucket-fold, join is
-an equi-join on bucket signature — no O(n^2) shuffle at 100 TB).
+Brute-force cosine top-k as the exactness baseline; an IVF coarse
+quantizer as the scale path (candidates shrink to the probed cells, the
+join is an equi-join on cell — no O(n^2) shuffle at 100 TB).
 
 The dot products stay JVM-side via F.zip_with + F.aggregate (whole-stage
-codegen); the only Python is the LSH signature (one numpy matmul per
-Arrow batch).
+codegen); the only Python is the IVF cell assignment (one numpy matmul
+per Arrow batch).
 """
 
 from __future__ import annotations
@@ -168,68 +168,6 @@ def ivf_ann_topk(
         cand.join(F.broadcast(pr), "cell")
         .filter(F.col("nbr_id") != F.col("probe_id"))
         .select("probe_id", "probe_vec", "nbr_id", "nbr_vec")
-    )
-    sim = F.round(cosine_similarity_col(F.col("probe_vec"), F.col("nbr_vec")), round_digits)
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("nbr_id"))
-    return (
-        joined.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "nbr_id", "sim")
-    )
-
-
-def make_lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = 4321):
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype(np.float64)
-
-    @F.pandas_udf(T.LongType())
-    def lsh_sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:  # np.stack raises on an empty Arrow batch
-            return pd.Series([], dtype=np.int64)
-        mat = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (mat @ planes) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights, index=vecs.index)
-
-    return lsh_sig
-
-
-def lsh_ann_topk(
-    df: DataFrame,
-    probes: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 10,
-    n_tables: int = 4,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Approximate top-k: candidates = vectors sharing an LSH bucket with
-    the probe in ANY of n_tables hash tables, then exact cosine re-rank.
-
-    At scale this is n_tables equi-joins on (table, bucket) instead of a
-    full cross join; recall is tunable via n_planes/n_tables.
-    """
-    sigs = [make_lsh_signature_udf(dim, n_planes, seed=4321 + t) for t in range(n_tables)]
-
-    def with_buckets(d, prefix):
-        cols = [F.struct(F.lit(t).alias("tbl"), sigs[t](F.col(vec_col)).alias("bkt"))
-                for t in range(n_tables)]
-        return d.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).cast("array<double>").alias(f"{prefix}_vec"),
-            F.explode(F.array(*cols)).alias("b"),
-        ).select(f"{prefix}_id", f"{prefix}_vec", "b.tbl", "b.bkt")
-
-    cand = with_buckets(df, "nbr")
-    pr = with_buckets(probes, "probe")
-    joined = (
-        cand.join(F.broadcast(pr), ["tbl", "bkt"])
-        .filter(F.col("nbr_id") != F.col("probe_id"))
-        .select("probe_id", "probe_vec", "nbr_id", "nbr_vec")
-        .distinct()
     )
     sim = F.round(cosine_similarity_col(F.col("probe_vec"), F.col("nbr_vec")), round_digits)
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("nbr_id"))

@@ -136,8 +136,8 @@ def dedup_survivor_convs(
     convs = transcripts.join(kept_convs.select("conv_id"), "conv_id", "semi")
     # materialize the two reused frames ONCE: the shingle aggregation
     # feeds the LSH self-join (signatures + the verify arrays) and the
-    # pair list feeds four downstream consumers (id map, two key joins,
-    # the component rounds) — without the checkpoints Spark re-derives
+    # pair list feeds two downstream consumers (the id map and the
+    # component rounds) — without the checkpoints Spark re-derives
     # the whole scan+groupBy chain per consumer (~6x; profiled 73 s ->
     # ~10 s at the 20k-turn bench scale). Executor-local checkpoint
     # storage is the right trade at corpus scale too: one small row per
@@ -178,17 +178,17 @@ def dedup_survivor_convs(
         "dedup_pairs",
     )
     # numeric keys for the component step (no global row_number at
-    # corpus scale); rep choice below is hash-independent
+    # corpus scale), hashed straight off the pair columns; `ids` maps
+    # them back to conv_id. The kept_convs semi join above already drops
+    # NULL conv_ids. Rep choice below is hash-independent.
+    npairs = pairs.select(
+        F.xxhash64("id_a").alias("ca"), F.xxhash64("id_b").alias("cb")
+    )
     ids = (
         pairs.select(F.col("id_a").alias("conv_id"))
         .union(pairs.select("id_b"))
         .distinct()
         .withColumn("cid", F.xxhash64("conv_id"))
-    )
-    npairs = (
-        pairs.join(ids.withColumnRenamed("conv_id", "id_a").withColumnRenamed("cid", "ca"), "id_a")
-        .join(ids.withColumnRenamed("conv_id", "id_b").withColumnRenamed("cid", "cb"), "id_b")
-        .select("ca", "cb")
     )
     # durable runs extend the same parquet-spill contract into the star
     # rounds: without it, the component step's executor-local

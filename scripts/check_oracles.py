@@ -67,7 +67,7 @@ def main():
     import __spark_entry__ as E
     from pii_redaction_data_pipeline_spark import get_spark
 
-    spark = get_spark(master="local[8]", app_name="check_oracles")
+    spark = get_spark(app_name="check_oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

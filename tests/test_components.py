@@ -100,9 +100,8 @@ def test_nonconvergence_guard(spark):
 
 def test_semantic_dedup_composition(spark):
     """SemDeDup-shape pipeline: embedding cosine pairs -> components ->
-    one representative per semantic cluster. Edge source is the
-    oracle-checked embed_neardup path; at scale the pair stage swaps to
-    LSH/IVF buckets with identical downstream semantics."""
+    one representative per semantic cluster. Edges come from an exact
+    cosine pair stage, as in the oracle-checked semdedup query."""
     from pyspark.sql import functions as F
 
     from pii_redaction_data_pipeline_spark.operators.similarity import (

@@ -1,6 +1,6 @@
 """Similarity-search operators: brute-force exactness vs numpy, and
-recall of the two approximate paths (LSH, IVF) against brute force on
-the driver-provided embeddings table."""
+recall of the approximate IVF path against brute force on the
+driver-provided embeddings table."""
 
 import os
 
@@ -80,12 +80,3 @@ def test_ivf_deterministic_across_partitioning(spark, emb):
     )
     assert a[["probe_id", "rank", "nbr_id"]].values.tolist() == \
         b[["probe_id", "rank", "nbr_id"]].values.tolist()
-
-
-def test_lsh_recall(spark, emb):
-    from pii_redaction_data_pipeline_spark.operators.similarity import lsh_ann_topk
-
-    # ~500 vectors at sf0.001: 4 planes = 16 buckets (~30 vectors each),
-    # 6 tables — candidate sets big enough for meaningful recall.
-    r = _recall_at_k(spark, emb, lsh_ann_topk, k=3, n_planes=4, n_tables=6)
-    assert r >= 0.5, f"LSH recall@3 too low: {r}"
