@@ -31,6 +31,7 @@ from pii_redaction_data_pipeline_spark.functions.langid import langid_frame
 from pii_redaction_data_pipeline_spark.functions.perplexity import (
     CharTrigramLM,
     default_model,
+    logp_broadcast,
 )
 from pii_redaction_data_pipeline_spark.functions.quality import (
     repetition_frac_series,
@@ -163,10 +164,11 @@ def annotate_frame(texts: pd.Series, logp=None, normalize: bool = True) -> pd.Da
 def make_annotate_udf(spark, normalize: bool = True, ppl_model=None):
     """pandas UDF: text -> struct<text_norm, lang, lang_conf,
     scrubbed_text, scrub_counts, ppl, rep_frac, n_chars, n_words,
-    symbol_ratio>. The KN log-prob table is broadcast once through
-    `spark`. With normalize=True (default) every stage sees the
-    D1-normalized text and text_norm carries the normalization delta
-    back to the JVM. Pass ppl_model (a CharTrigramLM, e.g. from
+    symbol_ratio>. The KN log-prob table is broadcast once per model
+    and context (perplexity.logp_broadcast), so repeated calls (one per
+    micro-batch in a stream) reuse it. With normalize=True (default)
+    every stage sees the D1-normalized text and text_norm carries the
+    normalization delta back to the JVM. Pass ppl_model (a CharTrigramLM, e.g. from
     train_char_trigram_lm) to score fluency with a corpus-trained table
     instead of the embedded default — same ~400 KB broadcast either
     way."""
@@ -174,9 +176,7 @@ def make_annotate_udf(spark, normalize: bool = True, ppl_model=None):
     # ppl_model itself: referencing the model object inside the UDF
     # would cloudpickle its ~470 KB logp ndarray into every task closure
     # IN ADDITION to the broadcast, defeating the broadcast.
-    bc = spark.sparkContext.broadcast(
-        (ppl_model if ppl_model is not None else default_model()).logp
-    )
+    bc = logp_broadcast(spark, ppl_model)
 
     @F.pandas_udf(ANNOTATE_SCHEMA)
     def annotate_udf(texts: pd.Series) -> pd.DataFrame:

@@ -11,6 +11,8 @@ text; the only per-row Python is one str.encode.
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -175,6 +177,27 @@ def default_model() -> CharTrigramLM:
     return _DEFAULT
 
 
+# model -> (SparkContext, Broadcast of its logp table). Every
+# sc.broadcast leaves a ~470 KB file in the context's temp dir until the
+# context stops, and the UDF factories run once per annotate call (per
+# micro-batch in a stream), so they share one broadcast per model and
+# context instead of leaking one per call. Weak keys: a fitted model's
+# entry goes when the model does.
+_LOGP_BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def logp_broadcast(spark, model: CharTrigramLM | None = None):
+    """The broadcast of `model`'s log-prob table (the embedded default
+    when None) in `spark`'s context, created on first use."""
+    model = model if model is not None else default_model()
+    sc = spark.sparkContext
+    hit = _LOGP_BROADCASTS.get(model)
+    if hit is None or hit[0] is not sc:
+        hit = (sc, sc.broadcast(model.logp))
+        _LOGP_BROADCASTS[model] = hit
+    return hit[1]
+
+
 def row_trigram_counts(texts: pd.Series) -> np.ndarray:
     """Flat [V^3] float64 trigram counts over a batch of rows, each row
     padded ' '+t+' ' like the scoring path (trigrams never straddle two
@@ -300,18 +323,16 @@ def _artifact_committed(spark, artifact_path: str) -> bool:
 def make_ppl_udf(spark, model: CharTrigramLM | None = None):
     """pandas UDF: text -> ppl double.
 
-    The log-prob table is broadcast once through `spark` instead of
-    being pickled into every task closure; each executor rebuilds the
-    lightweight LM wrapper around the shared ndarray. Pass `model` to
-    score with a corpus-trained LM (train_char_trigram_lm) instead of
-    the embedded-corpus default.
+    The log-prob table is broadcast once per model and context
+    (logp_broadcast) instead of being pickled into every task closure;
+    each executor rebuilds the lightweight LM wrapper around the shared
+    ndarray. Pass `model` to score with a corpus-trained LM
+    (train_char_trigram_lm) instead of the embedded-corpus default.
     """
     # capture ONLY bc in the UDF closure — closing over the model object
     # would cloudpickle its logp ndarray into every task in addition to
     # the broadcast (same contract as fused.make_annotate_udf)
-    bc = spark.sparkContext.broadcast(
-        (model if model is not None else default_model()).logp
-    )
+    bc = logp_broadcast(spark, model)
 
     @F.pandas_udf(T.DoubleType())
     def ppl_udf(texts: pd.Series) -> pd.Series:

@@ -60,13 +60,16 @@ def tune_shuffle_partitions(
     extremes: 100 TB over a few hundred partitions spills and stragglers
     dominate; 1 GB over 10k partitions drowns in task overhead. Uses the
     optimizer's size estimate for the plan (file-scan statistics — a
-    driver-side metadata read, no job), clamped below by 2x cores so a
-    small input still uses the whole cluster. AQE may still coalesce
-    downward at runtime; this sets the ceiling it works under.
+    driver-side metadata read, no job), clamped below by the core count
+    so a small input still uses the whole cluster in one wave of tasks
+    (each Python task costs a fixed ~0.25 s before its first row, so a
+    second wave of small tasks only adds that cost; SCALE.md). AQE may
+    still coalesce downward at runtime; this sets the ceiling it works
+    under.
     """
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     cores = spark.sparkContext.defaultParallelism
-    n = max((size + target_partition_bytes - 1) // target_partition_bytes, 2 * cores)
+    n = max((size + target_partition_bytes - 1) // target_partition_bytes, cores)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return int(n)
 
@@ -131,11 +134,15 @@ def annotate(
     # count, salted so a skewed 30k-turn conversation spreads across
     # workers (safe: these stages are strictly per-row).
     # Volume-tuned shuffle partitions (run_pipeline sets the conf via
-    # tune_shuffle_partitions), floored at 2x cores so AQE coalescing
-    # and tiny inputs can't under-parallelize the exchange.
+    # tune_shuffle_partitions), floored at the core count so AQE
+    # coalescing and tiny inputs can't under-parallelize the exchange.
+    # The floor is one wave, not two: every Python task pays a fixed
+    # ~0.25 s before its first row (SCALE.md, "The cost of a Python
+    # task"), and the salted rows are already balanced by the hash, so
+    # a second wave of smaller tasks only adds that fixed cost.
     n_parts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        spark.sparkContext.defaultParallelism * 2,
+        spark.sparkContext.defaultParallelism,
     )
     if df.rdd.getNumPartitions() < n_parts:
         # (conv_id, turn_idx) is the per-row discriminator: hashing

@@ -77,8 +77,10 @@ def run_streaming_pipeline(
     stream = reader.parquet(input_dir)
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
+        # every micro-batch goes straight to the write: an emptiness
+        # check would be a job of its own and a second read of the
+        # landed file, and the only empty micro-batch (a zero-row file)
+        # simply writes no rows
         ann = annotate(batch_df, cfg, spark, ppl_model=ppl_model)
         ann = with_bucket(ann, cfg.n_buckets)
         ann = ann.withColumn("_batch_id", F.lit(batch_id))

@@ -10,6 +10,10 @@ Reads: the bench JSON (pipeline median + per-run walls), pytest's
 collected-test count, and the driver rows of the newest
 CORRECTNESS_r*.json (row count, and how many matched their oracle).
 Rewrites the <!-- stats:begin --> .. <!-- stats:end --> block in place.
+Every throughput line names the vCPU count and time of the records it
+quotes; when those vCPU counts differ from this host's, the block says
+the figures do not come from this host and points to perfbench/run.py,
+which measures it.
 """
 
 from __future__ import annotations
@@ -70,8 +74,11 @@ def main():
         for r in rows
     )
 
+    host_cpus = os.cpu_count()
+    record_cpus = set()
     lines = ["<!-- stats:begin -->"]
     if bench and "pipeline" in bench:
+        record_cpus.add(bench.get("cpus"))
         p = bench["pipeline"]
         ctrl = p.get("control_work_per_sec")
         label = p.get("scale", f"sf{bench.get('sf')}")
@@ -83,7 +90,8 @@ def main():
             f" {p['turns'] / 1e6:.1f}M-turn `{label}` table —"
             f" walls {p.get('runs_wall_sec')} s\n"
             f"  (best {p.get('best_turns_per_sec', 0):,.0f} turns/sec),"
-            f" measured {bench.get('measured_at') or time.strftime('%Y-%m-%d %H:%M')}"
+            f" measured on a {bench.get('cpus')}-vCPU host"
+            f" {bench.get('measured_at') or time.strftime('%Y-%m-%d %H:%M')}"
             f" (block regenerated {time.strftime('%Y-%m-%d %H:%M')})."
             + (
                 f"\n  Same-moment hardware control {ctrl} work-units/sec —"
@@ -101,7 +109,9 @@ def main():
                 f"- Cross-round comparability block (the 2M-turn sf0.1 table"
                 f" BENCH_r2/r3 timed):\n  **{pb['turns_per_sec']:,.0f}"
                 f" turns/sec** median, walls {pb.get('runs_wall_sec')} s"
-                f" (warm-up\n  {pb.get('warmup_wall_sec')} s). The headline"
+                f" (warm-up\n  {pb.get('warmup_wall_sec')} s; same record,"
+                f" {bench.get('cpus')} vCPUs, {bench.get('measured_at')})."
+                f" The headline"
                 f" above runs ~4x larger so the session-fixed\n  per-job tail"
                 f" (2-4 s) is ~1% of wall instead of 15-25%."
             )
@@ -117,19 +127,33 @@ def main():
                 # bench4x scale in "pipeline"; the spread series must stay
                 # one scale)
                 blk = r.get("pipeline_bench") or r["pipeline"]
-                meds.append((blk["turns_per_sec"], r.get("measured_at")))
+                meds.append((blk["turns_per_sec"], r.get("measured_at"), r.get("cpus")))
             except (KeyError, json.JSONDecodeError):
                 continue
         if len(meds) >= 2:
-            vals = sorted(v for v, _ in meds)
+            vals = sorted(v for v, _, _ in meds)
+            when = sorted(str(t) for _, t, _ in meds if t)
+            cpus = sorted({c for _, _, c in meds}, key=str)
+            record_cpus.update(cpus)
             lines.append(
                 f"- Cross-window spread: {len(meds)} full `bench.py` runs recorded"
-                f" (`BENCH/bench_history.jsonl`);\n  per-run medians"
+                f" (`BENCH/bench_history.jsonl`,\n"
+                f"  {'/'.join(map(str, cpus))} vCPUs, {when[0]} to {when[-1]});"
+                f" per-run medians"
                 f" {vals[0]:,.0f}-{vals[-1]:,.0f} turns/sec, median-of-runs"
                 f" **{vals[(len(vals) - 1) // 2]:,.0f} turns/sec** —\n"
                 f"  the spread is the VM's minute-scale throttle, measured in"
                 f" place by the control\n  fields inside each run's JSON."
             )
+    if record_cpus and record_cpus != {host_cpus}:
+        lines.append(
+            f"- The throughput figures above do not come from this host"
+            f" ({host_cpus} vCPUs): they\n  are `bench.py` records of a"
+            f" {'/'.join(map(str, sorted(record_cpus, key=str)))}-vCPU host."
+            f" This host's numbers come from\n  `python3 perfbench/run.py"
+            f" --workload annotate_batch|stream_microbatch`\n"
+            f"  (`perfbench/README.md`)."
+        )
     lines.append(
         f"- Correctness: exact keep/drop + scrubbed-text equality on golden\n"
         f"  fixtures; **{n_tests} pytest tests collected**; **{n_match} of the"

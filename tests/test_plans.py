@@ -95,8 +95,39 @@ def test_pipeline_exchange_budget_degenerate_scan(spark):
     assert n_python == 1, f"expected 1 ArrowEvalPython, got {n_python}"
 
 
+def test_pipeline_one_wave_on_one_split(spark):
+    """A one-split input is salted into exactly one wave of tasks: the
+    salted exchange has defaultParallelism partitions, not 2x that, and
+    the conv_id exchange its bucket-aligned count (defaultParallelism
+    itself when the core count divides n_buckets). Every Python task
+    pays a fixed ~0.25 s before its first row (SCALE.md), so a second
+    wave of balanced, hash-salted tasks would only add that cost."""
+    from pii_redaction_data_pipeline_spark.config import PipelineConfig
+    from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
+    from pii_redaction_data_pipeline_spark.sources.tables import (
+        aligned_partitions,
+    )
+
+    cfg = PipelineConfig()
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        # below the floor, so the floor alone sets the count
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        one = _transcript_src(spark).coalesce(1)
+        assert one.rdd.getNumPartitions() == 1
+        plan = plan_of(annotate(one, cfg, spark))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    salted = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, [^)]*_salt[^)]*, (\d+)\)", plan)
+    conv_only = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, (\d+)\)", plan)
+    assert salted and conv_only, plan[:2000]
+    assert {int(n) for n in salted} == {cores}, (salted, cores)
+    assert {int(n) for n in conv_only} == {aligned_partitions(cores, cfg.n_buckets)}
+
+
 def test_pipeline_adaptive_skips_phase1(spark):
-    """When the scan already has >= 2x-cores balanced splits (the 100 TB
+    """When the scan already has >= cores balanced splits (the 100 TB
     case), phase 1 must NOT shuffle: the UDFs run on the scan partitions
     and the conv_id exchange is the plan's ONLY shuffle."""
     from pii_redaction_data_pipeline_spark.config import PipelineConfig
@@ -140,8 +171,8 @@ def test_pipeline_python_before_shuffle(spark):
 
 
 def test_tune_shuffle_partitions(spark):
-    """Volume-based sizing: floored at 2x cores for small inputs; grows
-    with the input size estimate for big ones."""
+    """Volume-based sizing: floored at one wave (the core count) for
+    small inputs; grows with the input size estimate for big ones."""
     from pii_redaction_data_pipeline_spark.plans.pipeline import (
         tune_shuffle_partitions,
     )
@@ -151,11 +182,11 @@ def test_tune_shuffle_partitions(spark):
         docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
         cores = spark.sparkContext.defaultParallelism
         n = tune_shuffle_partitions(spark, docs)
-        assert n == 2 * cores  # tiny input -> floor
+        assert n == cores  # tiny input -> floor
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
         # a 1 KB target forces the size term to dominate
         n2 = tune_shuffle_partitions(spark, docs, target_partition_bytes=1024)
-        assert n2 > 2 * cores
+        assert n2 > cores
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 

@@ -50,8 +50,8 @@ def test_kill_and_resume_identical(spark, tiny, tmp_path):
 
 
 def test_partition_count_invariance(spark, tiny):
-    """Also pins the ADAPTIVE phase-1 both ways: 2 partitions < 2x cores
-    takes the salted-repartition path, 37 >= 2x cores skips phase 1
+    """Also pins the ADAPTIVE phase-1 both ways: 2 partitions < cores
+    takes the salted-repartition path, 37 >= cores skips phase 1
     entirely — identical results either way."""
     cfg = PipelineConfig()
     src = spark.read.parquet(tiny[0])

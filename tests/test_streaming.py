@@ -65,6 +65,49 @@ def test_streaming_matches_batch(tmp_path, spark):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_zero_row_file_drains_and_writes_nothing(tmp_path, spark):
+    """A zero-row landed file is the one way an empty micro-batch
+    reaches process_batch: it must drain without error and write no
+    rows, and the next file's batch must land and match annotate."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pii_redaction_data_pipeline_spark.streaming.ingest import TRANSCRIPT_DDL
+
+    tdf, _ = generate("tiny")
+    in_dir = str(tmp_path / "landing")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(in_dir)
+    empty = spark.createDataFrame([], TRANSCRIPT_DDL)
+    empty.coalesce(1).write.parquet(os.path.join(in_dir, "empty"))
+    assert sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(in_dir, "empty", "*.parquet"))
+    ) == 0
+
+    q = run_streaming_pipeline(spark, in_dir + "/*", out, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    # the empty file was a micro-batch of its own (batch 0, committed)
+    commits = os.listdir(os.path.join(ckpt, "commits"))
+    assert [c for c in commits if not c.startswith(".")] == ["0"]
+    written = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    assert sum(pq.ParquetFile(f).metadata.num_rows for f in written) == 0
+
+    _land(spark, tdf, {c[:18] for c in tdf["conv_id"].unique()}, in_dir, "full")
+    q = run_streaming_pipeline(spark, in_dir + "/*", out, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = spark.read.parquet(out)
+    batch = annotate(spark.createDataFrame(tdf), PipelineConfig(), spark)
+    b = batch.select(*COLS).orderBy("conv_id", "turn_idx").collect()
+    s = got.select(*COLS).orderBy("conv_id", "turn_idx").collect()
+    assert len(s) == len(tdf) and b == s
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def test_stateful_dedup_across_batches(tmp_path, spark):
     """applyInPandasWithState keeps per-conversation seen-hash state
     across micro-batches AND across stream restarts (state store
