@@ -1836,7 +1836,7 @@ _REPEATED_SPAN_SQL = r"""
 # test pairs it: ngram_jaccard_pairs excludes it from pair generation,
 # so ngram_jaccard and simhash (whose truth side is that operator) use
 # _NGRAM_TRUTH_SQL; minhash_lsh_pairs pairs two empty documents
-# (identical sentinel signatures, jaccard 1.0), so minhash_lsh and
+# (one shared '' shingle, jaccard 1.0), so minhash_lsh and
 # dup_components (built on its pairs) use _MINHASH_TRUTH_SQL.
 _NGRAM_PAIRS_SQL = r"""
     WITH norm AS (

@@ -10,7 +10,7 @@ production can diverge without touching operators.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Fixed, ordered drop-reason taxonomy (order = evaluation precedence and
 # the deterministic order of the drop_reasons array).
@@ -87,5 +87,3 @@ class PipelineConfig:
     n_buckets: int = 16  # output partition buckets on conv_id
     salt_buckets: int = 8  # salting factor for skewed conv_id repartition
     target_partition_bytes: int = 128 * 1024 * 1024
-
-    extra: dict = field(default_factory=dict)

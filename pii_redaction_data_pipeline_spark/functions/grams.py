@@ -1,12 +1,12 @@
 """The gram family's one load-bearing plan shape, owned in one place.
 
-Four operators explode word-k-grams out of a text column
+Five operators explode word-k-grams out of a text column
 (operators/decontaminate.py, operators/dsir.py, and dedup.py's
-ngram_jaccard_pairs + repeated_span_dedup). They differ in everything
-incidental — gram key (string vs xxhash64 vs bucketed hash), distinct
-vs multiplicity, sub-k fallback, explode vs explode_outer vs
-posexplode — but share exactly one non-obvious invariant, and it is a
-PLAN-SHAPE invariant, not a semantic one:
+ngram_jaccard_pairs, minhash_lsh_pairs and repeated_span_dedup). They
+differ in everything incidental — gram key (string vs xxhash64 vs
+bucketed hash), distinct vs multiplicity, sub-k fallback, explode vs
+explode_outer vs posexplode — but share exactly one non-obvious
+invariant, and it is a PLAN-SHAPE invariant, not a semantic one:
 
     the whitespace split MUST be materialized by a projection directly
     UNDER the explode's Generate node, and every gram lambda must
@@ -22,7 +22,7 @@ NOT collapse into its child projection, so projecting the split in the
 same select that explodes is the one shape that keeps exactly one
 split per row. `explode_grams` builds that shape; callers supply only
 their gram transform. tests/test_plans.py::test_gram_family_plans_split_once
-pins the invariant for all four operators against the OPTIMIZED plan.
+pins the invariant for all five operators against the OPTIMIZED plan.
 """
 
 from __future__ import annotations
@@ -37,9 +37,9 @@ _WORDS_ATTR = "_gram_ws"
 
 def normalized_words(text_col: str) -> Column:
     """lower + whitespace-collapse + trim, split on single spaces — the
-    shared normalization of the decontaminate/DSIR/jaccard gram family
-    (an empty text yields one empty-string word, matching the DuckDB
-    oracles). NULL text coalesces to '' FIRST — split(NULL) is NULL,
+    shared normalization of the decontaminate/DSIR/jaccard/minhash gram
+    family (an empty text yields one empty-string word, matching the
+    DuckDB oracles). NULL text coalesces to '' FIRST — split(NULL) is NULL,
     NULL gram arrays explode to zero rows, and the document would
     silently vanish from every downstream frame (DSIR's 'one row per
     corpus document' contract breaks with no error); the pipeline's

@@ -4,9 +4,9 @@ Beyond the reference's single dedup mechanism (the processed_boxes set
 that stops double-redaction, redact.py:169-193), a 100 TB training-data
 pipeline needs corpus-level dedup. All operators are DataFrame-first:
 
-  exact          hash-groupBy on a normalized fingerprint (no Python)
-  minhash_lsh    shingle -> minhash signature (vectorized numpy) ->
-                 banded LSH bucket join -> exact-jaccard verify
+  minhash_lsh    JVM word-k-gram shingle hashes -> seeded minhash ->
+                 banded LSH bucket join -> array_intersect jaccard verify
+  conversation   the same LSH engine over turn-fingerprint k-grams
   simhash        64-bit sign-of-weighted-sum signature + chunk banding
   ngram_jaccard  exact word-k-gram jaccard via explode + self-join
                  (the small-scale ground truth for the sketches)
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,123 +29,8 @@ from pii_redaction_data_pipeline_spark.functions.grams import (
     explode_grams,
     normalized_words,
 )
-from pii_redaction_data_pipeline_spark.functions.text_stats import (
-    content_fingerprint,
-)
-
-# --- exact dedup -----------------------------------------------------------
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Adds fingerprint + is_dup_exact (true for every row after the
-    lowest-id keeper of an identical normalized text). The fingerprint
-    definition is owned by functions/text_stats.content_fingerprint —
-    one normalization, one place to change it."""
-    fp = content_fingerprint(F.col(text_col))
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
-    return (
-        df.withColumn("fingerprint", fp)
-        .withColumn("is_dup_exact", F.row_number().over(w) > 1)
-    )
-
 
 # --- minhash ---------------------------------------------------------------
-
-_MERSENNE = (1 << 61) - 1
-
-# polynomial rolling-hash base (odd -> invertible mod 2^64) and its
-# modular inverse; substring hashes come from prefix hashes:
-#   P[i] = sum_{j<i} (cp[j]+1) * B^(i-1-j)   (mod 2^64)
-#   H(a, b) = P[b] - P[a] * B^(b-a)
-# computed fully vectorized via the scaled-cumsum identity
-#   P[i] = B^i * cumsum((cp[j]+1) * Binv^(j+1)).
-_POLY_B = 1099511628211  # FNV prime, reused as the polynomial base
-_POLY_BINV = pow(_POLY_B, -1, 1 << 64)
-_pow_cache: dict[str, np.ndarray] = {}
-
-
-def _pows(n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Cached [B^0..B^n] and [Binv^0..Binv^n] as uint64 (wraparound)."""
-    cur = _pow_cache.get("b")
-    if cur is None or len(cur) <= n:
-        m = max(n + 1, 256)
-        b = np.empty(m, dtype=np.uint64)
-        binv = np.empty(m, dtype=np.uint64)
-        b[0] = binv[0] = 1
-        b[1:] = _POLY_B
-        binv[1:] = _POLY_BINV
-        np.multiply.accumulate(b, out=b)
-        np.multiply.accumulate(binv, out=binv)
-        _pow_cache["b"], _pow_cache["binv"] = b, binv
-    return _pow_cache["b"], _pow_cache["binv"]
-
-
-def _prefix_hashes(s: str) -> np.ndarray:
-    """P[0..n] prefix polynomial hashes of s (uint64 wraparound)."""
-    cp = (np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.uint64)
-          + np.uint64(1))
-    n = len(cp)
-    bp, binvp = _pows(n)
-    q = np.multiply(cp, binvp[1 : n + 1])
-    np.add.accumulate(q, out=q)
-    out = np.empty(n + 1, dtype=np.uint64)
-    out[0] = 0
-    np.multiply(q, bp[1 : n + 1], out=out[1:])
-    return out
-
-
-def _hash_params(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=n_hashes, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=n_hashes, dtype=np.int64)
-    return a, b
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct 64-bit hashes of the word-k-gram shingles of `text`
-    (lowercased, whitespace-normalized; < k words -> one whole-text
-    shingle; empty -> one sentinel hash), computed with a vectorized
-    numpy polynomial rolling hash — each shingle hash is exactly the
-    polynomial hash of the joined 'w1 w2 ... wk' string, no per-byte
-    Python (round-1 review flagged the FNV byte loop as the slowest
-    headline-query hot path)."""
-    s = " ".join(text.lower().split())
-    if not s:
-        return np.zeros(1, dtype=np.uint64)
-    prefix = _prefix_hashes(s)
-    cp_space = np.uint64(ord(" ") + 1)
-    cp = (np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.uint64)
-          + np.uint64(1))
-    spaces = np.flatnonzero(cp == cp_space)
-    starts = np.concatenate(([0], spaces + 1))
-    ends = np.concatenate((spaces, [len(cp)]))
-    if len(starts) < k:
-        a = np.array([0], dtype=np.int64)
-        b = np.array([len(cp)], dtype=np.int64)
-    else:
-        a = starts[: len(starts) - k + 1].astype(np.int64)
-        b = ends[k - 1 :].astype(np.int64)
-    bp, _ = _pows(len(cp))
-    h = prefix[b] - prefix[a] * bp[b - a]
-    return np.unique(h)
-
-
-def make_minhash_udf(n_hashes: int = 64, shingle_k: int = 3, seed: int = 1234):
-    a, b = _hash_params(n_hashes, seed)
-    a_u = a.astype(np.uint64)
-    b_u = b.astype(np.uint64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        sigs = []
-        for t in texts.fillna(""):
-            sh = _shingle_hashes(t, shingle_k)
-            # (a*x + b) mod p, vectorized over (n_hashes, n_shingles)
-            vals = (np.outer(a_u, sh) + b_u[:, None]) % np.uint64(_MERSENNE)
-            sigs.append(vals.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(sigs, index=texts.index)
-
-    return minhash_udf
 
 
 def _band_candidates(with_sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
@@ -184,12 +69,12 @@ def _estimate_filter(
     cand: DataFrame, with_sig: DataFrame, n_hashes: int, est_threshold: float
 ) -> DataFrame:
     """Drop candidate pairs whose SIGNATURE-estimated jaccard (matching-
-    component fraction, an unbiased estimator with stderr
-    sqrt(j(1-j)/n_hashes)) falls below est_threshold — a pure-JVM array
-    comparison that runs BEFORE any per-pair feature join, so a
-    boilerplate-heavy corpus's O(corpus) mid-similarity band collisions
-    die at ~8 B x n_hashes per row instead of reaching the exact
-    verify."""
+    component fraction, unbiased, stderr sqrt(j(1-j)/n_hashes)) is below
+    est_threshold, BEFORE any per-pair feature join: a boilerplate-heavy
+    corpus's O(corpus) mid-similarity band collisions die at ~8 B x
+    n_hashes per row instead of reaching the exact verify. A margin of
+    0.2 below the threshold (> 3 stderr at 64 hashes) bounds the recall
+    loss of a TRUE >= threshold pair below ~1e-3."""
     return (
         cand.join(
             with_sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")),
@@ -213,6 +98,22 @@ def _estimate_filter(
     )
 
 
+def _word_shingles(w: F.Column, k: int) -> F.Column:
+    """Distinct word-k-gram strings of the word array `w`, each k words
+    joined by one space; fewer than k words (an empty text's [''] too)
+    give ONE whole-text shingle."""
+    n = F.size(w)
+    return F.array_distinct(
+        F.when(
+            n >= k,
+            F.transform(
+                F.sequence(F.lit(0), n - k),
+                lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", w)))
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -221,96 +122,34 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
-    seed: int = 1234,
     est_margin: float | None = None,
-    persist_signatures: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH, verified with
     exact shingle jaccard. Returns (id_a, id_b, jaccard) with id_a<id_b.
 
-    persist_signatures: the (id, sig) frame is referenced from up to
-    FOUR subplans (band-join lhs/rhs, estimate-filter sig_a/sig_b);
-    without a persist each branch re-runs the minhash pandas UDF — the
-    most expensive stage — over the full corpus text. The default
-    persists the ~8xn_hashes B/doc signatures MEMORY_AND_DISK, eagerly
-    materializes the (output-bounded) verified pairs via
-    localCheckpoint, then unpersists — the simhash_pairs contract
-    (checkpoint blocks are reclaimed by the ContextCleaner when the
-    caller drops the frame). Pass False for a fully lazy plan. Note the
-    default EAGERLY runs the pair job at call time.
+    A shingle is xxhash64 of one _word_shingles gram of normalized_words
+    — ngram_jaccard_pairs' shingles (an ASCII ``\\s`` split, so U+00A0 /
+    U+2003 stay inside a word); two empty / NULL documents share their
+    one shingle and pair at 1.0. One groupBy on id collects each
+    document's shingles and their signature (_seeded_minhash_sig_agg)
+    for _shingle_neardup_pairs, the conversation-dedup engine: no Python
+    UDF, and no text past the shingling.
 
-    checkpoint_dir: localCheckpoint blocks live on executor-local disk —
-    lose an executor before the caller consumes the pairs and the
-    lineage-truncated frame is unrecoverable (the dedup_survivor_convs
-    caveat, plans/curate.py). A multi-executor production run passes a
-    shared-storage directory instead: the pairs spill to parquet there
-    and the returned frame reads back from it, surviving executor loss
-    for one write+read of the (output-bounded) pair list.
-
-    est_margin (OPT-IN — the default None keeps the original contract:
-    every band-join candidate is exact-verified) adds a SIGNATURE-
-    ESTIMATE pre-filter between banding and the exact verify: the
-    matching-component fraction of two minhash signatures is an
-    unbiased jaccard estimator (stderr sqrt(j(1-j)/n_hashes) ~ 0.06 at
-    n=64), so candidates estimating below jaccard_threshold -
-    est_margin are discarded from a pure-JVM array comparison BEFORE
-    any text is joined or re-shingled. On a boilerplate-heavy corpus
-    the band join emits O(corpus) mid-similarity candidates (profiled:
-    2,000 synthetic 940-turn conversations -> 411k candidates = 20% of
-    all pairs) and the exact verify — O(candidate x doc bytes) —
-    becomes the bottleneck; the estimate kills that mass for ~24 B x
-    n_hashes per row. A margin of 0.2 (> 3 stderr) bounds the recall
-    loss for a TRUE >= threshold pair below ~1e-3 per pair; opting in
-    trades that quantified loss for not shipping text to doomed
-    candidates. Thresholds <= est_margin disable the filter
-    automatically (estimate >= 0 always)."""
-    sig = make_minhash_udf(n_hashes, shingle_k, seed)
-    with_sig = df.select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
-    if persist_signatures:
-        with_sig = with_sig.persist()
-    try:
-        cand = _band_candidates(with_sig, n_hashes, bands)
-        est_threshold = jaccard_threshold - (
-            est_margin if est_margin is not None else 1.0
-        )
-        if est_threshold > 0:
-            cand = _estimate_filter(cand, with_sig, n_hashes, est_threshold)
-        texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
-        cand = (
-            cand.join(texts.select(F.col("id").alias("id_a"), F.col("txt").alias("txt_a")), "id_a")
-            .join(texts.select(F.col("id").alias("id_b"), F.col("txt").alias("txt_b")), "id_b")
-        )
-        jac = make_jaccard_udf(shingle_k)
-        pairs = (
-            cand.withColumn("jaccard", jac(F.col("txt_a"), F.col("txt_b")))
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-        if checkpoint_dir is not None:
-            path = f"{checkpoint_dir.rstrip('/')}/minhash_pairs"
-            pairs.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path)
-        if persist_signatures:
-            return pairs.localCheckpoint(eager=True)
-        return pairs
-    finally:
-        if persist_signatures:
-            with_sig.unpersist()
-
-
-def make_jaccard_udf(shingle_k: int = 3):
-    @F.pandas_udf(T.DoubleType())
-    def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.zeros(len(a))
-        for i, (x, y) in enumerate(zip(a.fillna(""), b.fillna(""))):
-            sx = set(_shingle_hashes(x, shingle_k).tolist())
-            sy = set(_shingle_hashes(y, shingle_k).tolist())
-            u = len(sx | sy)
-            out[i] = len(sx & sy) / u if u else 0.0
-        return pd.Series(out, index=a.index)
-
-    return jaccard_udf
+    est_margin (OPT-IN; None exact-verifies every band-join candidate):
+    _estimate_filter drops candidates estimated below jaccard_threshold
+    - est_margin; thresholds <= est_margin disable it."""
+    grams = explode_grams(
+        df, normalized_words(text_col),
+        lambda w: F.transform(_word_shingles(w, shingle_k), lambda g: F.xxhash64(g)),
+        keep=(F.col(id_col).alias("id"),),
+    )
+    sh = grams.groupBy("id").agg(
+        F.collect_list("g").alias("shingles"),
+        _seeded_minhash_sig_agg("g", n_hashes).alias("sig"),
+    )
+    return _shingle_neardup_pairs(
+        sh, jaccard_threshold, n_hashes, bands, est_margin, id_col="id", sig=F.col("sig")
+    )
 
 
 def conversation_turn_shingles(
@@ -384,7 +223,8 @@ def _seeded_minhash_sig(shingle_col: str, n_hashes: int) -> F.Column:
     """MinHash signature from a precomputed shingle-hash array, fully
     JVM-side: component h = min over shingles of xxhash64(shingle, h).
     Seeded-xxhash64 components are independent enough for the standard
-    minhash estimator; no Python UDF, stays in codegen.
+    minhash estimator; no Python UDF, but the higher-order functions run
+    interpreted, once per plan branch that reads the signature.
 
     NB: the per-component lambda must be UNARY — PySpark's transform()
     dispatches on lambda arity, so a `lambda s, h=h:` closure would be
@@ -395,6 +235,13 @@ def _seeded_minhash_sig(shingle_col: str, n_hashes: int) -> F.Column:
         return F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(h))))
 
     return F.array(*[component(h) for h in range(n_hashes)])
+
+
+def _seeded_minhash_sig_agg(shingle_col: str, n_hashes: int) -> F.Column:
+    """_seeded_minhash_sig as `min` aggregates over one shingle per row:
+    codegen'd, evaluated once map-side of the groupBy's exchange (5,000
+    sf0.1 documents: minhash_lsh_pairs 4.0 s with the array form, 2.0 s)."""
+    return F.array(*[F.min(F.xxhash64(shingle_col, F.lit(h))) for h in range(n_hashes)])
 
 
 def conversation_neardup_pairs(
@@ -415,13 +262,8 @@ def conversation_neardup_pairs(
     order), jaccard computed EXACTLY over the turn-fingerprint k-gram
     shingle sets (see conversation_turn_shingles for why turn
     granularity is both the correct transcript identity and the 100 TB
-    path).
-
-    Plan shape: one conv_id groupBy (8-byte fingerprints, map-side
-    combined) -> JVM minhash signatures -> banded LSH bucket join
-    (~24 B/row) -> signature-estimate pre-filter -> exact verify via
-    array_intersect on the shingle arrays. Zero Python UDFs, zero text
-    shuffles, no per-pair re-shingling."""
+    path). Plan shape: one conv_id groupBy of 8-byte fingerprints, then
+    _shingle_neardup_pairs. Zero Python UDFs, zero text shuffles."""
     sh = conversation_turn_shingles(df, conv_col, text_col, order_col, shingle_k)
     return _shingle_neardup_pairs(
         sh, jaccard_threshold, n_hashes, bands, est_margin
@@ -436,15 +278,17 @@ def _shingle_neardup_pairs(
     n_hashes: int = 64,
     bands: int = 16,
     est_margin: float | None = 0.2,
+    id_col: str = "conv_id",
+    sig: F.Column | None = None,
 ) -> DataFrame:
-    """(conv_id, shingles) -> verified (id_a, id_b, jaccard): the banded
-    LSH machinery over precomputed shingle-hash arrays, with the exact
-    verify as a JVM array_intersect (no text, no UDF)."""
-    with_sig = sh.select(
-        F.col("conv_id").alias("id"),
-        F.col("shingles"),
-        _seeded_minhash_sig("shingles", n_hashes).alias("sig"),
-    )
+    """(id_col, shingles) -> verified (id_a, id_b, jaccard): banded LSH
+    over distinct shingle-hash arrays, exact verify as a JVM
+    array_intersect. The one near-dup engine, behind minhash_lsh_pairs
+    (word k-grams) and conversation dedup (turn-fingerprint k-grams).
+    sig: the signature if the caller aggregated it with the shingles
+    (_seeded_minhash_sig_agg); None signs the arrays here."""
+    sig = _seeded_minhash_sig("shingles", n_hashes) if sig is None else sig
+    with_sig = sh.select(F.col(id_col).alias("id"), F.col("shingles"), sig.alias("sig"))
     cand = _band_candidates(with_sig.select("id", "sig"), n_hashes, bands)
     est_threshold = jaccard_threshold - (est_margin if est_margin is not None else 1.0)
     if est_threshold > 0:
@@ -456,14 +300,55 @@ def _shingle_neardup_pairs(
         cand.join(feats.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
         .join(feats.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
         .withColumn("jaccard", inter / (na + nb - inter))
-        # threshold on the UNROUNDED value (matches minhash_lsh_pairs
-        # and the DuckDB oracle's WHERE); round only for the output
+        # threshold on the UNROUNDED value (as the DuckDB oracle's WHERE
+        # does); round only for the output
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
 # --- simhash ---------------------------------------------------------------
+
+# polynomial rolling-hash base (odd -> invertible mod 2^64) and its
+# modular inverse; substring hashes come from prefix hashes:
+#   P[i] = sum_{j<i} (cp[j]+1) * B^(i-1-j)   (mod 2^64)
+#   H(a, b) = P[b] - P[a] * B^(b-a)
+# computed fully vectorized via the scaled-cumsum identity
+#   P[i] = B^i * cumsum((cp[j]+1) * Binv^(j+1)).
+_POLY_B = 1099511628211  # FNV prime, reused as the polynomial base
+_POLY_BINV = pow(_POLY_B, -1, 1 << 64)
+_pow_cache: dict[str, np.ndarray] = {}
+
+
+def _pows(n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cached [B^0..B^n] and [Binv^0..Binv^n] as uint64 (wraparound)."""
+    cur = _pow_cache.get("b")
+    if cur is None or len(cur) <= n:
+        m = max(n + 1, 256)
+        b = np.empty(m, dtype=np.uint64)
+        binv = np.empty(m, dtype=np.uint64)
+        b[0] = binv[0] = 1
+        b[1:] = _POLY_B
+        binv[1:] = _POLY_BINV
+        np.multiply.accumulate(b, out=b)
+        np.multiply.accumulate(binv, out=binv)
+        _pow_cache["b"], _pow_cache["binv"] = b, binv
+    return _pow_cache["b"], _pow_cache["binv"]
+
+
+def _prefix_hashes(s: str) -> np.ndarray:
+    """P[0..n] prefix polynomial hashes of s (uint64 wraparound)."""
+    cp = (np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.uint64)
+          + np.uint64(1))
+    n = len(cp)
+    bp, binvp = _pows(n)
+    q = np.multiply(cp, binvp[1 : n + 1])
+    np.add.accumulate(q, out=q)
+    out = np.empty(n + 1, dtype=np.uint64)
+    out[0] = 0
+    np.multiply(q, bp[1 : n + 1], out=out[1:])
+    return out
+
 
 
 def _word_hashes(text: str) -> np.ndarray:
@@ -705,27 +590,16 @@ def ngram_jaccard_pairs(
     (no shingle reaches df 10k in a 200-doc corpus). This operator
     remains the small-scale ground truth; the sketches
     (minhash/simhash) are the 100 TB path."""
-    def shingles(w):
-        n = F.size(w)
-        return F.array_distinct(
-            F.when(
-                n >= k,
-                F.transform(
-                    F.sequence(F.lit(0), n - k),
-                    lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", w)))
-        )
-
     sh = explode_grams(
-        df, normalized_words(text_col), shingles, keep=(F.col(id_col).alias("id"),)
+        df, normalized_words(text_col), lambda w: _word_shingles(w, k),
+        keep=(F.col(id_col).alias("id"),),
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     # the EMPTY shingle ('' — a NULL or empty/whitespace-only doc) is
     # excluded from pair generation unconditionally, like a hot shingle:
     # n empty docs would otherwise form an n^2 jaccard-1.0 clique, and
-    # identical-empty docs are exact_dedup's job, not a similarity
-    # truth set's. Set sizes keep the shingle, consistent with df_cap.
+    # identical empty docs are exact duplicates, not a similarity truth
+    # set's concern. Set sizes keep the shingle, consistent with df_cap.
     joinable = sh.filter(F.col("g") != "")
     if df_cap is not None:
         hot = (

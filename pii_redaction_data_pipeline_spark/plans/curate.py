@@ -85,7 +85,8 @@ class CurationConfig:
     # disables it (every band-join candidate exact-verified — parity
     # with minhash_lsh_pairs' opt-in contract). The default 0.2 trades
     # a quantified ~1e-4 per-pair recall loss just above threshold for
-    # not joining shingle arrays to doomed candidates (dedup.py:162).
+    # not joining shingle arrays to doomed candidates
+    # (dedup._estimate_filter).
     dedup_est_margin: float | None = 0.2
     sample_rate: float = 0.85
     sample_seed: int = 5

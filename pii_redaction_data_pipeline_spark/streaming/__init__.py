@@ -1,5 +1,3 @@
 from pii_redaction_data_pipeline_spark.streaming.ingest import (  # noqa: F401
     run_streaming_pipeline,
-    streaming_dedup_turns,
-    streaming_turn_metrics,
 )

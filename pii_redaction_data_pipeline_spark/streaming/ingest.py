@@ -105,137 +105,3 @@ def run_streaming_pipeline(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Watermarked event-time metrics
-# ---------------------------------------------------------------------------
-
-
-def streaming_turn_metrics(
-    stream_df,
-    output_path: str,
-    checkpoint_dir: str,
-    window_duration: str = "5 minutes",
-    watermark_delay: str = "10 minutes",
-    available_now: bool = True,
-):
-    """Event-time ingestion-rate metrics: per (time-window, role) turn and
-    character counts, with a WATERMARK bounding state and late data.
-
-    This is the streaming analog of the batch lineage totals: each
-    tumbling event-time window emits exactly once (append mode), when the
-    watermark — max event time seen minus `watermark_delay` — passes the
-    window's end. Turns arriving later than the watermark are DROPPED
-    from the aggregation (the documented late-data contract), and window
-    state older than the watermark is evicted, so state stays bounded at
-    10^12-turn scale no matter how long the stream runs. Returns the
-    StreamingQuery.
-    """
-    agg = (
-        stream_df.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration), "role")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.length(F.coalesce(F.col("text"), F.lit("")))).alias("n_chars"),
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "role",
-            "n_turns",
-            "n_chars",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Stateful cross-batch duplicate-turn detection
-# ---------------------------------------------------------------------------
-
-DEDUP_OUTPUT_DDL = "conv_id string, turn_idx int, text_hash long, is_dup boolean"
-DEDUP_STATE_DDL = "hashes array<long>"
-
-
-def streaming_dedup_turns(
-    stream_df,
-    output_path: str,
-    checkpoint_dir: str,
-    max_state_hashes: int = 100_000,
-    available_now: bool = True,
-):
-    """Cross-batch duplicate-turn flags via applyInPandasWithState.
-
-    The batch pipeline's dup-turn window sees one conversation at once;
-    when a conversation's turns arrive across micro-batches, detection
-    needs per-conv state that outlives the batch. State per conv_id is
-    the set of turn-text hashes seen so far (bounded by
-    max_state_hashes; at ~8 B/hash the worst-case state row is ~800 KB),
-    checkpointed by the state store, so a restarted stream resumes with
-    its memory intact — the streaming generalization of the lineage
-    table's resume semantics.
-
-    Inside each group the work is vectorized (hash isin + duplicated on
-    the Arrow batch), no per-row Python. Returns the StreamingQuery.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    hashed = stream_df.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("text_hash"),
-    )
-
-    def flag_dups(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        seen = np.asarray(state.get[0], dtype=np.int64) if state.exists else np.empty(0, np.int64)
-        for pdf in pdfs:
-            pdf = pdf.sort_values("turn_idx", kind="stable")
-            h = pdf["text_hash"].to_numpy(np.int64)
-            in_state = np.isin(h, seen)
-            within = pd.Series(h).duplicated().to_numpy()
-            out = pdf[["conv_id", "turn_idx", "text_hash"]].copy()
-            out["is_dup"] = in_state | within
-            # accumulate BEFORE the next chunk: a group larger than one
-            # Arrow batch (spark.sql.execution.arrow.maxRecordsPerBatch)
-            # arrives as several chunks, and a hash first seen in an
-            # earlier chunk must flag repeats in later chunks of the
-            # same micro-batch
-            seen = np.concatenate([seen, h[~(in_state | within)]])
-            yield out
-        # SATURATION: retention is oldest-first — once a conversation has
-        # max_state_hashes distinct turn texts, NEWER texts are no longer
-        # recorded, so their later repeats go unflagged (permanent false
-        # negatives past the cap). Oldest-first is the deliberate choice:
-        # dup turns in real transcripts overwhelmingly repeat early
-        # boilerplate, and a bounded state row (~8 B/hash) is what keeps
-        # the state store safe at 10^12-turn scale.
-        state.update((seen[:max_state_hashes].tolist(),))
-
-    flagged = hashed.groupBy("conv_id").applyInPandasWithState(
-        flag_dups,
-        DEDUP_OUTPUT_DDL,
-        DEDUP_STATE_DDL,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    writer = (
-        flagged.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

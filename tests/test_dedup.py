@@ -1,5 +1,5 @@
-"""Dedup-operator family: vectorized signature hashing pinned against a
-scalar reference, LSH/simhash recall vs the exact ngram-jaccard ground
+"""Dedup-operator family: simhash's vectorized word hashing pinned against
+a scalar reference, LSH/simhash recall vs the exact ngram-jaccard ground
 truth, and the hot-shingle df_cap guard."""
 
 import os
@@ -13,7 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pii_redaction_data_pipeline_spark.operators.dedup import (
     _POLY_B,
-    _shingle_hashes,
     _word_hashes,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -30,17 +29,6 @@ def _ref_poly(s: str) -> int:
     return h
 
 
-def _ref_shingles(text: str, k: int) -> set[int]:
-    words = text.lower().split()
-    if not words:
-        return {0}
-    if len(words) < k:
-        grams = [" ".join(words)]
-    else:
-        grams = [" ".join(words[i : i + k]) for i in range(len(words) - k + 1)]
-    return {_ref_poly(g) for g in grams}
-
-
 CASES = [
     "the quick brown fox jumps over the lazy dog",
     "one two",
@@ -50,12 +38,6 @@ CASES = [
     "a  b\t c \n d e f g a b c",
     "Ünïcode wörds ärë fine too 日本語 テスト mixed 42",
 ]
-
-
-@pytest.mark.parametrize("text", CASES)
-def test_shingle_hashes_match_scalar_reference(text):
-    got = {int(x) for x in _shingle_hashes(text, 3)}
-    assert got == _ref_shingles(text, 3)
 
 
 @pytest.mark.parametrize("text", CASES)
@@ -103,7 +85,8 @@ def test_minhash_lsh_recalls_exact_pairs(spark):
 
 
 def test_minhash_jaccard_values_match_exact(spark):
-    """The UDF-verified jaccard equals the JVM explode-join jaccard."""
+    """The array_intersect-verified jaccard equals the explode-join
+    jaccard."""
     docs = _docs_df(spark)
     exact = {
         (r.id_a, r.id_b): r.jaccard
@@ -115,6 +98,38 @@ def test_minhash_jaccard_values_match_exact(spark):
     }
     for pair, j in lsh.items():
         assert abs(j - exact[pair]) < 1e-6
+
+
+def test_minhash_words_split_like_ngram_jaccard(spark):
+    """minhash_lsh_pairs and ngram_jaccard_pairs share one word
+    definition: only ASCII whitespace splits, so a no-break space
+    (U+00A0) or an em space (U+2003) stays inside a word for both, and
+    the two operators report the same pairs with the same jaccard."""
+    base = (
+        "the quick brown fox\u00a0jumps over the lazy dog while the rain "
+        "falls\u2003softly on the quiet green meadow"
+    )
+    other = (
+        "customers\u2003order parts from suppliers across several regions "
+        "and every\u00a0order ships with a tracked invoice"
+    )
+    rows = [
+        (0, base),
+        (1, base + " tonight"),
+        (2, other),
+        (3, other.replace("tracked", "signed")),
+    ]
+    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    exact = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in ngram_jaccard_pairs(docs, threshold=0.5, df_cap=None).collect()
+    }
+    lsh = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
+    }
+    assert set(exact) == {(0, 1), (2, 3)}
+    assert lsh == exact
 
 
 def test_simhash_finds_near_identical(spark):
@@ -157,8 +172,8 @@ def test_empty_and_null_text_signatures(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1, 2], "text": ["", None, "hello world"]})
     )
-    # must not raise; empty/null texts produce the sentinel shingle and
-    # never pair with real docs at any positive threshold
+    # must not raise; empty/null texts produce the '' shingle and never
+    # pair with real docs at any positive threshold
     assert minhash_lsh_pairs(docs, jaccard_threshold=0.5).count() <= 1
     assert simhash_pairs(docs, max_hamming=0).count() <= 1
 
@@ -201,11 +216,13 @@ def test_seeded_minhash_components_are_independent(spark):
     component collapsed to the same value and the jaccard estimate for
     any prefix-sharing pair read 0 or 1. Components must (a) differ from
     each other within one signature and (b) agree between two similar
-    conversations at roughly the true jaccard rate."""
+    conversations at roughly the true jaccard rate; (c) the aggregate
+    form minhash_lsh_pairs uses gives the same signatures."""
     from pyspark.sql import functions as F
 
     from pii_redaction_data_pipeline_spark.operators.dedup import (
         _seeded_minhash_sig,
+        _seeded_minhash_sig_agg,
         conversation_turn_shingles,
     )
 
@@ -224,6 +241,12 @@ def test_seeded_minhash_components_are_independent(spark):
     # true jaccard = 32/38 ~ 0.84; 64 components, stderr ~ 0.046 -> the
     # match count must sit WELL inside (all-different, all-equal)
     assert 40 <= matches < 64
+    agg = (
+        sh.select("conv_id", F.explode("shingles").alias("s"))
+        .groupBy("conv_id")
+        .agg(_seeded_minhash_sig_agg("s", 64).alias("sig"))
+    )
+    assert {r.conv_id: r.sig for r in agg.collect()} == {"orig": a, "clone": b}
 
 
 def test_turn_granularity_separates_boilerplate_heavy_convs(spark):
@@ -616,23 +639,6 @@ def test_minhash_bands_must_divide_n_hashes(spark):
             minhash_lsh_pairs(df, **bad)
 
 
-def test_minhash_persist_matches_lazy_path(spark):
-    """persist_signatures=True (the new default: one signature-UDF pass,
-    eager output) must return exactly the lazy plan's pairs."""
-    docs = _docs_df(spark)
-    eager = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.4).collect()
-    }
-    lazy = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(
-            docs, jaccard_threshold=0.4, persist_signatures=False
-        ).collect()
-    }
-    assert eager == lazy and len(eager) > 0
-
-
 def test_band_guard_covers_conversation_path(spark):
     """The bands guard lives in _band_candidates, so the conversation
     near-dup entry point rejects a degenerate banding too (empty
@@ -649,31 +655,11 @@ def test_band_guard_covers_conversation_path(spark):
         conversation_neardup_pairs(df, n_hashes=64, bands=128).collect()
 
 
-def test_minhash_checkpoint_dir_durable_path(spark, tmp_path):
-    """checkpoint_dir spills the verified pairs to shared-storage
-    parquet (executor-loss-safe) and returns the identical pair set."""
-    import os
-
-    docs = _docs_df(spark)
-    cp = str(tmp_path / "mh")
-    durable = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(
-            docs, jaccard_threshold=0.4, checkpoint_dir=cp
-        ).collect()
-    }
-    local = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.4).collect()
-    }
-    assert durable == local and len(durable) > 0
-    assert os.path.exists(os.path.join(cp, "minhash_pairs", "_SUCCESS"))
-
-
 def test_ngram_jaccard_empty_docs_form_no_pairs(spark):
     """NULL / empty / whitespace-only docs share the '' shingle; they
     must NOT pair up as jaccard-1.0 near-dups (n^2 clique) — identical
-    empties are exact_dedup's job. Non-empty pairs are unaffected."""
+    empties are exact duplicates, not near-dups (q_dedup_exact_groups
+    groups them). Non-empty pairs are unaffected."""
     docs = _docs_df(spark)
     planted = spark.createDataFrame(
         pd.DataFrame(

@@ -317,11 +317,12 @@ def test_gram_family_plans_split_once(spark):
     inlined into the generator re-runs the regex per gram
     (O(words^2)/doc, measured 5-6x); an adjacent plain Project gets
     collapsed back into the lambda by CollapseProject. This pins the
-    OPTIMIZED plan of all four consumers."""
+    OPTIMIZED plan of all five consumers."""
     from pii_redaction_data_pipeline_spark.operators.decontaminate import (
         _exploded_gram_frame as dc_grams,
     )
     from pii_redaction_data_pipeline_spark.operators.dedup import (
+        minhash_lsh_pairs,
         ngram_jaccard_pairs,
         repeated_span_dedup,
     )
@@ -334,6 +335,7 @@ def test_gram_family_plans_split_once(spark):
         "decontaminate": dc_grams(docs, "text", 8, keep=(F.col("doc_id"),), outer=True),
         "dsir": dsir_grams(docs, "text", (1, 2), 10_000, keep=(F.col("doc_id"),)),
         "ngram_jaccard": ngram_jaccard_pairs(docs, k=5),
+        "minhash_lsh": minhash_lsh_pairs(docs, shingle_k=5),
         "repeated_span": repeated_span_dedup(docs, k=8, min_docs=2),
     }
     for name, frame in frames.items():
