@@ -60,12 +60,6 @@ class PipelineConfig:
     # conversation-window rules
     tool_loop_min_run: int = 3  # >= this many identical consecutive tool turns
 
-    # D1 text normalization (SURVEY.md §2.8): NFKC + control/zero-width
-    # strip inside the fused UDF, applied before langid/scrub/ppl/stats
-    # and before the dup-detection hash — zero-width-obfuscated PII and
-    # visually-identical dup turns are caught (functions/fused.py)
-    normalize_unicode: bool = True
-
     # Emit the explicit PII entity list column (entities array<struct<
     # text,type,score,begin,end>>, SURVEY.md §1.2) — the reference's
     # Comprehend entity JSON analog (redact.py:158-163), feeding review
@@ -85,5 +79,3 @@ class PipelineConfig:
 
     # execution knobs
     n_buckets: int = 16  # output partition buckets on conv_id
-    salt_buckets: int = 8  # salting factor for skewed conv_id repartition
-    target_partition_bytes: int = 128 * 1024 * 1024

@@ -164,7 +164,7 @@ SCALES: dict[str, Scale] = {
     "tinydup": Scale("tinydup", 21, 25, 0, 0, 6042, dup_conv_every=3),
     # one pathological ~100k-turn conversation among ordinary ones: the
     # skew-torture fixture (VERDICT round-2 item 6) — phase 1 must stay
-    # salted/balanced, phase 2's conv_id window must survive the skew
+    # balanced, phase 2's conv_id window must survive the skew
     "skewtort": Scale("skewtort", 8, 30, 1, 100_000, 7042),
 }
 

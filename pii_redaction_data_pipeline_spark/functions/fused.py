@@ -44,7 +44,6 @@ from pii_redaction_data_pipeline_spark.functions.scrub import MASK_TOKEN_RE
 # compiled from scrub's canonical constant so a mask-format change can
 # never desync the ppl input stripper from what the scrubber emits
 _MASK_RE = re.compile(MASK_TOKEN_RE)
-_WS_RE = re.compile(r"\s+", re.ASCII)
 
 # --- D1 text normalization (SURVEY.md §2.8 D1: the Spark analog of the
 # reference's Textract plain-text extraction, backend/src/lambda/
@@ -126,14 +125,11 @@ ANNOTATE_SCHEMA = T.StructType(
 )
 
 
-def annotate_frame(texts: pd.Series, logp=None, normalize: bool = True) -> pd.DataFrame:
-    if normalize:
-        norm = normalize_series(texts.fillna(""))
-        # delta-encode against the input: NULL means "unchanged"
-        text_norm = norm.where(norm.ne(texts.fillna("")), other=None)
-        texts = norm
-    else:
-        text_norm = pd.Series([None] * len(texts), index=texts.index, dtype=object)
+def annotate_frame(texts: pd.Series, logp=None) -> pd.DataFrame:
+    norm = normalize_series(texts.fillna(""))
+    # delta-encode against the input: NULL means "unchanged"
+    text_norm = norm.where(norm.ne(texts.fillna("")), other=None)
+    texts = norm
     lid = langid_frame(texts)
     scr = scrub_frame(texts)
     if logp is None:
@@ -161,18 +157,18 @@ def annotate_frame(texts: pd.Series, logp=None, normalize: bool = True) -> pd.Da
     )
 
 
-def make_annotate_udf(spark, normalize: bool = True, ppl_model=None):
+def make_annotate_udf(spark, ppl_model=None):
     """pandas UDF: text -> struct<text_norm, lang, lang_conf,
     scrubbed_text, scrub_counts, ppl, rep_frac, n_chars, n_words,
     symbol_ratio>. The KN log-prob table is broadcast once per model
     and context (perplexity.logp_broadcast), so repeated calls (one per
-    micro-batch in a stream) reuse it. With normalize=True (default)
-    every stage sees the D1-normalized text and text_norm carries the
-    normalization delta back to the JVM. Pass ppl_model (a CharTrigramLM, e.g. from
+    micro-batch in a stream) reuse it. Every stage sees the
+    D1-normalized text, and text_norm carries the normalization delta
+    back to the JVM. Pass ppl_model (a CharTrigramLM, e.g. from
     train_char_trigram_lm) to score fluency with a corpus-trained table
     instead of the embedded default — same ~400 KB broadcast either
     way."""
-    # The UDF closure must capture ONLY (bc, normalize) — never
+    # The UDF closure must capture ONLY bc — never
     # ppl_model itself: referencing the model object inside the UDF
     # would cloudpickle its ~470 KB logp ndarray into every task closure
     # IN ADDITION to the broadcast, defeating the broadcast.
@@ -188,9 +184,9 @@ def make_annotate_udf(spark, normalize: bool = True, ppl_model=None):
         # Spark's default maxRecordsPerBatch (10k) already lands in the
         # sweet spot; this guards non-default configs.
         if len(texts) <= _CHUNK_ROWS:
-            return annotate_frame(texts, logp=logp, normalize=normalize)
+            return annotate_frame(texts, logp=logp)
         parts = [
-            annotate_frame(texts.iloc[i : i + _CHUNK_ROWS], logp=logp, normalize=normalize)
+            annotate_frame(texts.iloc[i : i + _CHUNK_ROWS], logp=logp)
             for i in range(0, len(texts), _CHUNK_ROWS)
         ]
         return pd.concat(parts)

@@ -53,8 +53,7 @@ _ALPHA_RE = r"[^\W\d_]"  # unicode letters
 # alternation; a word may belong to several languages (e.g. 'una' is both
 # es and it), so the map is word -> tuple of language indices.
 _ALL_WORDS = sorted({w for ws in STOPWORDS.values() for w in ws})
-_COMBINED_RE = re.compile(r"\b(?:" + "|".join(_ALL_WORDS) + r")\b")
-# capturing variant for re.split: pieces alternate [gap, word, gap, ...],
+# capturing alternation for re.split: pieces alternate [gap, word, gap, ...],
 # giving findall-speed scanning (no per-hit Match objects) with positions
 # recovered from piece lengths
 _COMBINED_SPLIT_RE = re.compile(r"\b(" + "|".join(_ALL_WORDS) + r")\b")

@@ -3,7 +3,8 @@
 Everything expressible with built-in pyspark.sql.functions stays JVM-side
 (whole-stage codegen): lengths, word counts, symbol ratio. Only the
 repetition statistic (fraction of characters covered by the most common
-word 3-gram) needs Python — it runs as a vectorized pandas UDF.
+word 3-gram) needs Python — it runs inside the fused pandas UDF
+(functions/fused.py).
 
 Replaces the reference's implicit success/failure verdict (SURVEY.md D5,
 reference backend/src/lambda/textract-bulk.py:103-105) with explicit,
@@ -12,19 +13,12 @@ thresholded reasons from config.DROP_REASONS.
 
 from __future__ import annotations
 
-import re
 from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# RE2-safe patterns shared with the SQL oracle path
-WORD_SPLIT_RE = r"\s+"
-SYMBOL_RE = r"[^A-Za-z0-9\s]"  # ascii-symbol definition, portable across engines
-NONSPACE_RE = r"\S"
 
 # Java-regex \s / \w are ASCII-only; these literal char sets let the hot
 # path use translate() (single char-map pass, no regex engine, stays in
@@ -170,86 +164,7 @@ def top_ngram_char_frac_series(texts: pd.Series, n: int) -> pd.Series:
 
 
 def repetition_frac_series(texts: pd.Series) -> pd.Series:
-    """The pipeline's repetition gate: the n=3 case of the panel above
-    (kept as a named entry point — its thresholds live in config)."""
+    """The pipeline's repetition gate: the n=3 case of
+    top_ngram_char_frac_series (its threshold lives in config)."""
     return top_ngram_char_frac_series(texts, 3)
 
-
-# --- Gopher repetition panel (the paper's remaining repetition signals) -----
-
-
-def dup_line_frac_col(text: Column, delim: str = "\n") -> Column:
-    """Fraction of lines that repeat an earlier line within the document
-    (Gopher `duplicate_line_fraction`, the public find_duplicates
-    reading: occurrences AFTER the first count, the first copy is
-    content): (n - distinct)/n. Pure JVM array ops — no regex scan, no
-    Python, stays in codegen. NULL text coerces to '' (0.0), never NULL
-    — a NULL fraction silently escapes threshold comparisons (the
-    NULL-escape hazard text_stats_frame documents above)."""
-    lines = F.split(F.coalesce(text, F.lit("")), re.escape(delim))
-    n = F.size(lines)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        (n - F.size(F.array_distinct(lines))).cast("double") / n.cast("double")
-    )
-
-
-def dup_line_char_frac_col(text: Column, delim: str = "\n") -> Column:
-    """Fraction of characters inside EXCESS occurrences of duplicated
-    lines over total text length (Gopher
-    `duplicate_line_character_fraction` as the public implementations
-    compute it: for each line seen before, its chars count; the FIRST
-    copy is content, not duplication; the denominator is len(text),
-    delimiters included).
-
-    O(L log L) per document: sort the line array once, then one
-    adjacent-equality pass over the sorted copy — every occurrence of a
-    line beyond its first sits next to a twin, so `zip_with(sorted[:-1],
-    sorted[1:], ...)` charges exactly the excess copies. No nested
-    quadratic scan (a 10^6-line scraped log document must not stall a
-    task), zero Python, zero shuffle. NULL text coerces to '' (0.0),
-    matching dup_line_frac_col."""
-    t = F.coalesce(text, F.lit(""))
-    lines = F.array_sort(F.split(t, re.escape(delim)))
-    m = F.greatest(F.size(lines) - 1, F.lit(0))
-    dup_chars = F.aggregate(
-        F.zip_with(
-            F.slice(lines, 1, m),
-            F.slice(lines, 2, m),
-            lambda a, b: F.when(a == b, F.length(b)).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    total = F.length(t)
-    return F.when(total <= 0, F.lit(0.0)).otherwise(
-        dup_chars.cast("double") / total.cast("double")
-    )
-
-
-def make_top_ngram_udf(n: int):
-    @F.pandas_udf(T.DoubleType())
-    def top_ngram_udf(texts: pd.Series) -> pd.Series:
-        return top_ngram_char_frac_series(texts, n)
-
-    return top_ngram_udf
-
-
-def with_repetition_columns(
-    df: DataFrame,
-    text_col: str = "text",
-    ns: tuple[int, ...] = (2, 3, 4),
-    delim: str = "\n",
-) -> DataFrame:
-    """Full Gopher repetition panel: dup_line_frac and
-    dup_line_char_frac (JVM array expressions) plus
-    top_{n}gram_char_frac for each n in ns. The n-gram columns are
-    pandas UDFs, but Spark batches every pandas UDF in one projection
-    into a SINGLE ArrowEvalPython stage, so the panel costs one Arrow
-    exchange regardless of len(ns)."""
-    text = F.col(text_col)
-    out = df.withColumn("dup_line_frac", dup_line_frac_col(text, delim)).withColumn(
-        "dup_line_char_frac", dup_line_char_frac_col(text, delim)
-    )
-    for n in ns:
-        out = out.withColumn(f"top_{n}gram_char_frac", make_top_ngram_udf(n)(text))
-    return out

@@ -84,12 +84,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "conversation_verdict)",
     )
     p.add_argument(
-        "--no-normalize-unicode",
-        action="store_true",
-        help="disable the D1 NFKC/zero-width normalization stage "
-        "(on by default; see functions/fused.py normalize_text)",
-    )
-    p.add_argument(
         "--train-ppl-on-corpus",
         action="store_true",
         help="fit the KN perplexity model on the input corpus itself "
@@ -133,8 +127,6 @@ def build_config(args: argparse.Namespace):
         overrides["max_ppl"] = args.max_ppl
     if args.drop_original_text:
         overrides["retain_original_text"] = False
-    if args.no_normalize_unicode:
-        overrides["normalize_unicode"] = False
     if args.train_ppl_on_corpus:
         overrides["train_ppl_on_corpus"] = True
     return dataclasses.replace(PipelineConfig(), **overrides) if overrides else PipelineConfig()

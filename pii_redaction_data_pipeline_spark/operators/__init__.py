@@ -1,6 +1,5 @@
 from pii_redaction_data_pipeline_spark.operators.windows import (
     with_conversation_flags,
 )
-from pii_redaction_data_pipeline_spark.operators.skew import salted_repartition
 
-__all__ = ["with_conversation_flags", "salted_repartition"]
+__all__ = ["with_conversation_flags"]

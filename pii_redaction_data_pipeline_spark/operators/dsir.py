@@ -146,30 +146,11 @@ def _collect_totals(totals: DataFrame) -> tuple[int, int, int]:
 
 
 def _log_ratio(ct: F.Column, cr: F.Column, t: int, r: int, v: int, alpha: float) -> F.Column:
+    """Per-gram smoothed log p_tgt(g)/p_raw(g), add-alpha over the UNION
+    vocabulary V:  log (c_tgt+a)/(T+aV) - log (c_raw+a)/(R+aV)."""
     a = F.lit(float(alpha))
     return F.log((ct + a) / F.lit(t + alpha * v)) - F.log(
         (cr + a) / F.lit(r + alpha * v)
-    )
-
-
-def gram_log_ratios(
-    target: DataFrame,
-    raw: DataFrame,
-    text_col: str = "text",
-    ns: Sequence[int] = (1, 2),
-    alpha: float = 1.0,
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """-> (g, log_ratio): per-gram-key smoothed log p_tgt(g)/p_raw(g).
-
-    Smoothing is add-alpha over the UNION vocabulary V (full-outer join
-    of the two count tables):  log (c_tgt+a)/(T+aV) - log (c_raw+a)/(R+aV).
-    Building this frame runs ONE bounded job (3 scalar totals).
-    """
-    stats, totals = _stats_and_totals(target, raw, text_col, ns, n_buckets)
-    t, r, v = _collect_totals(totals)
-    return stats.select(
-        "g", _log_ratio(F.col("ct"), F.col("cr"), t, r, v, alpha).alias("log_ratio")
     )
 
 

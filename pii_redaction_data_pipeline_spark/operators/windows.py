@@ -13,8 +13,9 @@ generalizes these to stable (conv_id, turn_idx) windows with two rules:
   run drop (agent/tool-loop filtering).
 
 Pure Window algebra — no Python UDFs. Requires conv_id-partitioned data;
-callers repartition by conv_id (unsalted) before applying, see
-plans.pipeline (two-phase: salted for turn-level stages, unsalted here).
+callers repartition by conv_id before applying, see plans.pipeline
+(two-phase: turn-level stages hashed on (conv_id, turn_idx), conv_id
+alone here).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ def with_conversation_flags(
     `hash_col` names a precomputed xxhash64(normalized text) column —
     callers that drop the raw text before the conv_id shuffle
     (cfg.retain_original_text=False) compute the hash upstream on the
-    salted partitioning and pass it here.
+    phase-1 partitioning and pass it here.
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     h = F.col(hash_col) if hash_col else F.xxhash64(_norm_text(F.col(text_col)))

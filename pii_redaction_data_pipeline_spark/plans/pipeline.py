@@ -16,7 +16,8 @@ Scale notes (the plan you'd want at 100 TB):
     conv_id locality is cheap window algebra.
   * One conv_id shuffle feeds the windows; verdicts and writes reuse its
     partitioning. A scan with enough splits pays only that one; a
-    few-split scan pays a salted repartition before the UDF as well.
+    few-split scan also pays a repartition hashed on the row key
+    (conv_id, turn_idx) before the UDF.
   * The conv_id exchange count is aligned with the output buckets
     (sources/tables.aligned_partitions): the bucket is Spark's shuffle
     hash of conv_id, so every write task holds whole buckets and the
@@ -36,7 +37,6 @@ from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark.config import PipelineConfig
 from pii_redaction_data_pipeline_spark.functions.fused import make_annotate_udf
-from pii_redaction_data_pipeline_spark.operators.skew import salted_repartition
 from pii_redaction_data_pipeline_spark.operators.windows import (
     _norm_text,
     with_conversation_flags,
@@ -52,7 +52,7 @@ from pii_redaction_data_pipeline_spark.sources.tables import (
 def tune_shuffle_partitions(
     spark: SparkSession,
     df: DataFrame,
-    target_partition_bytes: int = 256 * 1024 * 1024,
+    target_partition_bytes: int = 128 * 1024 * 1024,
 ) -> int:
     """Size spark.sql.shuffle.partitions to the actual input volume.
 
@@ -83,24 +83,22 @@ def annotate(
     """transcripts -> annotated (adds lang, lang_conf, ppl, heuristic cols,
     keep, drop_reasons, scrubbed_text, scrub_counts).
 
-    One plan: the fused UDF on the scan's splits (salted repartition
-    first only when the scan has too few), then the `conv_id` shuffle
-    for the conversation windows, then the verdict. `ppl_model` is the
-    fluency model to score with; the embedded default when None. With
-    cfg.train_ppl_on_corpus the caller fits it first, on the FULL input
-    (run_pipeline: load_or_train_char_trigram_lm), so ValueError when it
-    is missing: a model fitted on whatever frame reaches annotate (a
-    resume remainder, a micro-batch) would make ppl and keep/drop depend
-    on how the input was split."""
+    One plan: the fused UDF on the scan's splits (hash-repartitioned on
+    (conv_id, turn_idx) first only when the scan has too few), then the
+    `conv_id` shuffle for the conversation windows, then the verdict.
+    `ppl_model` is the fluency model to score with; the embedded default
+    when None. With cfg.train_ppl_on_corpus the caller fits it first, on
+    the FULL input (run_pipeline: load_or_train_char_trigram_lm), so
+    ValueError when it is missing: a model fitted on whatever frame
+    reaches annotate (a resume remainder, a micro-batch) would make ppl
+    and keep/drop depend on how the input was split."""
     if cfg.train_ppl_on_corpus and ppl_model is None:
         raise ValueError(
             "cfg.train_ppl_on_corpus needs a pre-fitted ppl_model "
             "(train_char_trigram_lm / load_or_train_char_trigram_lm over "
             "the full input)"
         )
-    fused_udf = make_annotate_udf(
-        spark, normalize=cfg.normalize_unicode, ppl_model=ppl_model
-    )
+    fused_udf = make_annotate_udf(spark, ppl_model=ppl_model)
 
     # normalize NULL text to '' up front: every downstream rule treats ''
     # as droppable (too_short), whereas raw NULLs would propagate through
@@ -128,29 +126,28 @@ def annotate(
     # partitions, pipelined in the same stage — shuffling 100 TB just to
     # rearrange rows that are processed independently would be the
     # single biggest waste in the plan. Only a degenerate layout (few
-    # fat splits < target, e.g. one local file) pays a salted conv_id
-    # repartition with an EXPLICIT partition count — explicit so AQE's
-    # advisory coalescing can't shrink the exchange below the core
-    # count, salted so a skewed 30k-turn conversation spreads across
-    # workers (safe: these stages are strictly per-row).
+    # fat splits < target, e.g. one local file) pays a repartition
+    # hashed on the row key (conv_id, turn_idx) with an EXPLICIT
+    # partition count — explicit so AQE's advisory coalescing can't
+    # shrink the exchange below the core count. The hash is a
+    # deterministic function of the row (a nondeterministic key can
+    # lose or duplicate rows when a fetch failure forces a partial
+    # map-stage recompute, the SPARK-23207 class), and it spreads a
+    # skewed 30k-turn conversation over every partition (safe: these
+    # stages are strictly per-row).
     # Volume-tuned shuffle partitions (run_pipeline sets the conf via
     # tune_shuffle_partitions), floored at the core count so AQE
     # coalescing and tiny inputs can't under-parallelize the exchange.
     # The floor is one wave, not two: every Python task pays a fixed
     # ~0.25 s before its first row (SCALE.md, "The cost of a Python
-    # task"), and the salted rows are already balanced by the hash, so
-    # a second wave of smaller tasks only adds that fixed cost.
+    # task"), and the hashed rows are already balanced, so a second
+    # wave of smaller tasks only adds that fixed cost.
     n_parts = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
     )
     if df.rdd.getNumPartitions() < n_parts:
-        # (conv_id, turn_idx) is the per-row discriminator: hashing
-        # it salts deterministically without touching the text bytes
-        df = salted_repartition(
-            df, salt_buckets=cfg.salt_buckets, num_partitions=n_parts,
-            salt_cols=["conv_id", "turn_idx"],
-        )
+        df = df.repartition(n_parts, "conv_id", "turn_idx")
 
     # --- narrow, Arrow-batched stages (no shuffle) ---
     # ONE fused pandas UDF (langid + scrub + ppl-on-stripped-scrubbed +
@@ -192,10 +189,10 @@ def annotate(
 
         df = df.withColumn("entities", make_entities_udf()(F.col("text")))
 
-    # --- conversation windows: phase 2, the unsalted conv_id shuffle ---
+    # --- conversation windows: phase 2, the conv_id shuffle ---
     # (explicit count again so AQE can't coalesce the five window sorts
     # onto a handful of cores). The dup-detection text hash is computed
-    # HERE, on the salted partitioning, so the raw text column need not
+    # HERE, on the phase-1 partitioning, so the raw text column need not
     # survive into the shuffle when retain_original_text=False (the
     # reference's retain_orig_docs=false: originals deleted after
     # redaction, redact.py:240-243) — that halves phase-2 shuffle and
@@ -413,7 +410,7 @@ def run_pipeline(
     lineage = LineageStore(spark, lineage_path)
 
     src = io.read(input_path)
-    tune_shuffle_partitions(spark, src, cfg.target_partition_bytes)
+    tune_shuffle_partitions(spark, src)
     src = with_bucket(src, cfg.n_buckets)
 
     done = set(lineage.completed_buckets(run_id))

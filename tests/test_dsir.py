@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pii_redaction_data_pipeline_spark.operators.dsir import (
     dsir_select,
     dsir_weights,
-    gram_log_ratios,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -97,15 +96,19 @@ class TestDsirWeights:
         # unseen ratio is log(R+aV)-log(T+aV) = 0 here (target==raw)
         assert rows[1]["weight"] == pytest.approx(0.0, abs=1e-9)
 
-    def test_gram_log_ratios_smoothing(self, spark):
+    def test_add_alpha_smoothing_hand_values(self, spark):
         target = spark.createDataFrame([("a a b",)], "text string")
         raw = spark.createDataFrame([("a b b",)], "text string")
-        lr = {r["g"]: r["log_ratio"] for r in gram_log_ratios(
-            target, raw, ns=(1,)).collect()}
-        # vocab {a, b}: T=R=3, V=2 -> ratio for 'a' = log(3/5)-log(2/5)
-        a_key = [k for k in lr if abs(lr[k] - math.log(3 / 2)) < 1e-12]
-        b_key = [k for k in lr if abs(lr[k] - math.log(2 / 3)) < 1e-12]
-        assert len(a_key) == 1 and len(b_key) == 1
+        corpus = spark.createDataFrame(
+            [(0, "a"), (1, "b"), (2, "a b a")], "doc_id long, text string"
+        )
+        w = {r["doc_id"]: r["weight"] for r in dsir_weights(
+            corpus, target, raw=raw, ns=(1,), round_to=None).collect()}
+        # vocab {a, b}: T=R=3, V=2 -> ratio for 'a' = log(3/5)-log(2/5),
+        # for 'b' = log(2/5)-log(3/5); a document sums its grams' ratios
+        assert w[0] == pytest.approx(math.log(3 / 2), abs=1e-12)
+        assert w[1] == pytest.approx(math.log(2 / 3), abs=1e-12)
+        assert w[2] == pytest.approx(math.log(3 / 2), abs=1e-12)
 
 
 class TestDsirSelect:

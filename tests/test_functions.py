@@ -346,7 +346,8 @@ def test_annotate_calls_share_one_logp_broadcast(spark, tiny):
 
 
 class TestGopherRepetitionPanel:
-    """dup_line_frac / dup_line_char_frac (JVM) + top_ngram_char_frac."""
+    """top_ngram_char_frac, the Gopher repetition signal the fused UDF
+    gates on (n=3)."""
 
     def test_top_ngram_series_hand_values(self):
         import pandas as pd
@@ -361,59 +362,10 @@ class TestGopherRepetitionPanel:
         # 3-gram ties (x,y,x) vs (y,x,y) resolve first-seen: 2 * 5 / 11
         assert top_ngram_char_frac_series(t, 3).iloc[0] == pytest.approx(10 / 11)
         assert top_ngram_char_frac_series(t, 4).iloc[0] == 1.0  # capped
-        # the pipeline gate is exactly the n=3 panel entry
+        # the pipeline gate is exactly the n=3 case
         assert repetition_frac_series(t).equals(top_ngram_char_frac_series(t, 3))
         short = pd.Series(["one two", ""])
         assert (top_ngram_char_frac_series(short, 3) == 0.0).all()
-
-    def test_dup_line_fracs_jvm(self, spark):
-        from pii_redaction_data_pipeline_spark.functions.quality import (
-            with_repetition_columns,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "a b\na b\nc"), (2, "u\nv\nw"), (3, ""), (4, None),
-             (5, "x\nx\nx\nyyyy")],
-            ["doc_id", "text"],
-        )
-        rows = {
-            r["doc_id"]: r
-            for r in with_repetition_columns(df, ns=(2,)).collect()
-        }
-        # excess-occurrence semantics (find_duplicates): the first copy
-        # of "a b" is content, the second is duplication -> 3 chars of 9
-        # total (len(text), newlines included)
-        assert rows[1]["dup_line_frac"] == pytest.approx(1 / 3)
-        assert rows[1]["dup_line_char_frac"] == pytest.approx(3 / 9)
-        assert rows[2]["dup_line_frac"] == 0.0
-        assert rows[2]["dup_line_char_frac"] == 0.0
-        # empty text -> one empty line, no duplicates, zero chars
-        assert rows[3]["dup_line_frac"] == 0.0
-        assert rows[3]["dup_line_char_frac"] == 0.0
-        # NULL text coerces to '' — never a NULL fraction that would
-        # silently escape a threshold comparison
-        assert rows[4]["dup_line_frac"] == 0.0
-        assert rows[4]["dup_line_char_frac"] == 0.0
-        # triple occurrence charges TWO excess copies: 2 of 10 chars
-        assert rows[5]["dup_line_frac"] == pytest.approx(2 / 4)
-        assert rows[5]["dup_line_char_frac"] == pytest.approx(2 / 10)
-
-    def test_panel_is_one_arrow_stage(self, spark):
-        """All three n-gram UDF columns must batch into a single
-        ArrowEvalPython stage, and the line fractions must stay out of
-        Python entirely."""
-        from pii_redaction_data_pipeline_spark.functions.quality import (
-            with_repetition_columns,
-        )
-
-        df = spark.createDataFrame([(1, "a b\na b")], ["doc_id", "text"])
-        plan = (
-            with_repetition_columns(df)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("ArrowEvalPython") == 1, plan[:1500]
 
 
 def test_ru_confidence_clipped_to_probability():

@@ -27,13 +27,6 @@ def test_parse_and_config_overrides():
     assert cfg.max_ppl == 25.5
     # defaults untouched
     assert cfg.min_words == 3
-    assert cfg.normalize_unicode is True
-
-    args2 = job.parse_args(
-        ["--input", "/i", "--output", "/o", "--lineage", "/l",
-         "--no-normalize-unicode"]
-    )
-    assert job.build_config(args2).normalize_unicode is False
 
 
 def test_pyfiles_zip_self_contained(tmp_path):
@@ -47,7 +40,7 @@ def test_pyfiles_zip_self_contained(tmp_path):
     for mod in (
         "plans/pipeline.py", "functions/fused.py", "functions/scrub.py",
         "functions/langid.py", "functions/perplexity.py", "functions/quality.py",
-        "operators/windows.py", "operators/skew.py", "sources/tables.py",
+        "operators/windows.py", "sources/tables.py",
         "sources/lineage.py", "job.py", "session.py", "config.py",
     ):
         assert f"pii_redaction_data_pipeline_spark/{mod}" in names, mod

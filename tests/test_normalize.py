@@ -49,12 +49,6 @@ def test_text_norm_is_null_when_unchanged():
     assert out["text_norm"].iloc[1] == "zwsp"
 
 
-def test_normalize_false_passthrough():
-    out = annotate_frame(pd.Series([f"zw{ZWSP}sp"]), normalize=False)
-    assert out["text_norm"].iloc[0] is None
-    assert ZWSP in out["scrubbed_text"].iloc[0]
-
-
 def test_visually_identical_turns_dedup_in_pipeline(spark):
     """Two turns identical after normalization must be flagged as
     duplicate_turn — the round-1 evasion hole."""

@@ -81,9 +81,9 @@ def _transcript_src(spark):
 
 def test_pipeline_exchange_budget_degenerate_scan(spark):
     """A degenerate (few-split) scan pays exactly the two designed
-    exchanges: the salted phase-1 repartition + the conv_id repartition;
-    the window stack must reuse the conv_id partitioning rather than
-    re-shuffling per window spec."""
+    exchanges: the phase-1 (conv_id, turn_idx) repartition + the conv_id
+    repartition; the window stack must reuse the conv_id partitioning
+    rather than re-shuffling per window spec."""
     from pii_redaction_data_pipeline_spark.config import PipelineConfig
     from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
 
@@ -96,12 +96,13 @@ def test_pipeline_exchange_budget_degenerate_scan(spark):
 
 
 def test_pipeline_one_wave_on_one_split(spark):
-    """A one-split input is salted into exactly one wave of tasks: the
-    salted exchange has defaultParallelism partitions, not 2x that, and
-    the conv_id exchange its bucket-aligned count (defaultParallelism
-    itself when the core count divides n_buckets). Every Python task
-    pays a fixed ~0.25 s before its first row (SCALE.md), so a second
-    wave of balanced, hash-salted tasks would only add that cost."""
+    """A one-split input is hashed on (conv_id, turn_idx) into exactly
+    one wave of tasks: the phase-1 exchange has defaultParallelism
+    partitions, not 2x that, and the conv_id exchange its bucket-aligned
+    count (defaultParallelism itself when the core count divides
+    n_buckets). Every Python task pays a fixed ~0.25 s before its first
+    row (SCALE.md), so a second wave of balanced, hashed tasks would
+    only add that cost."""
     from pii_redaction_data_pipeline_spark.config import PipelineConfig
     from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
     from pii_redaction_data_pipeline_spark.sources.tables import (
@@ -119,10 +120,10 @@ def test_pipeline_one_wave_on_one_split(spark):
         plan = plan_of(annotate(one, cfg, spark))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    salted = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, [^)]*_salt[^)]*, (\d+)\)", plan)
+    phase1 = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, (\d+)\)", plan)
     conv_only = re.findall(r"Exchange hashpartitioning\(conv_id#\d+, (\d+)\)", plan)
-    assert salted and conv_only, plan[:2000]
-    assert {int(n) for n in salted} == {cores}, (salted, cores)
+    assert phase1 and conv_only, plan[:2000]
+    assert {int(n) for n in phase1} == {cores}, (phase1, cores)
     assert {int(n) for n in conv_only} == {aligned_partitions(cores, cfg.n_buckets)}
 
 
@@ -139,12 +140,13 @@ def test_pipeline_adaptive_skips_phase1(spark):
     # one from the test's own repartition(64)
     n_hash = len(re.findall(r"\bExchange hashpartitioning", plan))
     assert n_hash == 1, f"expected 1 hash exchange, got {n_hash}:\n{plan[:2000]}"
-    assert "_salt" not in plan
+    assert not re.search(r"hashpartitioning\(conv_id#\d+, turn_idx#", plan)
 
 
 def test_pipeline_python_before_shuffle(spark):
-    """The fused UDF must run under the SALTED partitioning (before the
-    conv_id exchange), so skewed conversations can't stall UDF tasks."""
+    """The fused UDF must run under the (conv_id, turn_idx) partitioning
+    (before the conv_id exchange), so skewed conversations can't stall
+    UDF tasks."""
     from pii_redaction_data_pipeline_spark.config import PipelineConfig
     from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
 
@@ -159,15 +161,21 @@ def test_pipeline_python_before_shuffle(spark):
     plan = plan_of(annotate(src, PipelineConfig(), spark))
     # in executedPlan text, operators print top-down (sink first): the
     # conv_id-only exchange must appear ABOVE the python eval, which in
-    # turn sits above the salted (conv_id + salt) exchange
+    # turn sits above the phase-1 (conv_id, turn_idx) exchange
     py = plan.index("ArrowEvalPython")
-    salted = [m.start() for m in re.finditer(r"Exchange hashpartitioning\(conv_id[^)]*_salt", plan)]
+    cores = spark.sparkContext.defaultParallelism
+    phase1 = [
+        m.start()
+        for m in re.finditer(
+            rf"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, {cores}\)", plan
+        )
+    ]
     conv_only = [
         m.start()
         for m in re.finditer(r"Exchange hashpartitioning\(conv_id#\d+, \d+\)", plan)
     ]
-    assert salted and conv_only, plan[:2000]
-    assert conv_only[0] < py < salted[0], (conv_only, py, salted)
+    assert phase1 and conv_only, plan[:2000]
+    assert conv_only[0] < py < phase1[0], (conv_only, py, phase1)
 
 
 def test_tune_shuffle_partitions(spark):

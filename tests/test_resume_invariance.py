@@ -3,14 +3,13 @@
 Generalizes the reference's status-driven incremental progress loop
 (textract-bulk.py:108-118): a killed run must resume from the lineage
 checkpoint and produce byte-identical results; results must not depend
-on input partition count or salting.
+on the input's partitioning.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark.config import PipelineConfig
-from pii_redaction_data_pipeline_spark.operators.skew import salted_repartition
 from pii_redaction_data_pipeline_spark.plans.pipeline import annotate, run_pipeline
 
 
@@ -51,7 +50,7 @@ def test_kill_and_resume_identical(spark, tiny, tmp_path):
 
 def test_partition_count_invariance(spark, tiny):
     """Also pins the ADAPTIVE phase-1 both ways: 2 partitions < cores
-    takes the salted-repartition path, 37 >= cores skips phase 1
+    takes the (conv_id, turn_idx) repartition, 37 >= cores skips phase 1
     entirely — identical results either way."""
     cfg = PipelineConfig()
     src = spark.read.parquet(tiny[0])
@@ -60,11 +59,13 @@ def test_partition_count_invariance(spark, tiny):
     assert _fingerprint(a) == _fingerprint(b)
 
 
-def test_salting_invariance(spark, tiny):
-    """Salted repartition (turn-level stages) must not change results —
-    guards the two-phase skew refactor."""
+def test_row_key_repartition_invariance(spark, tiny):
+    """Input already hashed on annotate's phase-1 key (conv_id,
+    turn_idx), or on conv_id alone so that every conversation runs whole
+    in one UDF task, must not change results."""
     cfg = PipelineConfig()
     src = spark.read.parquet(tiny[0])
     a = annotate(src, cfg, spark)
-    b = annotate(salted_repartition(src, salt_buckets=8), cfg, spark)
-    assert _fingerprint(a) == _fingerprint(b)
+    b = annotate(src.repartition(8, "conv_id", "turn_idx"), cfg, spark)
+    c = annotate(src.repartition(37, "conv_id"), cfg, spark)
+    assert _fingerprint(a) == _fingerprint(b) == _fingerprint(c)
