@@ -104,8 +104,6 @@ def ppl_input_series(scrubbed: pd.Series) -> pd.Series:
     return scrubbed.map(strip_one)
 
 
-_CHUNK_ROWS = 8192
-
 ANNOTATE_SCHEMA = T.StructType(
     [
         # normalized text, DELTA-ENCODED: NULL when identical to the
@@ -176,19 +174,9 @@ def make_annotate_udf(spark, ppl_model=None):
 
     @F.pandas_udf(ANNOTATE_SCHEMA)
     def annotate_udf(texts: pd.Series) -> pd.DataFrame:
-        logp = bc.value
-        # sub-chunk oversized Arrow batches: the batch-wide numpy
-        # temporaries are the UDF's memory footprint, and beyond ~10k
-        # rows the fresh-page cost of each big temp dominates (measured
-        # 2x wall on a 61k-row batch vs the same rows in 8k chunks).
-        # Spark's default maxRecordsPerBatch (10k) already lands in the
-        # sweet spot; this guards non-default configs.
-        if len(texts) <= _CHUNK_ROWS:
-            return annotate_frame(texts, logp=logp)
-        parts = [
-            annotate_frame(texts.iloc[i : i + _CHUNK_ROWS], logp=logp)
-            for i in range(0, len(texts), _CHUNK_ROWS)
-        ]
-        return pd.concat(parts)
+        # one Arrow batch per call: its size, capped by get_spark's
+        # arrow.maxRecordsPerBatch (10k rows), bounds the batch-wide
+        # numpy temporaries that are the UDF's memory footprint
+        return annotate_frame(texts, logp=bc.value)
 
     return annotate_udf

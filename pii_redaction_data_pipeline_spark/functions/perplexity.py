@@ -310,14 +310,13 @@ def load_or_train_char_trigram_lm(
 def _artifact_committed(spark, artifact_path: str) -> bool:
     """True iff `artifact_path/_SUCCESS` exists — checked through the
     Hadoop FileSystem API so the probe works on any storage the session
-    can write to (local, HDFS, object stores), not just the local FS."""
-    try:
-        from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
+    can write to (local, HDFS, object stores), not just the local FS. A
+    probe error propagates: reading it as "absent" would refit and
+    overwrite the run's committed model artifact."""
+    from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
 
-        _, fs, p = hadoop_fs(spark, artifact_path + "/_SUCCESS")
-        return bool(fs.exists(p))
-    except Exception:
-        return False
+    _, fs, p = hadoop_fs(spark, artifact_path + "/_SUCCESS")
+    return bool(fs.exists(p))
 
 
 def make_ppl_udf(spark, model: CharTrigramLM | None = None):

@@ -28,7 +28,8 @@ chain graphs and never materializes a component in one task, so a
 
 Driver-side work per round is a single `count()` (the convergence
 check); `localCheckpoint` truncates the lineage so round k's plan does
-not replay rounds 1..k-1.
+not replay rounds 1..k-1. Every step orders ids with least/greatest/min,
+so any orderable id type works as is: the labels keep the input's type.
 """
 
 from __future__ import annotations
@@ -37,25 +38,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-_INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
-
-
-def _require_integral_ids(df: DataFrame, cols, where: str) -> None:
-    """Reject non-integral id columns LOUDLY. cast('long') on a string
-    id (e.g. a UUID) yields NULL for every row, the u != v filter then
-    drops every edge, and dedup_representatives' `is_rep` evaluates to
-    NULL — so the documented downstream `.filter('is_rep')` would
-    silently return an EMPTY corpus. Callers with string ids map them to
-    numerics first (the plans/curate.py pattern: xxhash64 the string,
-    pick representatives hash-independently afterwards)."""
-    types = dict(df.dtypes)
-    bad = [c for c in cols if types.get(c) not in _INTEGRAL_TYPES]
-    if bad:
+def _require_same_id_type(a: DataFrame, col_a: str, b: DataFrame, col_b: str) -> None:
+    """Raise on id columns of different types. The labels keep the
+    input's type and order (string ids compare as strings), so two
+    columns that disagree have no common minimum to label with."""
+    ta, tb = a.schema[col_a].dataType, b.schema[col_b].dataType
+    if ta != tb:
         raise ValueError(
-            f"{where} needs integral id columns; got "
-            f"{[(c, types.get(c)) for c in bad]} — hash string ids to "
-            "long first (see plans/curate.py dedup_survivor_convs)"
+            f"id columns must share one type; got {col_a} "
+            f"{ta.simpleString()} and {col_b} {tb.simpleString()}"
         )
+
+
+def _both_ways(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+    """(u, v) -> every edge in both orientations, from ONE read of
+    `edges` (a union of the two orientations would run its plan twice)."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(u).alias("u"), F.col(v).alias("v")),
+                F.struct(F.col(v).alias("u"), F.col(u).alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -88,27 +93,29 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _driver_components(spark, edges_pdf):
+def _driver_components(spark, edges_pdf, id_type: str):
     """Union-find on a collected edge frame — the small-graph fast path.
 
     Takes a two-column pandas frame (u, v) from toPandas(): Arrow ships
-    the edges as two int64 arrays (~16 B/edge) instead of per-edge
-    Python Row objects (~100+ B each at the 1M-edge threshold)."""
-    parent: dict[int, int] = {}
+    the edges as two columns instead of per-edge Python Row objects
+    (~100+ B each at the 1M-edge threshold). Python's min over str is
+    code-point order, which is Spark's UTF-8 byte order, so both paths
+    pick the same minimum for string ids too."""
+    parent: dict = {}
 
-    def find(x: int) -> int:
+    def find(x):
         parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    for a, b in zip(edges_pdf["u"].to_numpy(), edges_pdf["v"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
+    for a, b in zip(edges_pdf["u"].tolist(), edges_pdf["v"].tolist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "id long, component_id long")
+    return spark.createDataFrame(rows, f"id {id_type}, component_id {id_type}")
 
 
 def connected_components(
@@ -122,14 +129,16 @@ def connected_components(
     """Components of the undirected graph given as a pair list.
 
     Returns (id, component_id) for every node that appears in `pairs`,
-    where component_id is the minimum node id in the component.
-    Isolated docs (no pair) are absent — callers left-join and coalesce
-    to the doc's own id (see `dedup_representatives`).
+    where component_id is the minimum node id in the component, in the
+    ids' own type and order: string ids (conversation ids, UUIDs) label
+    with their string minimum. `src` and `dst` of different types raise
+    ValueError. Isolated docs (no pair) are absent — callers left-join
+    and coalesce to the doc's own id (see `dedup_representatives`).
 
     Adaptive strategy, same shape as Catalyst's broadcast-join choice:
-    an edge set at or below `small_graph_threshold` (≤ ~16 MB collected
-    — near-dup pair lists are tiny relative to their corpus) is solved
-    driver-side with union-find in one collect; larger graphs run the
+    an edge set at or below `small_graph_threshold` (≤ ~16 MB of long
+    ids collected — near-dup pair lists are tiny relative to their
+    corpus) is solved driver-side with union-find in one collect; larger graphs run the
     distributed alternating-star rounds. Both paths produce identical
     labels (pinned by tests). Pass small_graph_threshold=0 to force the
     distributed path.
@@ -144,10 +153,9 @@ def connected_components(
     passes a shared-storage directory: round frames spill to parquet
     there instead (one write+read of the contracting edge set per
     round), so the star rounds survive executor loss — the same
-    contract dedup_survivor_convs documents for its shingle/pair
-    frames.
+    contract dedup_survivor_convs documents for its shingle frame.
     """
-    _require_integral_ids(pairs, (src, dst), "connected_components")
+    _require_same_id_type(pairs, src, pairs, dst)
 
     seq = iter(range(10_000))
 
@@ -158,12 +166,10 @@ def connected_components(
         frame.write.mode("overwrite").parquet(path)
         return frame.sparkSession.read.parquet(path)
 
-    e = pairs.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    ).filter(F.col("u") != F.col("v"))
     # symmetric closure once up front; the star steps keep it oriented
-    edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    edges = mat(edges.distinct())
+    edges = mat(
+        _both_ways(pairs, src, dst).filter(F.col("u") != F.col("v")).distinct()
+    )
 
     if small_graph_threshold > 0:
         # the checkpoint above already materialized the edge set, so
@@ -173,13 +179,12 @@ def connected_components(
             return _driver_components(
                 edges.sparkSession,
                 edges.filter(F.col("u") < F.col("v")).toPandas(),
+                pairs.schema[src].dataType.simpleString(),
             )
 
     prev_sig = None
     for _ in range(max_iter):
-        ls = _large_star(edges)
-        sym = ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        nxt = mat(_small_star(sym))
+        nxt = mat(_small_star(_both_ways(_large_star(edges))))
         # converged when the (canonical u>v) star forest stops changing.
         # One partial-agg job computes an order-free set signature —
         # count + bit_xor of a 64-bit row hash (xor: commutative,
@@ -197,9 +202,7 @@ def connected_components(
             edges = nxt
             break
         prev_sig = sig
-        edges = mat(nxt.union(
-            nxt.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ))
+        edges = mat(_both_ways(nxt))
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
@@ -224,21 +227,19 @@ def dedup_representatives(
 ) -> DataFrame:
     """Annotate every doc with its duplicate-cluster id and a canonical
     `is_rep` flag (representative = minimum doc id in the cluster;
-    isolated docs represent themselves).
+    isolated docs represent themselves). `docs[id_col]` and the pair
+    ids must share one type, else ValueError.
 
     The downstream corpus is `.filter("is_rep")` — exactly one survivor
     per near-duplicate cluster.  The join against the (tiny relative to
     the corpus) component map broadcasts when it fits; the docs table is
     never shuffled.
     """
-    _require_integral_ids(docs, (id_col,), "dedup_representatives")
+    _require_same_id_type(docs, id_col, pairs, src)
     comp = connected_components(pairs, src=src, dst=dst)
     out = docs.join(
         comp.withColumnRenamed("id", id_col), id_col, "left"
     ).withColumn(
-        "component_id",
-        F.coalesce(F.col("component_id"), F.col(id_col).cast("long")),
+        "component_id", F.coalesce(F.col("component_id"), F.col(id_col))
     )
-    return out.withColumn(
-        "is_rep", F.col("component_id") == F.col(id_col).cast("long")
-    )
+    return out.withColumn("is_rep", F.col("component_id") == F.col(id_col))

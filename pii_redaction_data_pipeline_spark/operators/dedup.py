@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,8 +32,10 @@ from pii_redaction_data_pipeline_spark.functions.grams import (
 
 # --- minhash ---------------------------------------------------------------
 
+N_HASHES = 64  # one signature length for the signer and the band join
 
-def _band_candidates(with_sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
+
+def _band_candidates(with_sig: DataFrame, bands: int) -> DataFrame:
     """(id, sig) -> candidate (id_a, id_b): banded-LSH bucket equi-join.
 
     The band join carries ONLY (band, band_hash, id) — never the text or
@@ -41,16 +43,16 @@ def _band_candidates(with_sig: DataFrame, n_hashes: int, bands: int) -> DataFram
     instead of the corpus.
 
     The guard lives HERE (not in any one caller) because every banding
-    entry point shares the failure mode: bands > n_hashes makes every
+    entry point shares the failure mode: bands > N_HASHES makes every
     band an EMPTY signature slice — one global bucket, an all-pairs
-    self-join; a non-dividing bands silently ignores n_hashes % bands
+    self-join; a non-dividing bands silently ignores N_HASHES % bands
     signature components (a recall change)."""
-    if not 1 <= bands <= n_hashes or n_hashes % bands:
+    if not 1 <= bands <= N_HASHES or N_HASHES % bands:
         raise ValueError(
-            f"bands must divide n_hashes, 1 <= bands <= n_hashes; got "
-            f"bands={bands}, n_hashes={n_hashes}"
+            f"bands must divide N_HASHES={N_HASHES}, 1 <= bands <= "
+            f"N_HASHES; got bands={bands}"
         )
-    rows = n_hashes // bands
+    rows = N_HASHES // bands
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     banded = with_sig.select("id", "sig", band_idx).withColumn(
         "band_hash", F.xxhash64(F.slice("sig", F.col("band") * rows + 1, rows))
@@ -66,13 +68,13 @@ def _band_candidates(with_sig: DataFrame, n_hashes: int, bands: int) -> DataFram
 
 
 def _estimate_filter(
-    cand: DataFrame, with_sig: DataFrame, n_hashes: int, est_threshold: float
+    cand: DataFrame, with_sig: DataFrame, est_threshold: float
 ) -> DataFrame:
     """Drop candidate pairs whose SIGNATURE-estimated jaccard (matching-
-    component fraction, unbiased, stderr sqrt(j(1-j)/n_hashes)) is below
+    component fraction, unbiased, stderr sqrt(j(1-j)/N_HASHES)) is below
     est_threshold, BEFORE any per-pair feature join: a boilerplate-heavy
     corpus's O(corpus) mid-similarity band collisions die at ~8 B x
-    n_hashes per row instead of reaching the exact verify. A margin of
+    N_HASHES per row instead of reaching the exact verify. A margin of
     0.2 below the threshold (> 3 stderr at 64 hashes) bounds the recall
     loss of a TRUE >= threshold pair below ~1e-3."""
     return (
@@ -91,7 +93,7 @@ def _estimate_filter(
                 F.lit(0),
                 lambda a, x: a + x,
             )
-            / F.lit(n_hashes),
+            / F.lit(N_HASHES),
         )
         .filter(F.col("_est") >= est_threshold)
         .select("id_a", "id_b")
@@ -118,7 +120,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
@@ -145,11 +146,9 @@ def minhash_lsh_pairs(
     )
     sh = grams.groupBy("id").agg(
         F.collect_list("g").alias("shingles"),
-        _seeded_minhash_sig_agg("g", n_hashes).alias("sig"),
+        _seeded_minhash_sig_agg("g").alias("sig"),
     )
-    return _shingle_neardup_pairs(
-        sh, jaccard_threshold, n_hashes, bands, est_margin, id_col="id", sig=F.col("sig")
-    )
+    return _shingle_neardup_pairs(sh, jaccard_threshold, bands, est_margin, id_col="id")
 
 
 def conversation_turn_shingles(
@@ -160,11 +159,13 @@ def conversation_turn_shingles(
     k: int = 3,
     fp_col: str | None = None,
 ) -> DataFrame:
-    """(conv_id, n_turns, shingles: array<long>) — conversation identity
-    at TURN granularity: fingerprint each turn (xxhash64 of its text),
-    order the fingerprints by turn_idx, and hash every k consecutive
-    fingerprints into one shingle. A conversation with fewer than k
-    turns contributes its whole fingerprint sequence as one shingle.
+    """(conv_id, n_turns, shingles: array<long>, sig) — conversation
+    identity at TURN granularity: fingerprint each turn (xxhash64 of its
+    text), order the fingerprints by (turn_idx, fingerprint), and hash
+    every k consecutive fingerprints into one shingle. A conversation
+    with fewer than k turns contributes its whole fingerprint sequence
+    as one shingle. `sig` is the shingles' MinHash signature
+    (_seeded_minhash_sig_agg), the input _shingle_neardup_pairs bands.
 
     Why turns and not words: conversation-level similarity over word
     k-grams of the CONCATENATED text degenerates on boilerplate-heavy
@@ -180,9 +181,13 @@ def conversation_turn_shingles(
     exact TURNS, not merely phrasing, so shingling the turn-fingerprint
     sequence keeps those pairs at jaccard ~1 while unrelated
     conversations (which would need k identical consecutive turns)
-    drop to ~0. It is also ~100x cheaper: the groupBy collects 8-byte
-    fingerprints instead of the conversation text, and every downstream
-    op is a JVM array op on ~n_turns longs.
+    drop to ~0. It is also ~100x cheaper: every op works on 8-byte
+    fingerprints instead of the conversation text.
+
+    Plan shape: a window gives each turn its k-gram xxhash64(fp,
+    lead(fp, 1), .., lead(fp, k-1)) (xxhash64 skips the NULL leads past
+    the last turn); one groupBy collects the distinct grams and their
+    signature.
 
     fp_col: name of a PRECOMPUTED per-turn fingerprint column (e.g. the
     annotate stage's ``turn_fp`` = xxhash64 of the raw turn text,
@@ -201,47 +206,33 @@ def conversation_turn_shingles(
         if fp_col is not None
         else F.xxhash64(F.coalesce(F.col(text_col), F.lit("")))
     )
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col(order_col).alias("o"), fp.alias("f")))
+    turns = df.select(
+        F.col(conv_col).alias("conv_id"), F.col(order_col).alias("o"), fp.alias("fp")
     )
-    fps = F.transform(ordered, lambda s: s["f"])
-    g = df.groupBy(F.col(conv_col).alias("conv_id")).agg(fps.alias("fps"))
-    n = F.size("fps")
-    grams = F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: F.xxhash64(F.slice("fps", i, k)),
-            )
-        ),
-    ).otherwise(F.array(F.xxhash64("fps")))
-    return g.select("conv_id", n.alias("n_turns"), grams.alias("shingles"))
+    w = Window.partitionBy("conv_id").orderBy("o", "fp")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    grams = turns.select(
+        "conv_id",
+        F.count("*").over(whole).alias("n_turns"),
+        F.row_number().over(w).alias("rn"),
+        F.xxhash64("fp", *[F.lead("fp", j).over(w) for j in range(1, k)]).alias("g"),
+    )
+    # the n - k + 1 full grams, or the first turn of a shorter conversation
+    full = grams.filter(F.col("rn") <= F.greatest(F.col("n_turns") - (k - 1), F.lit(1)))
+    return full.groupBy("conv_id").agg(
+        F.max("n_turns").alias("n_turns"),
+        F.collect_set("g").alias("shingles"),
+        _seeded_minhash_sig_agg("g").alias("sig"),
+    )
 
 
-def _seeded_minhash_sig(shingle_col: str, n_hashes: int) -> F.Column:
-    """MinHash signature from a precomputed shingle-hash array, fully
-    JVM-side: component h = min over shingles of xxhash64(shingle, h).
-    Seeded-xxhash64 components are independent enough for the standard
-    minhash estimator; no Python UDF, but the higher-order functions run
-    interpreted, once per plan branch that reads the signature.
-
-    NB: the per-component lambda must be UNARY — PySpark's transform()
-    dispatches on lambda arity, so a `lambda s, h=h:` closure would be
-    called as the binary (element, index) form with the array INDEX
-    silently replacing the seed."""
-
-    def component(h: int):
-        return F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(h))))
-
-    return F.array(*[component(h) for h in range(n_hashes)])
-
-
-def _seeded_minhash_sig_agg(shingle_col: str, n_hashes: int) -> F.Column:
-    """_seeded_minhash_sig as `min` aggregates over one shingle per row:
-    codegen'd, evaluated once map-side of the groupBy's exchange (5,000
-    sf0.1 documents: minhash_lsh_pairs 4.0 s with the array form, 2.0 s)."""
-    return F.array(*[F.min(F.xxhash64(shingle_col, F.lit(h))) for h in range(n_hashes)])
+def _seeded_minhash_sig_agg(shingle_col: str) -> F.Column:
+    """MinHash signature of the shingle-hash column, one shingle per
+    row, as N_HASHES `min` aggregates: component h = min over shingles
+    of xxhash64(shingle, h). Seeded-xxhash64 components are independent
+    enough for the standard minhash estimator; codegen'd, evaluated once
+    map-side of the groupBy's exchange, no Python UDF."""
+    return F.array(*[F.min(F.xxhash64(shingle_col, F.lit(h))) for h in range(N_HASHES)])
 
 
 def conversation_neardup_pairs(
@@ -250,7 +241,6 @@ def conversation_neardup_pairs(
     text_col: str = "text",
     order_col: str = "turn_idx",
     jaccard_threshold: float = 0.6,
-    n_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
     est_margin: float | None = 0.2,
@@ -262,12 +252,10 @@ def conversation_neardup_pairs(
     order), jaccard computed EXACTLY over the turn-fingerprint k-gram
     shingle sets (see conversation_turn_shingles for why turn
     granularity is both the correct transcript identity and the 100 TB
-    path). Plan shape: one conv_id groupBy of 8-byte fingerprints, then
-    _shingle_neardup_pairs. Zero Python UDFs, zero text shuffles."""
+    path). Plan shape: one conv_id window + groupBy of 8-byte
+    fingerprints, then _shingle_neardup_pairs. Zero Python UDFs, zero text shuffles."""
     sh = conversation_turn_shingles(df, conv_col, text_col, order_col, shingle_k)
-    return _shingle_neardup_pairs(
-        sh, jaccard_threshold, n_hashes, bands, est_margin
-    ).select(
+    return _shingle_neardup_pairs(sh, jaccard_threshold, bands, est_margin).select(
         F.col("id_a").alias("conv_a"), F.col("id_b").alias("conv_b"), "jaccard"
     )
 
@@ -275,24 +263,21 @@ def conversation_neardup_pairs(
 def _shingle_neardup_pairs(
     sh: DataFrame,
     jaccard_threshold: float,
-    n_hashes: int = 64,
     bands: int = 16,
     est_margin: float | None = 0.2,
     id_col: str = "conv_id",
-    sig: F.Column | None = None,
 ) -> DataFrame:
-    """(id_col, shingles) -> verified (id_a, id_b, jaccard): banded LSH
-    over distinct shingle-hash arrays, exact verify as a JVM
-    array_intersect. The one near-dup engine, behind minhash_lsh_pairs
-    (word k-grams) and conversation dedup (turn-fingerprint k-grams).
-    sig: the signature if the caller aggregated it with the shingles
-    (_seeded_minhash_sig_agg); None signs the arrays here."""
-    sig = _seeded_minhash_sig("shingles", n_hashes) if sig is None else sig
-    with_sig = sh.select(F.col(id_col).alias("id"), F.col("shingles"), sig.alias("sig"))
-    cand = _band_candidates(with_sig.select("id", "sig"), n_hashes, bands)
+    """(id_col, shingles, sig) -> verified (id_a, id_b, jaccard): banded
+    LSH over the signatures, exact verify as a JVM array_intersect of
+    the distinct shingle-hash arrays. The one near-dup engine, behind
+    minhash_lsh_pairs (word k-grams) and conversation dedup
+    (turn-fingerprint k-grams); both sign with _seeded_minhash_sig_agg
+    in the groupBy that collects the shingles."""
+    with_sig = sh.select(F.col(id_col).alias("id"), "shingles", "sig")
+    cand = _band_candidates(with_sig.select("id", "sig"), bands)
     est_threshold = jaccard_threshold - (est_margin if est_margin is not None else 1.0)
     if est_threshold > 0:
-        cand = _estimate_filter(cand, with_sig.select("id", "sig"), n_hashes, est_threshold)
+        cand = _estimate_filter(cand, with_sig.select("id", "sig"), est_threshold)
     feats = with_sig.select("id", "shingles")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     na, nb = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
@@ -520,32 +505,28 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     n_blocks: int | None = None,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by simhash signature: vectorized signature UDF,
     then the recall-complete multi-table banding of simhash_sig_pairs
     (distinct-signature buckets, wide keys, exact JVM hamming verify).
 
-    persist_signatures: simhash_sig_pairs references the signature
-    frame from SIX subplans (distinct-sig banding lhs/rhs, the two
-    id-expansion joins, both sides of the identical-signature
-    self-join). Without a persist, each branch would re-run the pandas
-    signature UDF over the full corpus text — the single most expensive
-    stage, executed ~6x. The default persists (id, sh) — 16 B/doc, not
-    text — MEMORY_AND_DISK, EAGERLY materializes the (output-bounded)
+    simhash_sig_pairs references the signature frame from SIX subplans
+    (distinct-sig banding lhs/rhs, the two id-expansion joins, both
+    sides of the identical-signature self-join). Without a persist, each
+    branch would re-run the pandas signature UDF over the full corpus
+    text — the single most expensive stage, executed ~6x. So this
+    persists (id, sh) — 16 B/doc, not text — MEMORY_AND_DISK, EAGERLY
+    materializes the (output-bounded)
     pairs via localCheckpoint while the signatures are cached, then
     unpersists the signature frame before returning. The checkpoint
     blocks are owned by the returned frame's RDD, so they are reclaimed
     automatically by the ContextCleaner when the caller drops it —
     repeated calls in a long session leak nothing and nothing needs a
     manual unpersist (the executor-loss recompute caveat is the
-    components.py/dsir_select precedent). Pass False for a fully lazy
-    plan when the caller has already materialized signatures itself."""
+    components.py/dsir_select precedent). A caller holding materialized
+    signatures calls simhash_sig_pairs directly."""
     sim = make_simhash_udf()
-    sdf = df.select(F.col(id_col).alias("id"), sim(F.col(text_col)).alias("sh"))
-    if not persist_signatures:
-        return simhash_sig_pairs(sdf, max_hamming, n_blocks)
-    sdf = sdf.persist()
+    sdf = df.select(F.col(id_col).alias("id"), sim(F.col(text_col)).alias("sh")).persist()
     try:
         return simhash_sig_pairs(sdf, max_hamming, n_blocks).localCheckpoint(
             eager=True

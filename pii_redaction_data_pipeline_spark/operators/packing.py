@@ -21,8 +21,7 @@ The design splits the job into
 
 Bucketing uses the same sha256 trick as operators/sampling.py so the
 pseudo-shuffle is deterministic, partitioning-independent, and
-engine-portable (two-hex-digit -> int via ascii(), which DuckDB shares);
-`portable=False` swaps in xxhash64 for production runs.
+engine-portable (two-hex-digit -> int via ascii(), which DuckDB shares).
 """
 
 from __future__ import annotations
@@ -44,7 +43,7 @@ def _hex_digit(c: Column) -> Column:
     return F.when(a >= 97, a - 87).otherwise(a - 48)
 
 
-def bucket_col(key: Column, n_buckets: int, portable: bool = True) -> Column:
+def bucket_col(key: Column, n_buckets: int) -> Column:
     """Deterministic pseudo-shuffle bucket in [0, n_buckets).
 
     The portable hash consumes 4 hex digits (16 bits), so n_buckets must
@@ -54,14 +53,12 @@ def bucket_col(key: Column, n_buckets: int, portable: bool = True) -> Column:
     real packing run uses, and zero for powers of two."""
     if not 1 <= n_buckets <= 65536:
         raise ValueError(f"n_buckets must be in [1, 65536], got {n_buckets}")
-    if portable:
-        h = F.sha2(key.cast("string"), 256)
-        val = _hex_digit(F.substring(h, 1, 1)) * 16 * 16 * 16 \
-            + _hex_digit(F.substring(h, 2, 1)) * 16 * 16 \
-            + _hex_digit(F.substring(h, 3, 1)) * 16 \
-            + _hex_digit(F.substring(h, 4, 1))
-        return F.pmod(val, F.lit(n_buckets))
-    return F.pmod(F.xxhash64(key), F.lit(n_buckets))
+    h = F.sha2(key.cast("string"), 256)
+    val = _hex_digit(F.substring(h, 1, 1)) * 16 * 16 * 16 \
+        + _hex_digit(F.substring(h, 2, 1)) * 16 * 16 \
+        + _hex_digit(F.substring(h, 3, 1)) * 16 \
+        + _hex_digit(F.substring(h, 4, 1))
+    return F.pmod(val, F.lit(n_buckets))
 
 
 def with_pack_placement(
@@ -70,7 +67,6 @@ def with_pack_placement(
     n_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = True,
     bucket_key: str | None = None,
 ) -> DataFrame:
     """Assign every doc its bucket and absolute token span.
@@ -94,7 +90,7 @@ def with_pack_placement(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = df.withColumn(
-        "bucket", bucket_col(F.col(bucket_key or id_col), n_buckets, portable)
+        "bucket", bucket_col(F.col(bucket_key or id_col), n_buckets)
     )
     # NULL text counts like '' (0 pre-tokens + the EOS marker): the
     # materializer tokenizes NULL as [EOS_MARK], and a NULL n_tokens
@@ -126,8 +122,6 @@ def pack_sequences(
     n_buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = True,
-    drop_last_partial: bool = False,
     bucket_key: str | None = None,
 ) -> DataFrame:
     """Materialize the packed sequences: (bucket, seq_idx, n_tokens,
@@ -142,8 +136,7 @@ def pack_sequences(
     placement math token-for-token — pinned by tests.
     """
     placed = with_pack_placement(
-        df, seq_tokens, n_buckets, id_col, text_col, portable,
-        bucket_key=bucket_key,
+        df, seq_tokens, n_buckets, id_col, text_col, bucket_key=bucket_key,
     ).select("bucket", id_col, text_col)
     id_type = df.schema[id_col].dataType.simpleString()
 
@@ -170,8 +163,6 @@ def pack_sequences(
         bucket = int(pdf["bucket"].iloc[0])
         for s in range(0, total, seq_tokens):
             e = min(s + seq_tokens, total)
-            if drop_last_partial and e - s < seq_tokens:
-                break
             lo = int(np.searchsorted(bounds, s, "right")) - 1
             hi = int(np.searchsorted(bounds, e, "left"))
             # docs appear once each, pre-sorted by id: the slice is

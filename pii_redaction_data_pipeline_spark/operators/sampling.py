@@ -21,10 +21,6 @@ the DuckDB replay is `substr(sha256(...), 1, 8) < '<thresh>'`
 (driver query `stratified_sample`). Everything is Catalyst expressions
 (sha2/concat_ws/case) — codegen'd, no UDF, no shuffle; the gate pushes
 into the scan like any other predicate.
-
-`xxhash_gate` is the cheap non-portable variant (one JVM xxhash64 vs a
-sha256 per row) for production paths that don't need cross-engine
-replay. Same determinism properties.
 """
 
 from __future__ import annotations
@@ -66,16 +62,6 @@ def deterministic_sample(
 ) -> DataFrame:
     """Keep a deterministic, partitioning-independent `rate` fraction."""
     return df.filter(sample_bucket_col(key_cols, seed) < F.lit(rate_threshold(rate)))
-
-
-def xxhash_gate(
-    df: DataFrame, rate: float, key_cols: Sequence[str], seed: int = 0
-) -> DataFrame:
-    """Non-portable fast path: xxhash64 bucket in [0, 2^32)."""
-    if not 0.0 <= rate <= 1.0:  # mirror rate_threshold's validation
-        raise ValueError(f"rate must be in [0,1], got {rate}")
-    bucket = F.pmod(F.xxhash64(*key_cols, F.lit(seed)), F.lit(2 ** 32))
-    return df.filter(bucket < F.lit(int(rate * 2 ** 32)))
 
 
 def stratified_sample(

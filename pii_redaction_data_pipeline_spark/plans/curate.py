@@ -35,11 +35,10 @@ tables; AQE broadcasts the semi-joins whenever a list actually fits —
 no forced hints, since at 10^9 conversations they don't); the only
 corpus-wide work is
 annotate's one conv_id shuffle and pack's placement window. The
-conversation id -> numeric key mapping for the component step uses
-xxhash64 (no global row_number at 10^9 conversations); representatives
-are then chosen as MIN(conv_id) per component, so the surviving set is
-independent of the hash values (a 2^-64 hash collision could only
-merge two clusters, never change rep determinism).
+component step labels conversations by their string conv_id directly:
+each component's label is its MIN(conv_id), which is the cluster's
+representative, so no numeric key mapping (and no map-back join) sits
+between the pair list and the survivor set.
 """
 
 from __future__ import annotations
@@ -121,94 +120,51 @@ def dedup_survivor_convs(
     table's (conv_id, turn_idx, turn_fp) so the dedup stage costs one
     pruned columnar scan instead of a second full raw-text scan.
 
-    checkpoint_dir: when given, the reused shingle/pair frames are
-    persisted as parquet UNDER THIS DIRECTORY instead of via
-    localCheckpoint. localCheckpoint stores blocks on executor local
-    disk — lose an executor mid-stage and the lineage-truncated frame
-    is unrecoverable, failing the job; a parquet spill to the (shared)
-    work dir survives executor loss at the cost of one write+read per
-    frame. run_curation always passes one; the `curate_full` query in
-    __spark_entry__.py keeps the default None.
+    checkpoint_dir: when given, the reused shingle frame and the
+    component rounds are persisted as parquet UNDER THIS DIRECTORY
+    instead of via localCheckpoint. localCheckpoint stores blocks on
+    executor local disk — lose an executor mid-stage and the
+    lineage-truncated frame is unrecoverable, failing the job; a parquet
+    spill to the (shared) work dir survives executor loss at the cost of
+    one write+read per frame. run_curation always passes one; the
+    `curate_full` query in __spark_entry__.py keeps the default None.
     """
     # no forced broadcast: these conv-id lists are ~rows-of-the-corpus at
     # 10^9-conversation scale (far past the 8 GB broadcast limit); AQE
     # converts the join to broadcast at runtime whenever the list is
     # actually small, which is the right call at every scale
     convs = transcripts.join(kept_convs.select("conv_id"), "conv_id", "semi")
-    # materialize the two reused frames ONCE: the shingle aggregation
-    # feeds the LSH self-join (signatures + the verify arrays) and the
-    # pair list feeds two downstream consumers (the id map and the
-    # component rounds) — without the checkpoints Spark re-derives
-    # the whole scan+groupBy chain per consumer (~6x; profiled 73 s ->
-    # ~10 s at the 20k-turn bench scale). Executor-local checkpoint
-    # storage is the right trade at corpus scale too: one small row per
-    # conversation, read several times.
-    # explicit partition count: AQE coalesces the small groupBy output
-    # to ONE partition, which would serialize the signature pass —
-    # a user-specified repartition is exempt from advisory coalescing
+    # materialize the shingle frame ONCE: the LSH self-join reads it
+    # several times, each a re-derived scan+window+groupBy without the
+    # checkpoint (~6x; profiled 73 s -> ~10 s at the 20k-turn bench
+    # scale). connected_components reads the pairs once, so they need no
+    # spill. The explicit partition count keeps AQE from coalescing the
+    # small exchange to ONE partition, which would serialize the
+    # signature pass; the shingle window and groupBy run inside it.
     n_parts = transcripts.sparkSession.sparkContext.defaultParallelism * 2
-
-    def materialize(
-        frame: DataFrame, name: str, repartition_on: str | None = None
-    ) -> DataFrame:
-        if checkpoint_dir is None:
-            # localCheckpoint preserves the frame's partitioning as-is
-            return frame.localCheckpoint(eager=True)
-        path = f"{checkpoint_dir.rstrip('/')}/{name}"
-        frame.write.mode("overwrite").parquet(path)
-        out = frame.sparkSession.read.parquet(path)
-        if repartition_on is not None:
-            # the parquet round-trip DISCARDS the writer's partitioning:
-            # file bin-packing (maxPartitionBytes/openCost) coalesces the
-            # small per-partition files into a handful of read splits,
-            # which would serialize the signature pass downstream — the
-            # exact collapse the pre-write repartition exists to prevent.
-            # Re-apply it on the read-back frame (hash/int rows, cheap).
-            out = out.repartition(n_parts, repartition_on)
-        return out
-
-    sh = materialize(
-        conversation_turn_shingles(convs, fp_col=fp_col).repartition(
-            n_parts, "conv_id"
-        ),
-        "dedup_shingles",
-        repartition_on="conv_id",
+    sh = conversation_turn_shingles(
+        convs.repartition(n_parts, "conv_id"), fp_col=fp_col
     )
-    pairs = materialize(
-        _shingle_neardup_pairs(sh, jaccard_threshold, est_margin=est_margin),
-        "dedup_pairs",
-    )
-    # numeric keys for the component step (no global row_number at
-    # corpus scale), hashed straight off the pair columns; `ids` maps
-    # them back to conv_id. The kept_convs semi join above already drops
-    # NULL conv_ids. Rep choice below is hash-independent.
-    npairs = pairs.select(
-        F.xxhash64("id_a").alias("ca"), F.xxhash64("id_b").alias("cb")
-    )
-    ids = (
-        pairs.select(F.col("id_a").alias("conv_id"))
-        .union(pairs.select("id_b"))
-        .distinct()
-        .withColumn("cid", F.xxhash64("conv_id"))
-    )
-    # durable runs extend the same parquet-spill contract into the star
-    # rounds: without it, the component step's executor-local
-    # checkpoints would undo the executor-loss safety the caller asked
-    # for (round-5 review finding)
-    comp = connected_components(
-        npairs, src="ca", dst="cb",
-        checkpoint_dir=(
-            f"{checkpoint_dir.rstrip('/')}/components"
-            if checkpoint_dir is not None
-            else None
-        ),
-    )
-    members = ids.join(comp, ids.cid == comp.id).select("conv_id", "component_id")
-    reps = members.groupBy("component_id").agg(F.min("conv_id").alias("rep_conv"))
-    dropped = (
-        members.join(reps, "component_id")
-        .filter(F.col("conv_id") != F.col("rep_conv"))
-        .select("conv_id")
+    if checkpoint_dir is None:
+        # localCheckpoint preserves the frame's partitioning as-is
+        sh = sh.localCheckpoint(eager=True)
+    else:
+        path = f"{checkpoint_dir.rstrip('/')}/dedup_shingles"
+        sh.write.mode("overwrite").parquet(path)
+        # the parquet round-trip DISCARDS the writer's partitioning: file
+        # bin-packing coalesces the small per-partition files into a
+        # handful of read splits, which would serialize the band join
+        # downstream — re-apply it on the read-back frame
+        sh = sh.sparkSession.read.parquet(path).repartition(n_parts, "conv_id")
+    pairs = _shingle_neardup_pairs(sh, jaccard_threshold, est_margin=est_margin)
+    # component_id is the minimum conv_id (string order), i.e. the
+    # representative; every other member is dropped. Durable runs spill
+    # the star rounds too, or their executor-local checkpoints would
+    # undo the executor-loss safety the caller asked for.
+    ck = None if checkpoint_dir is None else f"{checkpoint_dir.rstrip('/')}/components"
+    comp = connected_components(pairs, checkpoint_dir=ck)
+    dropped = comp.filter(F.col("id") != F.col("component_id")).select(
+        F.col("id").alias("conv_id")
     )
     return kept_convs.select("conv_id").join(dropped, "conv_id", "anti")
 
@@ -237,9 +193,9 @@ def run_curation(
     `turn_fp` required in the schema and NULLs in them failing the scan
     that meets them, so a mixed-layout directory raises an error naming
     its path instead of silently losing or mass-deduping conversations.
-    The dedup stage spills its reused shingle/pair frames as parquet
-    under `{work_dir}/dedup_ck`, so an executor loss mid-dedup does not
-    kill the run.
+    The dedup stage spills its reused shingle frame and component rounds
+    as parquet under `{work_dir}/dedup_ck`, so an executor loss
+    mid-dedup does not kill the run.
 
     `fail_after_stage` injects a crash after the named stage completes
     (its lineage row IS written first) — the cross-stage analog of

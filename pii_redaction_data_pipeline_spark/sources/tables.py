@@ -89,21 +89,14 @@ class TableIO:
         _, fs, p = hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
         return bool(fs.exists(p))
 
-    def write_bucketed(self, df: DataFrame, path: str, overwrite_partitions: bool = True):
-        """Write partitioned by part_bucket. overwrite_partitions=True
-        (the resume contract): only the buckets present in `df` are
-        replaced (Iceberg overwritePartitions / Parquet dynamic mode).
-        False: a FULL overwrite — the whole table is replaced, so
-        buckets absent from `df` are deleted rather than left as ghost
-        rows from a previous run (the parameter was previously accepted
-        and ignored)."""
+    def write_bucketed(self, df: DataFrame, path: str):
+        """Write partitioned by part_bucket. Only the buckets present in
+        `df` are replaced (Parquet dynamic partition overwrite) — the
+        resume contract: a re-run bucket replaces its own files and
+        leaves every other bucket as it was."""
         if BUCKET_COL not in df.columns:
             df = with_bucket(df, self.n_buckets)
-        w = df.write.mode("overwrite")
-        if overwrite_partitions:
-            w = w.option("partitionOverwriteMode", "dynamic")
-        else:
-            w = w.option("partitionOverwriteMode", "static")
+        w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         w.partitionBy(BUCKET_COL).parquet(path)
 
     def append(self, df: DataFrame, path: str):

@@ -29,15 +29,34 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
+# ids keep their type: string ids label with their STRING minimum
+# ("10" < "9"), so the string run checks a different order on the same
+# graph shape
+ID_TYPES = {"bigint": int, "string": str}
+
+
 def _spark_components(spark, edges, threshold=1_000_000):
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = connected_components(df, small_graph_threshold=threshold).collect()
-    return {r["id"]: r["component_id"] for r in got}
+    """{id type: (labels, oracle labels)} for `edges` typed as each of
+    ID_TYPES; the labels must keep the id type."""
+    out = {}
+    for name, typed in ID_TYPES.items():
+        te = [(typed(a), typed(b)) for a, b in edges]
+        df = spark.createDataFrame(te, f"id_a {name}, id_b {name}")
+        comp = connected_components(df, small_graph_threshold=threshold)
+        assert [t for _, t in comp.dtypes] == [name, name]
+        got = {r["id"]: r["component_id"] for r in comp.collect()}
+        out[name] = (got, _uf_components(te))
+    return out
+
+
+def _assert_matches_union_find(spark, edges, threshold):
+    for name, (got, want) in _spark_components(spark, edges, threshold).items():
+        assert got == want, name
 
 
 # threshold=0 forces the distributed alternating-star path; the default
 # takes the driver-side union-find fast path — both must agree with the
-# brute-force oracle on every graph shape.
+# brute-force oracle on every graph shape, for bigint and string ids.
 @pytest.mark.parametrize("threshold", [0, 1_000_000])
 @pytest.mark.parametrize(
     "edges",
@@ -50,7 +69,7 @@ def _spark_components(spark, edges, threshold=1_000_000):
     ],
 )
 def test_matches_union_find_fixed(spark, edges, threshold):
-    assert _spark_components(spark, edges, threshold) == _uf_components(edges)
+    _assert_matches_union_find(spark, edges, threshold)
 
 
 @pytest.mark.parametrize("threshold", [0, 1_000_000])
@@ -63,13 +82,15 @@ def test_matches_union_find_random(spark, threshold):
             for _ in range(40)
         ]
         edges = [(a, b) for a, b in edges if a != b]
-        assert _spark_components(spark, edges, threshold) == _uf_components(edges), trial
+        _assert_matches_union_find(spark, edges, threshold)
 
 
 @pytest.mark.parametrize("threshold", [0, 1_000_000])
 def test_duplicate_and_reversed_pairs_are_harmless(spark, threshold):
     edges = [(1, 2), (2, 1), (1, 2), (2, 3)]
-    assert _spark_components(spark, edges, threshold) == {1: 1, 2: 1, 3: 1}
+    got = _spark_components(spark, edges, threshold)
+    assert got["bigint"][0] == {1: 1, 2: 1, 3: 1}
+    assert got["string"][0] == {"1": "1", "2": "1", "3": "1"}
 
 
 def test_representatives_one_survivor_per_cluster(spark):
@@ -159,24 +180,50 @@ def test_distributed_path_on_deep_graph_matches_union_find(spark):
     assert d[4096] == 0 and d[10_011] == 10_000 and d[30_001] == 30_000
 
 
-def test_non_integral_ids_rejected(spark):
-    """String ids (e.g. UUIDs) must raise, not silently cast to NULL —
-    cast('long') on every row would drop all edges and .filter('is_rep')
-    would return an EMPTY corpus (round-5 review finding). Callers map
-    string ids to numerics first (plans/curate.py pattern)."""
-    import pytest
-
-    from pii_redaction_data_pipeline_spark.operators.components import (
-        connected_components,
-        dedup_representatives,
-    )
-
-    pairs = spark.createDataFrame(
-        [("a-1", "a-2")], "id_a string, id_b string"
-    )
-    with pytest.raises(ValueError, match="integral id"):
+def test_mismatched_id_types_rejected(spark):
+    """Ids keep their type (string ids label with their string minimum),
+    so id columns of different types have no common order and must
+    raise: src vs dst, and docs vs pairs."""
+    pairs = spark.createDataFrame([("a-1", 2)], "id_a string, id_b long")
+    with pytest.raises(ValueError, match="share one type"):
         connected_components(pairs)
     docs = spark.createDataFrame([("a-1", "t")], "doc_id string, text string")
     npairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="integral id"):
+    with pytest.raises(ValueError, match="share one type"):
         dedup_representatives(docs, npairs)
+
+
+def test_string_id_representatives(spark):
+    """String doc ids need no numeric mapping: the representative is the
+    cluster's minimum id in string order."""
+    docs = spark.createDataFrame(
+        [(c, "t") for c in ("b", "a10", "a9", "z")], "doc_id string, text string"
+    )
+    pairs = spark.createDataFrame([("a9", "b"), ("a10", "a9")], "id_a string, id_b string")
+    out = {r["doc_id"]: r for r in dedup_representatives(docs, pairs).collect()}
+    assert {d: r["component_id"] for d, r in out.items()} == {
+        "a10": "a10", "a9": "a10", "b": "a10", "z": "z"
+    }
+    assert sorted(d for d, r in out.items() if r["is_rep"]) == ["a10", "z"]
+
+
+def test_edge_set_reads_pairs_once(spark):
+    """The symmetric edge set takes both orientations from ONE read of
+    the (lazy) pair plan: its executed plan holds the pair plan's joins
+    once, where a union of the two orientations would hold them twice."""
+    import re
+
+    from pii_redaction_data_pipeline_spark.operators.components import _both_ways
+
+    a = spark.createDataFrame([(i, i % 5) for i in range(50)], "id_a long, k long")
+    b = spark.createDataFrame([(i, i % 5) for i in range(50)], "id_b long, k long")
+    pairs = a.join(b, "k").filter(F.col("id_a") < F.col("id_b"))
+
+    def joins(frame):
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(r"(?:BroadcastHash|SortMerge|ShuffledHash)Join", plan))
+
+    n = joins(pairs)
+    assert n >= 1
+    assert joins(_both_ways(pairs, "id_a", "id_b").distinct()) == n

@@ -109,10 +109,11 @@ def test_curate_full_query_matches_oracle(spark):
 
 def test_reliable_checkpoint_dir_matches_local(spark, tinydup_path, tmp_path):
     """dedup_survivor_convs(checkpoint_dir=...) spills the reused
-    shingle/pair frames to parquet in the work dir instead of
-    localCheckpoint (executor-local blocks die with the executor; the
-    parquet spill survives). Must be result-identical to the default
-    path and actually leave the frames on disk."""
+    shingle frame and the component step's edge sets to parquet in the
+    work dir instead of localCheckpoint (executor-local blocks die with
+    the executor; the parquet spill survives). Must be result-identical
+    to the default path and actually leave the frames on disk; the pair
+    list is read once, by the component step, and is not spilled."""
     from pii_redaction_data_pipeline_spark.plans.curate import (
         dedup_survivor_convs,
     )
@@ -130,7 +131,8 @@ def test_reliable_checkpoint_dir_matches_local(spark, tinydup_path, tmp_path):
     assert durable == local and len(local) > 0
     # the spilled frames are real parquet tables under the work dir
     assert spark.read.parquet(f"{ckdir}/dedup_shingles").count() > 0
-    assert spark.read.parquet(f"{ckdir}/dedup_pairs").count() > 0
+    assert spark.read.parquet(f"{ckdir}/components/cc_0").count() > 0
+    assert sorted(os.listdir(ckdir)) == ["components", "dedup_shingles"]
 
 
 def test_dedup_fp_col_matches_text_path(spark, tinydup_path):

@@ -191,6 +191,8 @@ def _conv_df(spark, convs: dict[str, list[str]]):
 
 
 def test_conversation_turn_shingles_counts_and_fallback(spark):
+    from pyspark.sql import functions as F
+
     from pii_redaction_data_pipeline_spark.operators.dedup import (
         conversation_turn_shingles,
     )
@@ -203,25 +205,46 @@ def test_conversation_turn_shingles_counts_and_fallback(spark):
             "rep": ["x", "x", "x", "x", "x"],  # 3 positions, 1 DISTINCT gram
         },
     )
+    # two turns sharing a turn_idx: the fingerprint breaks the tie, so
+    # row order cannot change the shingles
+    tie = [("tie", 0, "p"), ("tie", 1, "q"), ("tie", 1, "r"), ("tie", 2, "s")]
+    df = df.union(spark.createDataFrame(tie, df.schema))
     out = {r.conv_id: r for r in conversation_turn_shingles(df).collect()}
     assert len(out["long"].shingles) == 8 and out["long"].n_turns == 10
     assert len(out["short"].shingles) == 1 and out["short"].n_turns == 2
     assert len(out["rep"].shingles) == 1
+    # the short conversation's one shingle hashes its whole sequence
+    fp = {t: F.xxhash64(F.lit(t)) for t in "abpqrs"}
+    (short,) = spark.range(1).select(F.xxhash64(fp["a"], fp["b"])).first()
+    assert out["short"].shingles == [short]
+
+    def grams(order):
+        row = spark.range(1).select(
+            *[F.xxhash64(*[fp[t] for t in order[i : i + 3]]) for i in range(2)]
+        ).first()
+        return sorted(row)
+
+    assert out["tie"].n_turns == 4
+    (fq, fr) = spark.range(1).select(fp["q"], fp["r"]).first()
+    want = grams("pqrs" if fq <= fr else "prqs")
+    assert sorted(out["tie"].shingles) == want
+    reordered = df.filter("conv_id = 'tie'").orderBy(F.desc("text")).coalesce(1)
+    (again,) = conversation_turn_shingles(reordered).collect()
+    assert sorted(again.shingles) == want
 
 
 def test_seeded_minhash_components_are_independent(spark):
-    """Regression: a two-parameter lambda passed to F.transform() is
-    dispatched as the (element, index) binary form, which silently
-    replaced the minhash seed with the array index — every signature
-    component collapsed to the same value and the jaccard estimate for
-    any prefix-sharing pair read 0 or 1. Components must (a) differ from
-    each other within one signature and (b) agree between two similar
-    conversations at roughly the true jaccard rate; (c) the aggregate
-    form minhash_lsh_pairs uses gives the same signatures."""
+    """The signature conversation_turn_shingles emits: a seed that
+    failed to vary per component would collapse every component to one
+    value and read any prefix-sharing pair's jaccard as 0 or 1.
+    Components must (a) differ from each other within one signature and
+    (b) agree between two similar conversations at roughly the true
+    jaccard rate; (c) it equals _seeded_minhash_sig_agg over the
+    exploded shingles."""
     from pyspark.sql import functions as F
 
     from pii_redaction_data_pipeline_spark.operators.dedup import (
-        _seeded_minhash_sig,
+        N_HASHES,
         _seeded_minhash_sig_agg,
         conversation_turn_shingles,
     )
@@ -229,13 +252,9 @@ def test_seeded_minhash_components_are_independent(spark):
     base = [f"turn number {i}" for i in range(40)]
     df = _conv_df(spark, {"orig": base, "clone": base[:-6]})
     sh = conversation_turn_shingles(df)
-    rows = {
-        r.conv_id: r
-        for r in sh.select(
-            "conv_id", _seeded_minhash_sig("shingles", 64).alias("sig")
-        ).collect()
-    }
+    rows = {r.conv_id: r for r in sh.collect()}
     a, b = rows["orig"].sig, rows["clone"].sig
+    assert len(a) == len(b) == N_HASHES
     assert len(set(a)) > 32, "components within one signature must differ"
     matches = sum(x == y for x, y in zip(a, b))
     # true jaccard = 32/38 ~ 0.84; 64 components, stderr ~ 0.046 -> the
@@ -244,7 +263,7 @@ def test_seeded_minhash_components_are_independent(spark):
     agg = (
         sh.select("conv_id", F.explode("shingles").alias("s"))
         .groupBy("conv_id")
-        .agg(_seeded_minhash_sig_agg("s", 64).alias("sig"))
+        .agg(_seeded_minhash_sig_agg("s").alias("sig"))
     )
     assert {r.conv_id: r.sig for r in agg.collect()} == {"orig": a, "clone": b}
 
@@ -630,13 +649,15 @@ def test_null_text_coerces_to_empty_in_span_and_line_dedup(spark):
 
 
 def test_minhash_bands_must_divide_n_hashes(spark):
-    """bands > n_hashes would band over EMPTY signature slices (one
+    """bands > N_HASHES would band over EMPTY signature slices (one
     global bucket -> all-pairs join); a non-dividing bands silently
-    drops signature components. Both now raise (round-5 review)."""
+    drops signature components. Both raise."""
+    from pii_redaction_data_pipeline_spark.operators.dedup import N_HASHES
+
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    for bad in ({"n_hashes": 16, "bands": 32}, {"n_hashes": 16, "bands": 5}):
+    for bad in (2 * N_HASHES, 5):
         with pytest.raises(ValueError, match="bands"):
-            minhash_lsh_pairs(df, **bad)
+            minhash_lsh_pairs(df, bands=bad)
 
 
 def test_band_guard_covers_conversation_path(spark):
@@ -652,7 +673,7 @@ def test_band_guard_covers_conversation_path(spark):
         "conv_id string, turn_idx int, text string",
     )
     with pytest.raises(ValueError, match="bands"):
-        conversation_neardup_pairs(df, n_hashes=64, bands=128).collect()
+        conversation_neardup_pairs(df, bands=128).collect()
 
 
 def test_ngram_jaccard_empty_docs_form_no_pairs(spark):

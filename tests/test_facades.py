@@ -173,11 +173,10 @@ def test_make_langid_udf_fasttext_path(monkeypatch, tmp_path, spark):
     langid._FT_CACHE.clear()
 
 
-def test_write_bucketed_full_overwrite_removes_ghost_buckets(spark, tmp_path):
-    """overwrite_partitions=False must be a FULL overwrite: buckets
-    absent from the new frame disappear instead of surviving as ghost
-    rows (the parameter was previously accepted and ignored —
-    round-5 review finding)."""
+def test_write_bucketed_replaces_only_present_buckets(spark, tmp_path):
+    """write_bucketed overwrites only the buckets present in the new
+    frame: a resumed bucket replaces its own files, and every other
+    bucket survives untouched."""
     from pii_redaction_data_pipeline_spark.sources.tables import (
         BUCKET_COL,
         TableIO,
@@ -189,15 +188,17 @@ def test_write_bucketed_full_overwrite_removes_ghost_buckets(spark, tmp_path):
         [(f"c{i}", i) for i in range(40)], "conv_id string, v int"
     )
     io.write_bucketed(full, p)
-    all_buckets = {
-        r[BUCKET_COL]
-        for r in spark.read.parquet(p).select(BUCKET_COL).distinct().collect()
+
+    def per_bucket():
+        rows = spark.read.parquet(p).groupBy(BUCKET_COL).count().collect()
+        return {r[BUCKET_COL]: r["count"] for r in rows}
+
+    before = per_bucket()
+    assert len(before) == 4
+    io.write_bucketed(full.filter("conv_id = 'c0'"), p)
+    after = per_bucket()
+    hit = spark.read.parquet(p).filter("conv_id = 'c0'").first()[BUCKET_COL]
+    assert before[hit] > 1 and after[hit] == 1
+    assert {b: n for b, n in after.items() if b != hit} == {
+        b: n for b, n in before.items() if b != hit
     }
-    assert len(all_buckets) == 4
-    one_conv = full.limit(1)
-    # dynamic (default): untouched buckets survive
-    io.write_bucketed(one_conv, p)
-    assert spark.read.parquet(p).count() > 1
-    # static: the whole table is replaced
-    io.write_bucketed(one_conv, p, overwrite_partitions=False)
-    assert spark.read.parquet(p).count() == 1

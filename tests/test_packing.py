@@ -85,11 +85,6 @@ def test_deterministic_across_partitionings(spark, docs):
     assert a == b
 
 
-def test_drop_last_partial(spark, docs):
-    seqs = pack_sequences(docs, L, n_buckets=4, drop_last_partial=True).collect()
-    assert all(s["n_tokens"] == L for s in seqs)
-
-
 def test_portable_bucket_duckdb_replay(spark, docs):
     got = docs.select(
         "doc_id", bucket_col(F.col("doc_id"), 64).alias("b")

@@ -216,6 +216,26 @@ def test_artifact_persist_and_reload(spark, tmp_path):
     assert os.path.exists(os.path.join(art, "_SUCCESS"))
 
 
+def test_artifact_probe_error_propagates(spark, tmp_path, monkeypatch):
+    """A failed Hadoop-FS probe of the artifact's commit marker must
+    raise, not read as "no artifact": a silent refit would overwrite the
+    run's committed model."""
+    from pii_redaction_data_pipeline_spark.functions.perplexity import (
+        load_or_train_char_trigram_lm,
+    )
+    from pii_redaction_data_pipeline_spark.sources import fsutil
+
+    def broken(*_args, **_kwargs):
+        raise OSError("filesystem unavailable")
+
+    monkeypatch.setattr(fsutil, "hadoop_fs", broken)
+    df = spark.createDataFrame([(t,) for t in TEXTS if t], "text string")
+    art = tmp_path / "ppl" / "run-a"
+    with pytest.raises(OSError, match="filesystem unavailable"):
+        load_or_train_char_trigram_lm(spark, df, str(art))
+    assert not art.exists()
+
+
 def test_run_pipeline_persists_ppl_artifact_for_resume(spark, tiny, tmp_path):
     """run_pipeline with train_ppl_on_corpus commits the model artifact
     under the output dir keyed by run_id, the annotated parquet read is

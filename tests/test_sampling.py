@@ -12,7 +12,6 @@ from pii_redaction_data_pipeline_spark.operators.sampling import (
     rate_threshold,
     sample_bucket_col,
     stratified_sample,
-    xxhash_gate,
 )
 
 
@@ -85,15 +84,6 @@ def test_stratified_rates(docs):
     assert abs(counts["web"] / 667 - 0.2) < 0.1
 
 
-def test_xxhash_gate_deterministic(docs):
-    a = set(r["doc_id"] for r in xxhash_gate(docs, 0.4, ["doc_id"], seed=5).collect())
-    b = set(
-        r["doc_id"]
-        for r in xxhash_gate(docs.repartition(13), 0.4, ["doc_id"], seed=5).collect()
-    )
-    assert a == b and abs(len(a) / 2000 - 0.4) < 0.05
-
-
 def test_mix_corpora_quotas(spark, docs):
     web = docs.filter(F.col("source") == "web").drop("source")
     books = docs.filter(F.col("source") == "books").drop("source")
@@ -117,13 +107,8 @@ def test_mix_corpora_quotas(spark, docs):
 
 
 def test_bad_spec_validation(docs):
-    """Round-2 advice: xxhash_gate validates rate like rate_threshold,
-    and mix_corpora rejects an all-zero weight spec instead of
+    """mix_corpora rejects an all-zero weight spec instead of
     ZeroDivisionError."""
-    with pytest.raises(ValueError):
-        xxhash_gate(docs, 1.5, ["doc_id"])
-    with pytest.raises(ValueError):
-        xxhash_gate(docs, -0.1, ["doc_id"])
     with pytest.raises(ValueError):
         mix_corpora({"a": (docs, 0.0), "b": (docs, 0.0)}, 100, ["doc_id"])
 
