@@ -37,12 +37,14 @@ from pii_redaction_data_pipeline_spark.functions.quality import (
     repetition_frac_series,
     text_stats_frame,
 )
-from pii_redaction_data_pipeline_spark.functions.scrub import scrub_frame
+from pii_redaction_data_pipeline_spark.functions.scrub import (
+    MASK_PREFIX,
+    MASK_TOKEN_RE,
+    scrub_frame,
+)
 
-from pii_redaction_data_pipeline_spark.functions.scrub import MASK_TOKEN_RE
-
-# compiled from scrub's canonical constant so a mask-format change can
-# never desync the ppl input stripper from what the scrubber emits
+# scrub's mask pattern and prefix, so a mask-format change there changes
+# what the ppl input stripper looks for and removes
 _MASK_RE = re.compile(MASK_TOKEN_RE)
 
 # --- D1 text normalization (SURVEY.md §2.8 D1: the Spark analog of the
@@ -97,7 +99,7 @@ def ppl_input_series(scrubbed: pd.Series) -> pd.Series:
     trim(regexp_replace(regexp_replace(scrubbed, MASK, ' '), '\\s+', ' '))."""
 
     def strip_one(t: str) -> str:
-        if "[REDACTED " in t:
+        if MASK_PREFIX in t:
             t = _MASK_RE.sub(" ", t)
         return _WS_ANOMALY_RE.sub(" ", t).strip(" ")
 

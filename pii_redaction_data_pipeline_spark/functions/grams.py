@@ -35,20 +35,27 @@ from pyspark.sql import functions as F
 _WORDS_ATTR = "_gram_ws"
 
 
+def normalized_text(text: Column) -> Column:
+    """lower + whitespace-collapse + trim — the one word normalization of
+    the gram family, the conversation-window text hash, the quality
+    classifier's grams and the exact-dedup fingerprint. NULL stays NULL."""
+    return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
+
+
 def normalized_words(text_col: str) -> Column:
-    """lower + whitespace-collapse + trim, split on single spaces — the
-    shared normalization of the decontaminate/DSIR/jaccard/minhash gram
-    family (an empty text yields one empty-string word, matching the
-    DuckDB oracles). NULL text coalesces to '' FIRST — split(NULL) is NULL,
-    NULL gram arrays explode to zero rows, and the document would
-    silently vanish from every downstream frame (DSIR's 'one row per
-    corpus document' contract breaks with no error); the pipeline's
-    NULL->'' convention (plans/pipeline.py annotate) applies here too.
+    """`normalized_text` split on single spaces — the shared words of the
+    decontaminate/DSIR/jaccard/minhash gram family (an empty text yields
+    one empty-string word, matching the DuckDB oracles). NULL text
+    coalesces to '' FIRST — split(NULL) is NULL, NULL gram arrays
+    explode to zero rows, and the document would silently vanish from
+    every downstream frame (DSIR's 'one row per corpus document'
+    contract breaks with no error); the pipeline's NULL->'' convention
+    (plans/pipeline.py annotate) applies here too.
     repeated_span_dedup deliberately does NOT use this: its passthrough
     contract is byte identity, so it splits on raw ``\\s+`` without
     case folding (and coalesces NULL itself)."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    return F.split(F.lower(F.trim(F.regexp_replace(t, r"\s+", " "))), " ")
+    return F.split(normalized_text(t), " ")
 
 
 def explode_grams(

@@ -313,10 +313,9 @@ def _artifact_committed(spark, artifact_path: str) -> bool:
     can write to (local, HDFS, object stores), not just the local FS. A
     probe error propagates: reading it as "absent" would refit and
     overwrite the run's committed model artifact."""
-    from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
+    from pii_redaction_data_pipeline_spark.sources import fsutil
 
-    _, fs, p = hadoop_fs(spark, artifact_path + "/_SUCCESS")
-    return bool(fs.exists(p))
+    return fsutil.exists(spark, artifact_path + "/_SUCCESS")
 
 
 def make_ppl_udf(spark, model: CharTrigramLM | None = None):

@@ -15,14 +15,18 @@ All patterns are RE2-compatible (no lookaround/backrefs) so the exact
 same pattern strings run in Spark `regexp_replace`, DuckDB, and Python
 `re` — this is what makes the DuckDB oracle comparison exact.
 
-Vectorization: each pattern is applied with `pd.Series.str.count` +
-`pd.Series.str.replace` (C-level loops over the Arrow batch). The only
-per-match Python is the Luhn check on credit-card *candidates*, gated by
-a vectorized prefilter so clean batches never enter Python row loops.
+Vectorization: each `PATTERNS` row carries its own prefilter, a cheap
+vectorized test that selects a superset of the rows the pattern can
+match. `candidate_rows` runs each distinct prefilter once per batch;
+the pattern then runs with `pd.Series.str.count` +
+`pd.Series.str.replace` (C-level loops over the Arrow batch) on the
+selected rows only. The only per-match Python is the Luhn check on
+credit-card *candidates*, so clean batches never enter Python row loops.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 import numpy as np
@@ -58,29 +62,19 @@ PROFANITY_WORDS: tuple[str, ...] = (
 PROFANITY_RE = r"(?i)\b(?:" + "|".join(PROFANITY_WORDS) + r")\b"
 
 
+#: every mask token starts with this; `token()` builds from it and
+#: consumers that look for masks test it or match `MASK_TOKEN_RE`
+MASK_PREFIX = "[REDACTED "
+
+
 def token(pii_type: str) -> str:
-    return f"[REDACTED {pii_type}]"
+    return f"{MASK_PREFIX}{pii_type}]"
 
 
-#: regex matching every mask token `token()` can emit — THE canonical
-#: pattern for consumers that need to strip/skip masks (the fused ppl
-#: scorer's _MASK_RE mirrors it; a format change here must change there)
-MASK_TOKEN_RE = r"\[REDACTED [A-Z_]+\]"
-
-
-# (type, pattern, needs_luhn) — order is the precedence contract.
-PATTERNS: tuple[tuple[str, str, bool], ...] = (
-    ("EMAIL", EMAIL_RE, False),
-    ("IP", IPV6_RE, False),
-    ("IP", IPV4_RE, False),
-    ("SSN", SSN_RE, False),
-    ("CREDIT_CARD", CC_RE, True),
-    ("PHONE", PHONE_RE, False),
-    ("PROFANITY", PROFANITY_RE, False),
-)
-
-_COMPILED = [(t, re.compile(p), luhn) for t, p, luhn in PATTERNS]
-PII_TYPES: tuple[str, ...] = ("EMAIL", "IP", "SSN", "CREDIT_CARD", "PHONE", "PROFANITY")
+#: regex matching every mask token `token()` can emit — the one pattern
+#: for consumers that strip or skip masks (the fused ppl scorer's
+#: _MASK_RE compiles it)
+MASK_TOKEN_RE = re.escape(MASK_PREFIX) + r"[A-Z_]+\]"
 
 
 def luhn_valid(digits: str) -> bool:
@@ -91,68 +85,20 @@ def luhn_valid(digits: str) -> bool:
     return total % 10 == 0
 
 
-def _cc_scan_replace(rx: re.Pattern, text: str) -> tuple[str, int]:
-    """Replace Luhn-valid card candidates. A Luhn-REJECTED candidate must
-    not consume its span (re.sub would), else an overlapping real card
-    starting inside it is missed — scan resumes at start+1 instead."""
-    out: list[str] = []
-    pos = 0
-    count = 0
-    while True:
-        m = rx.search(text, pos)
-        if m is None:
-            out.append(text[pos:])
-            break
-        if luhn_valid(m.group(0)):
-            out.append(text[pos : m.start()])
-            out.append(token("CREDIT_CARD"))
-            pos = m.end()
-            count += 1
-        else:
-            out.append(text[pos : m.start() + 1])
-            pos = m.start() + 1
-    return "".join(out), count
+# --- prefilters: texts -> bool mask, a superset of the rows a pattern
+# can match. Mask tokens hold no digit, '@', ':' or lexicon word, so a
+# prefilter run on the unmasked batch also covers every masked stage.
 
 
-def scrub_text_value(text: str) -> tuple[str, dict[str, int]]:
-    """Scalar reference implementation (used by datagen + property tests)."""
-    counts: dict[str, int] = {}
-    for pii_type, rx, needs_luhn in _COMPILED:
-        if needs_luhn:
-            text, n = _cc_scan_replace(rx, text)
-            if n:
-                counts[pii_type] = counts.get(pii_type, 0) + n
-        else:
-            text, n = rx.subn(token(pii_type), text)
-            if n:
-                counts[pii_type] = counts.get(pii_type, 0) + n
-    return text, counts
+@functools.cache
+def _has(literal: str):
+    """Rows containing `literal` (cached, so equal literals share one
+    prefilter and `candidate_rows` runs it once)."""
 
+    def has(s: pd.Series) -> np.ndarray:
+        return s.str.contains(literal, regex=False).to_numpy()
 
-# cheap prefilters: a pattern can only match rows containing its trigger
-# (a literal char or the digit-core prescan), so the expensive
-# count+replace scans run on that subset only.
-# PROFANITY trigger: the (?i) unanchored alternation defeats re's literal
-# optimizations (measured ~7.6 us/row over a full batch), but a casefolded
-# plain-substring prefilter is a guaranteed superset of \b-anchored (?i)
-# matches — `casefold` (not `lower`) because re's IGNORECASE matches
-# extended foldings like U+017F LONG S ~ 's'. frakking ⊃ frak, so frak
-# covers both.
-_PROFANITY_TRIGGERS: tuple[str, ...] = (
-    "frak", "gorram", "smeg", "shazbot", "felgercarb",
-)
-_TRIGGERS: dict[int, str | None] = {}
-for _idx, (_t, _p, _l) in enumerate(PATTERNS):
-    if _t == "EMAIL":
-        _TRIGGERS[_idx] = "@"
-    elif _p == IPV6_RE:
-        _TRIGGERS[_idx] = ":"
-    elif _t in ("IP", "SSN", "CREDIT_CARD", "PHONE"):
-        _TRIGGERS[_idx] = "digit"
-    elif _t == "PROFANITY":
-        _TRIGGERS[_idx] = "profanity"
-    else:
-        _TRIGGERS[_idx] = None
+    return has
 
 
 def _digit_core_mask(s: pd.Series) -> np.ndarray:
@@ -185,60 +131,121 @@ def _digit_core_mask(s: pd.Series) -> np.ndarray:
     return out
 
 
+# the lexicon words that hold no other lexicon word: a row holding any
+# word holds one of these (frakking holds frak)
+_PROFANITY_CORES = tuple(
+    w for w in PROFANITY_WORDS if not any(v != w and v in w for v in PROFANITY_WORDS)
+)
+
+
+def _has_profanity(s: pd.Series) -> np.ndarray:
+    """Rows whose casefolded text holds a lexicon word (the (?i)
+    alternation itself costs ~7.6 us/row). re's IGNORECASE matches 's'
+    to U+017F and 'k' to U+212A, which casefold folds; it also matches
+    'i' to U+0131 and U+0130, which casefold leaves as 'ı' and 'i'+U+0307."""
+    folded = s.str.casefold()
+    if any("i" in w for w in _PROFANITY_CORES):
+        folded = folded.str.replace("\u0131", "i", regex=False)
+        folded = folded.str.replace("\u0307", "", regex=False)
+    out = np.zeros(len(s), dtype=bool)
+    for w in _PROFANITY_CORES:
+        out |= folded.str.contains(w, regex=False).to_numpy()
+    return out
+
+
+# (type, compiled regex, needs_luhn, prefilter) — order is the
+# precedence contract. Every consumer (scrub, entities, the lineage
+# PII taxonomy) reads this table; a new pattern is one new row.
+PATTERNS: tuple = (
+    ("EMAIL", re.compile(EMAIL_RE), False, _has("@")),
+    ("IP", re.compile(IPV6_RE), False, _has(":")),
+    ("IP", re.compile(IPV4_RE), False, _digit_core_mask),
+    ("SSN", re.compile(SSN_RE), False, _digit_core_mask),
+    ("CREDIT_CARD", re.compile(CC_RE), True, _digit_core_mask),
+    ("PHONE", re.compile(PHONE_RE), False, _digit_core_mask),
+    ("PROFANITY", re.compile(PROFANITY_RE), False, _has_profanity),
+)
+
+PII_TYPES: tuple[str, ...] = tuple(dict.fromkeys(t for t, *_ in PATTERNS))
+
+
+def candidate_rows(s: pd.Series) -> list[np.ndarray]:
+    """-> one bool mask per `PATTERNS` row: the rows its prefilter
+    selects. Each distinct prefilter runs once per batch (IPv4, SSN,
+    CREDIT_CARD and PHONE share the digit-core scan)."""
+    masks: dict = {}
+    for *_, prefilter in PATTERNS:
+        if prefilter not in masks:
+            masks[prefilter] = prefilter(s)
+    return [masks[prefilter] for *_, prefilter in PATTERNS]
+
+
+def matches(rx: re.Pattern, text: str, needs_luhn: bool):
+    """Leftmost, non-overlapping matches of `rx` in `text` — the spans
+    `rx.subn` would replace. With `needs_luhn`, a Luhn-REJECTED candidate
+    does not consume its span (re.sub would): the scan resumes at its
+    start + 1, else an overlapping real card starting inside it is
+    missed."""
+    pos = 0
+    while (m := rx.search(text, pos)) is not None:
+        if needs_luhn and not luhn_valid(m.group(0)):
+            pos = m.start() + 1
+            continue
+        yield m
+        pos = max(m.end(), m.start() + 1)
+
+
+def _luhn_replace(rx: re.Pattern, text: str, pii_type: str) -> tuple[str, int]:
+    out: list[str] = []
+    pos = n = 0
+    for m in matches(rx, text, True):
+        out += (text[pos : m.start()], token(pii_type))
+        pos = m.end()
+        n += 1
+    out.append(text[pos:])
+    return "".join(out), n
+
+
+def scrub_text_value(text: str) -> tuple[str, dict[str, int]]:
+    """Scalar reference implementation (used by datagen + property tests)."""
+    counts: dict[str, int] = {}
+    for pii_type, rx, needs_luhn, _ in PATTERNS:
+        if needs_luhn:
+            text, n = _luhn_replace(rx, text, pii_type)
+        else:
+            text, n = rx.subn(token(pii_type), text)
+        if n:
+            counts[pii_type] = counts.get(pii_type, 0) + n
+    return text, counts
+
+
 def scrub_frame(texts: pd.Series) -> pd.DataFrame:
     """Vectorized scrub of a batch: -> DataFrame(scrubbed_text, scrub_counts).
 
     scrub_counts is a dict per row with only the PII types that matched.
+    Each pattern runs on the rows its prefilter selects only.
     """
-    s = texts.fillna("")
-    per_type = {t: np.zeros(len(s), dtype=np.int64) for t in PII_TYPES}
-    # rows with only small scattered numbers ("returned 12 items") skip
-    # all four expensive digit-pattern scans entirely
-    has_digit = _digit_core_mask(s)
-
-    for pat_i, (pii_type, rx, needs_luhn) in enumerate(_COMPILED):
-        trigger = _TRIGGERS[pat_i]
-        if trigger == "digit":
-            cand = has_digit
-        elif trigger == "profanity":
-            folded = s.str.casefold()
-            cand = np.zeros(len(s), dtype=bool)
-            for w in _PROFANITY_TRIGGERS:
-                cand |= folded.str.contains(w, regex=False).to_numpy()
-        elif trigger is not None:
-            cand = s.str.contains(trigger, regex=False).to_numpy()
+    s = texts.fillna("").reset_index(drop=True)
+    per_type = {t: np.zeros(len(s), dtype=np.int64) for t, *_ in PATTERNS}
+    for (pii_type, rx, needs_luhn, _), cand in zip(PATTERNS, candidate_rows(s)):
+        if not cand.any():
+            continue
+        n = s[cand].str.count(rx)
+        pos = n.index[n.to_numpy() > 0]
+        if not len(pos):
+            continue
+        if needs_luhn:  # the count and mask of Luhn-valid candidates only
+            new, hits = zip(*(_luhn_replace(rx, t, pii_type) for t in s.iloc[pos]))
         else:
-            cand = None  # run on the full batch
-
-        if cand is not None:
-            if not cand.any():
-                continue
-            sub = s[cand]
-        else:
-            sub = s
-
-        if needs_luhn:
-            mask = sub.str.count(rx) > 0
-            if mask.any():
-                idx = mask.index[mask.to_numpy()]
-                vals = s.to_numpy(dtype=object)
-                pos = s.index.get_indexer(idx)
-                add = per_type[pii_type]
-                for p in pos:
-                    vals[p], n = _cc_scan_replace(rx, vals[p])
-                    add[p] += n
-                s = pd.Series(vals, index=s.index)
-        else:
-            n = sub.str.count(rx)
-            if n.to_numpy().any():
-                hit = n[n > 0]
-                pos = s.index.get_indexer(hit.index)
-                per_type[pii_type][pos] += hit.to_numpy()
-                repl = sub[n > 0].str.replace(rx, token(pii_type), regex=True)
-                s = s.copy()
-                s.iloc[pos] = repl
+            new = s.iloc[pos].str.replace(rx, token(pii_type), regex=True)
+            hits = n[pos]
+        per_type[pii_type][pos] += np.asarray(hits)
+        s = s.copy()
+        s.iloc[pos] = np.asarray(new, dtype=object)
     counts = [
-        {t: int(per_type[t][i]) for t in PII_TYPES if per_type[t][i] > 0}
+        {t: int(c[i]) for t, c in per_type.items() if c[i] > 0}
         for i in range(len(s))
     ]
-    return pd.DataFrame({"scrubbed_text": s, "scrub_counts": counts}, index=texts.index)
+    return pd.DataFrame(
+        {"scrubbed_text": s.to_numpy(), "scrub_counts": counts}, index=texts.index
+    )

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pii_redaction_data_pipeline_spark.functions.grams import normalized_text
+
 # BPE-ish pre-tokenizer: letter runs, digit runs, single non-space symbol
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -23,7 +25,7 @@ def bpe_token_count(text: Column) -> Column:
 
 def content_fingerprint(text: Column) -> Column:
     """Normalized md5 fingerprint (exact-dedup key)."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))))
+    return F.md5(normalized_text(text))
 
 
 def quality_score(

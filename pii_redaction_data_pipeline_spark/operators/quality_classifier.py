@@ -70,6 +70,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redaction_data_pipeline_spark.functions.grams import normalized_text
 from pii_redaction_data_pipeline_spark.operators.sampling import (
     _HEX_SPAN,
     sample_bucket_col,
@@ -89,10 +90,7 @@ def _gram_arrays(df: DataFrame, text_col: str, use_bigrams: bool) -> DataFrame:
     """text -> array of word uni(+bi)grams, normalized exactly like the
     dedup/decontaminate/DSIR family (lower + whitespace collapse) so one
     mental model covers every gram-based operator."""
-    words = F.split(
-        F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))), " "
-    )
-    df = df.withColumn(_WORDS, words)
+    df = df.withColumn(_WORDS, F.split(normalized_text(F.col(text_col)), " "))
     if use_bigrams:
         # space-joined consecutive pairs, same output as ml.feature.NGram(n=2)
         # but pure Catalyst (codegen'd, no per-row Scala closure):

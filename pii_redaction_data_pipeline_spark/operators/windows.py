@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _norm_text(col):
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
+from pii_redaction_data_pipeline_spark.functions.grams import normalized_text
 
 
 def with_conversation_flags(
@@ -42,7 +40,7 @@ def with_conversation_flags(
     phase-1 partitioning and pass it here.
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    h = F.col(hash_col) if hash_col else F.xxhash64(_norm_text(F.col(text_col)))
+    h = F.col(hash_col) if hash_col else F.xxhash64(normalized_text(F.col(text_col)))
 
     # duplicate turn: same text-hash seen earlier in the conversation.
     # Tool turns are excluded — repeated tool output is the tool_loop

@@ -37,10 +37,8 @@ from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark.config import PipelineConfig
 from pii_redaction_data_pipeline_spark.functions.fused import make_annotate_udf
-from pii_redaction_data_pipeline_spark.operators.windows import (
-    _norm_text,
-    with_conversation_flags,
-)
+from pii_redaction_data_pipeline_spark.functions.grams import normalized_text
+from pii_redaction_data_pipeline_spark.operators.windows import with_conversation_flags
 from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
 from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
@@ -197,7 +195,7 @@ def annotate(
     # reference's retain_orig_docs=false: originals deleted after
     # redaction, redact.py:240-243) — that halves phase-2 shuffle and
     # output bytes at corpus scale.
-    df = df.withColumn("_th", F.xxhash64(_norm_text(text)))
+    df = df.withColumn("_th", F.xxhash64(normalized_text(text)))
     if not cfg.retain_original_text:
         df = df.drop("text")
     else:
@@ -312,11 +310,12 @@ def lineage_metrics(
     Plan shape: ONE scan of the written table and ONE groupBy(bucket)
     whose aggregate list is built from the FIXED taxonomies — one
     conditional sum per drop reason (config.DROP_REASONS) and per PII
-    type (scrub.PII_TYPES) — then the maps are reassembled from the
-    nonzero columns. No explode, no per-key shuffle, no collect_list
-    pivot: the previous explode shape re-materialized ~3 rows per output
-    row before its (bucket, kind, key) exchange, which at 100 TB tripled
-    the pass this table exists to keep cheap. The taxonomy-column trick
+    type (scrub.PII_TYPES, the types of `scrub.PATTERNS`) — then the
+    maps are reassembled from the nonzero columns. No explode, no
+    per-key shuffle, no collect_list pivot: the previous explode shape
+    re-materialized ~3 rows per output row before its (bucket, kind, key)
+    exchange, which at 100 TB tripled the pass this table exists to keep
+    cheap. The taxonomy-column trick
     is only legal because both key sets are closed at config time (the
     reference's Manifest counts are likewise a fixed column set,
     pii-output.py:91-93)."""

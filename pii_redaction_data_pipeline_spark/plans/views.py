@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pii_redaction_data_pipeline_spark.functions.scrub import token
+
 ROLES = ("admin", "reviewer", "consumer")
 
 #: columns that can carry raw PII and must not reach a non-admin:
@@ -57,7 +59,7 @@ def _mask_entities(col: F.Column) -> F.Column:
     return F.transform(
         col,
         lambda e: F.struct(
-            F.concat(F.lit("[REDACTED "), e["type"], F.lit("]")).alias("text"),
+            F.format_string(token("%s"), e["type"]).alias("text"),
             e["type"].alias("type"),
             e["score"].alias("score"),
             e["begin"].alias("begin"),

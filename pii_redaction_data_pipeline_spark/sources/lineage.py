@@ -52,10 +52,9 @@ class LineageStore:
         # FileNotFound stack trace and fired a failed-query event that
         # Spark 4's ObservationManager listener re-analyzes (driver-log
         # noise measured once per fresh-dir DAG run)
-        from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
+        from pii_redaction_data_pipeline_spark.sources import fsutil
 
-        _, fs, jpath = hadoop_fs(self.spark, self.path)
-        return bool(fs.exists(jpath))
+        return fsutil.exists(self.spark, self.path)
 
     def read(self) -> DataFrame:
         if not self._exists():

@@ -84,10 +84,9 @@ class TableIO:
         location as raw parquet, superseded snapshots included."""
         if "/" not in path:
             return True
-        from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
+        from pii_redaction_data_pipeline_spark.sources import fsutil
 
-        _, fs, p = hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
-        return bool(fs.exists(p))
+        return fsutil.exists(self.spark, path.rstrip("/") + "/metadata")
 
     def write_bucketed(self, df: DataFrame, path: str):
         """Write partitioned by part_bucket. Only the buckets present in
@@ -98,6 +97,3 @@ class TableIO:
             df = with_bucket(df, self.n_buckets)
         w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         w.partitionBy(BUCKET_COL).parquet(path)
-
-    def append(self, df: DataFrame, path: str):
-        df.write.mode("append").parquet(path)

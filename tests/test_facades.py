@@ -77,14 +77,13 @@ def test_tableio_iceberg_probe_and_read_errors_propagate(monkeypatch):
     def unprobeable(spark, path):
         raise OSError("filesystem unreachable")
 
-    monkeypatch.setattr(fsutil, "hadoop_fs", unprobeable)
+    monkeypatch.setattr(fsutil, "exists", unprobeable)
     with pytest.raises(OSError, match="unreachable"):
         io.read("some/dir")
     assert log == []
 
     def probe(has_marker):
-        fs = types.SimpleNamespace(exists=lambda p: has_marker)
-        monkeypatch.setattr(fsutil, "hadoop_fs", lambda s, p: (None, fs, p))
+        monkeypatch.setattr(fsutil, "exists", lambda s, p: has_marker)
 
     probe(False)
     assert io.read("some/dir") == "df:parquet:some/dir"

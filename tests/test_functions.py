@@ -387,40 +387,31 @@ def test_ru_confidence_clipped_to_probability():
         assert (out["lang_conf"] <= 1.0).all(), fn.__name__
 
 
-def test_entities_prefilter_derives_from_scrub_triggers():
-    """The candidate-row prescan must derive from scrub._TRIGGERS, not a
-    hand-copied literal list: a pattern whose trigger the prescan cannot
-    express (None) disables the prefilter so no row is skipped (round-5
-    review finding: a new PII pattern would silently desync entities
-    from scrub_counts)."""
+def test_pattern_row_carries_its_own_prefilter(monkeypatch):
+    """A pattern appended to scrub.PATTERNS with its own prefilter needs
+    no other change: scrub_frame masks it and entities_frame finds it
+    (round-5 review finding: a new PII pattern must not desync entities
+    from scrub_counts). entities_frame scans only the rows that some
+    prefilter selects."""
     import re as _re
 
     import pandas as pd
 
     from pii_redaction_data_pipeline_spark.functions import entities, scrub
 
-    fake_idx = len(scrub.PATTERNS)
-    scrub._COMPILED.append(("TESTTYPE", _re.compile("zqxptn"), False))
-    scrub._TRIGGERS[fake_idx] = None
-    try:
-        out = entities.entities_frame(pd.Series(["hello zqxptn world"]))
-        assert [e["type"] for e in out.iloc[0]] == ["TESTTYPE"]
-    finally:
-        scrub._COMPILED.pop()
-        del scrub._TRIGGERS[fake_idx]
+    def has_zq(s):
+        return s.str.contains("zq", regex=False).to_numpy()
 
+    new_row = ("TESTTYPE", _re.compile(r"\bzq[a-z]+"), False, has_zq)
+    monkeypatch.setattr(scrub, "PATTERNS", scrub.PATTERNS + (new_row,))
+    texts = ["hello zqxptn world", "plain words only", "no triggers here", "mail a@b.co"]
 
-def test_entities_prefilter_off_for_unknown_trigger_kind(monkeypatch):
-    """A trigger kind the prescan does not know (here a future
-    'colon-digit') must disable the prefilter like None does: every row
-    is scanned, including rows no known trigger would select."""
-    import pandas as pd
+    out = scrub.scrub_frame(pd.Series(texts))
+    assert list(out["scrubbed_text"]) == [
+        "hello [REDACTED TESTTYPE] world", texts[1], texts[2], "mail [REDACTED EMAIL]",
+    ]
+    assert list(out["scrub_counts"]) == [{"TESTTYPE": 1}, {}, {}, {"EMAIL": 1}]
 
-    from pii_redaction_data_pipeline_spark.functions import entities, scrub
-
-    monkeypatch.setattr(
-        scrub, "_TRIGGERS", {**scrub._TRIGGERS, len(scrub.PATTERNS): "colon-digit"}
-    )
     scanned = []
     real = entities.extract_entities_value
 
@@ -429,7 +420,7 @@ def test_entities_prefilter_off_for_unknown_trigger_kind(monkeypatch):
         return real(text)
 
     monkeypatch.setattr(entities, "extract_entities_value", spy)
-    texts = ["plain words only", "no triggers here either", "mail a@b.co"]
-    entities.entities_frame(pd.Series(texts))
-    assert scanned == texts
+    ents = entities.entities_frame(pd.Series(texts))
+    assert [[e["type"] for e in row] for row in ents] == [["TESTTYPE"], [], [], ["EMAIL"]]
+    assert scanned == [texts[0], texts[3]]
 

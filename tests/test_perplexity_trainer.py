@@ -228,7 +228,7 @@ def test_artifact_probe_error_propagates(spark, tmp_path, monkeypatch):
     def broken(*_args, **_kwargs):
         raise OSError("filesystem unavailable")
 
-    monkeypatch.setattr(fsutil, "hadoop_fs", broken)
+    monkeypatch.setattr(fsutil, "exists", broken)
     df = spark.createDataFrame([(t,) for t in TEXTS if t], "text string")
     art = tmp_path / "ppl" / "run-a"
     with pytest.raises(OSError, match="filesystem unavailable"):

@@ -12,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pii_redaction_data_pipeline_spark.functions.scrub import (
+    PROFANITY_WORDS,
     luhn_valid,
     scrub_frame,
     scrub_text_value,
@@ -79,6 +80,48 @@ def test_vectorized_matches_scalar():
         assert ct == ec
 
 
+# letters re's IGNORECASE matches to an ASCII lexicon letter besides its
+# upper case: LONG S, KELVIN SIGN, dotless i, dotted I
+_FOLDS = {"s": "\u017f", "k": "\u212a", "i": "\u0131\u0130"}
+
+
+@st.composite
+def _lexicon_word(draw):
+    """A lexicon word with each letter lower, upper or a re fold of it."""
+    word = draw(st.sampled_from(PROFANITY_WORDS))
+    return "".join(draw(st.sampled_from([c, c.upper(), *_FOLDS.get(c, "")])) for c in word)
+
+
+_PII_SEEDS = [
+    "4111 1111 1111 1111", "4111-1111-1111-1111", "a@b.co", "jd@ex.org", "fe80::1",
+    "2001:db8:0:0:0:0:2:1", "192.168.0.1", "123-45-6789", "(555) 123-4567",
+    "+1 555.123.4567",
+]
+_PII_DENSE_TEXT = st.lists(
+    st.tuples(
+        st.one_of(
+            st.text(alphabet="0123456789", min_size=1, max_size=4),
+            st.text(alphabet="0123456789@:.-()+ \nabfxſ", min_size=1, max_size=6),
+            st.sampled_from(_PII_SEEDS),
+            _lexicon_word(),
+        ),
+        st.sampled_from(["", " ", ".", "-", ":"]),
+    ),
+    max_size=10,
+).map(lambda parts: "".join(piece + sep for piece, sep in parts))
+
+
+@given(st.lists(_PII_DENSE_TEXT, min_size=1, max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_frame_matches_scalar_on_dense_text(texts):
+    """scrub_frame equals scrub_text_value row by row on PII-dense text:
+    every prefilter selects a superset of the rows its pattern matches,
+    on ASCII and non-ASCII batches alike."""
+    out = scrub_frame(pd.Series(texts))
+    for raw, s, c in zip(texts, out.scrubbed_text, out.scrub_counts):
+        assert (s, c) == scrub_text_value(raw)
+
+
 @given(st.text(max_size=300))
 @settings(max_examples=200, deadline=None)
 def test_idempotent(raw):
@@ -114,3 +157,15 @@ def test_zero_width_obfuscation_never_evades_scrub(zw, pos):
     out = annotate_frame(pd.Series([obfuscated]))
     assert out["scrubbed_text"].iloc[0] == "mail [REDACTED EMAIL] now"
     assert out["scrub_counts"].iloc[0] == {"EMAIL": 1}
+
+
+def test_profanity_prefilter_folds_both_i_forms(monkeypatch):
+    """re's IGNORECASE matches 'i' to U+0131 and U+0130, which casefold
+    does not fold to a plain 'i': a lexicon word with an 'i' must still
+    select those rows (the shipped words are all covered by an i-free
+    one, so the fold is pinned here with a swapped lexicon)."""
+    from pii_redaction_data_pipeline_spark.functions import scrub
+
+    monkeypatch.setattr(scrub, "_PROFANITY_CORES", ("frakking",))
+    texts = pd.Series(["frakkıng", "FRAKKİNG", "Frakking", "frakkng"])
+    assert scrub._has_profanity(texts).tolist() == [True, True, True, False]
