@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pii_redaction_data_pipeline_spark.sources.tables import local_frame
+
 # closed alphabet: letters, digits, space, common punctuation, OOV bucket
 ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 .,!?'-:;\"()"
 OOV = len(ALPHABET)
@@ -301,8 +303,8 @@ def load_or_train_char_trigram_lm(
     # back out from the driver (re-running the scan for the write would
     # double the training cost the artifact exists to avoid)
     model_rows = _sparse_counts_df(df, text_col).collect()
-    spark.createDataFrame(
-        [(int(r["idx"]), int(r["cnt"])) for r in model_rows], "idx long, cnt long"
+    local_frame(
+        spark, [(int(r["idx"]), int(r["cnt"])) for r in model_rows], "idx long, cnt long"
     ).coalesce(1).write.mode("overwrite").parquet(artifact_path)
     return _lm_from_sparse_rows(model_rows)
 

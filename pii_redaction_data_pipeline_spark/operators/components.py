@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pii_redaction_data_pipeline_spark.sources.tables import local_frame
+
 
 def _require_same_id_type(a: DataFrame, col_a: str, b: DataFrame, col_b: str) -> None:
     """Raise on id columns of different types. The labels keep the
@@ -115,7 +117,7 @@ def _driver_components(spark, edges_pdf, id_type: str):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, f"id {id_type}, component_id {id_type}")
+    return local_frame(spark, rows, f"id {id_type}, component_id {id_type}")
 
 
 def connected_components(

@@ -71,6 +71,7 @@ from pii_redaction_data_pipeline_spark.sources.lineage import (
     LINEAGE_SCHEMA,
     LineageStore,
 )
+from pii_redaction_data_pipeline_spark.sources.tables import local_frame
 
 STAGES = ("annotate", "conv_verdict", "conv_dedup", "sample", "pack")
 
@@ -169,6 +170,17 @@ def dedup_survivor_convs(
     return kept_convs.select("conv_id").join(dropped, "conv_id", "anti")
 
 
+def stage_mark(spark: SparkSession, run_id: str, stage: str, rows_out: int) -> DataFrame:
+    """The lineage row that marks `stage` of `run_id` complete: partition
+    `stage:<stage>`, rows_in = rows_out, NULL count maps."""
+    return local_frame(
+        spark,
+        [(run_id, f"stage:{stage}", int(rows_out), int(rows_out),
+          None, None, "complete", int(time.time() * 1000))],
+        LINEAGE_SCHEMA,
+    )
+
+
 def run_curation(
     spark: SparkSession,
     input_path: str,
@@ -242,13 +254,7 @@ def run_curation(
         return {r.partition_id.removeprefix("stage:") for r in rows}
 
     def mark(stage: str, rows_out: int):
-        lineage.append(
-            spark.createDataFrame(
-                [(run_id, f"stage:{stage}", int(rows_out), int(rows_out),
-                  None, None, "complete", int(time.time() * 1000))],
-                LINEAGE_SCHEMA,
-            )
-        )
+        lineage.append(stage_mark(spark, run_id, stage, rows_out))
         if fail_after_stage == stage:
             raise RuntimeError(f"injected failure after stage {stage}")
 

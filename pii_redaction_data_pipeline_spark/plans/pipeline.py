@@ -44,6 +44,7 @@ from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
     TableIO,
     aligned_partitions,
+    local_frame,
     with_bucket,
 )
 
@@ -153,28 +154,32 @@ def annotate(
     # the JVM<->Python Arrow pipe once (functions/fused.py), and ALL
     # per-turn stats come out of that single pass.
     df = df.withColumn("_ann", fused_udf(text))
-    df = (
-        # text becomes the D1-NORMALIZED text from here on (delta-encoded:
-        # _ann.text_norm is NULL when unchanged), so the dup-detection
-        # hash, the scrubbed-vs-text delta encoding, and a retained text
-        # column all see the same normalized form the scrubber saw
-        df.withColumn("text", F.coalesce(F.col("_ann.text_norm"), text))
-        .withColumn("lang", F.col("_ann.lang"))
-        .withColumn("lang_conf", F.col("_ann.lang_conf"))
-        .withColumn("_scrubbed", F.col("_ann.scrubbed_text"))
-        .withColumn("_counts", F.col("_ann.scrub_counts"))
-        .withColumn("ppl", F.col("_ann.ppl"))
-        .withColumn("rep_frac", F.col("_ann.rep_frac"))
-        # n_chars/n_words/symbol_ratio ride the same Arrow exchange:
-        # the numpy single-pass (quality.text_stats_frame) beats the
-        # "cheap" JVM regexp_count + 63-char translate by ~10x at 2M
-        # rows (microbench in BENCH/BASELINE.md); semantics identical
-        # (pinned by tests/test_functions.py::test_text_stats_matches_jvm)
-        .withColumn("n_chars", F.col("_ann.n_chars"))
-        .withColumn("n_words", F.col("_ann.n_words"))
-        .withColumn("symbol_ratio", F.col("_ann.symbol_ratio"))
-        .drop("_ann")
-    )
+    # one withColumns, not one withColumn per field: each withColumn is
+    # a full analysis pass over the growing plan
+    df = df.withColumns(
+        {
+            # text becomes the D1-NORMALIZED text from here on (delta-
+            # encoded: _ann.text_norm is NULL when unchanged), so the
+            # dup-detection hash, the scrubbed-vs-text delta encoding,
+            # and a retained text column all see the same normalized
+            # form the scrubber saw
+            "text": F.coalesce(F.col("_ann.text_norm"), text),
+            "lang": F.col("_ann.lang"),
+            "lang_conf": F.col("_ann.lang_conf"),
+            "_scrubbed": F.col("_ann.scrubbed_text"),
+            "_counts": F.col("_ann.scrub_counts"),
+            "ppl": F.col("_ann.ppl"),
+            "rep_frac": F.col("_ann.rep_frac"),
+            # n_chars/n_words/symbol_ratio ride the same Arrow exchange:
+            # the numpy single-pass (quality.text_stats_frame) beats the
+            # "cheap" JVM regexp_count + 63-char translate by ~10x at 2M
+            # rows (microbench in BENCH/BASELINE.md); semantics identical
+            # (pinned by tests/test_functions.py::test_text_stats_matches_jvm)
+            "n_chars": F.col("_ann.n_chars"),
+            "n_words": F.col("_ann.n_words"),
+            "symbol_ratio": F.col("_ann.symbol_ratio"),
+        }
+    ).drop("_ann")
 
     if cfg.emit_entities:
         # optional second Python stage (still phase 1 / pre-shuffle, on
@@ -360,8 +365,8 @@ def lineage_metrics(
         tax_map("_r_", DROP_REASONS).alias("drop_reason_counts"),
         tax_map("_s_", PII_TYPES).alias("scrub_counts"),
     )
-    all_buckets = annotated_out.sparkSession.createDataFrame(
-        [(int(b),) for b in buckets], f"{BUCKET_COL} int"
+    all_buckets = local_frame(
+        annotated_out.sparkSession, [(int(b),) for b in buckets], f"{BUCKET_COL} int"
     )
     totals = (
         all_buckets.join(totals, BUCKET_COL, "left")
@@ -419,6 +424,10 @@ def run_pipeline(
 
     if fail_after_buckets is not None:
         todo = todo[:fail_after_buckets]
+        if not todo:
+            # nothing to write: the lineage re-read would meet an output
+            # directory without a parquet file and fail to infer a schema
+            raise RuntimeError("injected failure after 0 buckets")
 
     # one Spark job over all remaining buckets (bucket pruning via filter
     # — with Iceberg this is partition pruning on the metadata scan)

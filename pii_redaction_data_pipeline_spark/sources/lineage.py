@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pii_redaction_data_pipeline_spark.sources.tables import local_frame
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -58,11 +60,11 @@ class LineageStore:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
         try:
             return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
         except AnalysisException:  # raced away between probe and read
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
 
     def completed_buckets(self, run_id: str) -> list[int]:
         # a store that does not exist yet (every fresh run) answers

@@ -13,10 +13,38 @@ format is a deployment decision, not a code change.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BUCKET_COL = "part_bucket"
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side `rows` (tuples in `schema`'s field
+    order; `schema` a StructType or a DDL string such as "id long").
+
+    The rows cross to the JVM as one Arrow table and plan as a
+    `LocalTableScan`, so reading the frame starts no Python worker.
+    `spark.createDataFrame(list)` plans `parallelize` plus a Python
+    `map` instead: a PythonRDD of defaultParallelism Python tasks, each
+    paying the fixed ~0.25 s a Python task costs before its first row
+    (SCALE.md, "The cost of a Python task"), even for a 16-row frame.
+    Every frame the package builds on the driver goes through here;
+    tests/test_local_frames.py fails on any other `createDataFrame`."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def iceberg_available(spark: SparkSession) -> bool:

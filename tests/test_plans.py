@@ -178,6 +178,29 @@ def test_pipeline_python_before_shuffle(spark):
     assert conv_only[0] < py < phase1[0], (conv_only, py, phase1)
 
 
+def test_annotate_unpack_in_one_call_keeps_the_plan(spark, tiny, monkeypatch):
+    """`annotate` unpacks the fused UDF's struct with one `withColumns`
+    (one analysis pass) instead of a `withColumn` per field; the
+    optimized plan must be the one the per-field form built."""
+    from pii_redaction_data_pipeline_spark.config import PipelineConfig
+    from pii_redaction_data_pipeline_spark.plans.pipeline import annotate
+
+    def optimized(df) -> str:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", plan)
+
+    src = spark.read.parquet(tiny[0])
+    one_call = optimized(annotate(src, PipelineConfig(), spark))
+
+    def per_field(self, cols):
+        for name, col in cols.items():
+            self = self.withColumn(name, col)
+        return self
+
+    monkeypatch.setattr(type(src), "withColumns", per_field)
+    assert optimized(annotate(src, PipelineConfig(), spark)) == one_call
+
+
 def test_tune_shuffle_partitions(spark):
     """Volume-based sizing: floored at one wave (the core count) for
     small inputs; grows with the input size estimate for big ones."""

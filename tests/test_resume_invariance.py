@@ -48,6 +48,18 @@ def test_kill_and_resume_identical(spark, tiny, tmp_path):
     assert res2["processed_buckets"] == []
 
 
+def test_crash_before_any_bucket_then_resume(spark, tiny, tmp_path):
+    """fail_after_buckets=0 is the injected failure, not a schema error
+    from re-reading an output that holds no file; nothing is marked
+    complete, so the next call processes every bucket."""
+    out, lin = str(tmp_path / "a"), str(tmp_path / "la")
+    with pytest.raises(RuntimeError, match="after 0 buckets"):
+        run_pipeline(spark, tiny[0], out, lin, run_id="r", fail_after_buckets=0)
+    res = run_pipeline(spark, tiny[0], out, lin, run_id="r")
+    assert not res["resumed"]
+    assert res["processed_buckets"] == list(range(PipelineConfig().n_buckets))
+
+
 def test_partition_count_invariance(spark, tiny):
     """Also pins the ADAPTIVE phase-1 both ways: 2 partitions < cores
     takes the (conv_id, turn_idx) repartition, 37 >= cores skips phase 1
