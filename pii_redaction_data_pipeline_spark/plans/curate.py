@@ -68,10 +68,9 @@ from pii_redaction_data_pipeline_spark.plans.pipeline import (
     run_pipeline,
 )
 from pii_redaction_data_pipeline_spark.sources.lineage import (
-    LINEAGE_SCHEMA,
     LineageStore,
+    stage_row,
 )
-from pii_redaction_data_pipeline_spark.sources.tables import local_frame
 
 STAGES = ("annotate", "conv_verdict", "conv_dedup", "sample", "pack")
 
@@ -170,17 +169,6 @@ def dedup_survivor_convs(
     return kept_convs.select("conv_id").join(dropped, "conv_id", "anti")
 
 
-def stage_mark(spark: SparkSession, run_id: str, stage: str, rows_out: int) -> DataFrame:
-    """The lineage row that marks `stage` of `run_id` complete: partition
-    `stage:<stage>`, rows_in = rows_out, NULL count maps."""
-    return local_frame(
-        spark,
-        [(run_id, f"stage:{stage}", int(rows_out), int(rows_out),
-          None, None, "complete", int(time.time() * 1000))],
-        LINEAGE_SCHEMA,
-    )
-
-
 def run_curation(
     spark: SparkSession,
     input_path: str,
@@ -240,21 +228,8 @@ def run_curation(
     }
     lineage = LineageStore(spark, paths["lineage"])
 
-    def done_stages() -> set[str]:
-        rows = (
-            lineage.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & F.col("partition_id").startswith("stage:")
-                & (F.col("status") == "complete")
-            )
-            .select("partition_id")
-            .collect()
-        )
-        return {r.partition_id.removeprefix("stage:") for r in rows}
-
     def mark(stage: str, rows_out: int):
-        lineage.append(stage_mark(spark, run_id, stage, rows_out))
+        lineage.append([stage_row(run_id, stage, rows_out)])
         if fail_after_stage == stage:
             raise RuntimeError(f"injected failure after stage {stage}")
 
@@ -272,7 +247,7 @@ def run_curation(
         ).parquet(path)
         return int(obs.get["n"])
 
-    done = done_stages()
+    done = lineage.completed_stages(run_id)
     ran: list[str] = []
     stage_walls: dict[str, float] = {}
     _tick_from = [time.monotonic()]
@@ -298,7 +273,9 @@ def run_curation(
                 spark, input_path, paths["annotated"], paths["lineage"],
                 run_id=run_id, cfg=cfg,
             )
-            mark("annotate", cfg.n_buckets)
+            # summed off the bucket lineage rows, so a resumed annotate
+            # counts the buckets an earlier session finished too
+            mark("annotate", lineage.annotated_rows(run_id))
             ran.append("annotate")
             tick("annotate")
     finally:

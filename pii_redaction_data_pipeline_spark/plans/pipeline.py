@@ -44,7 +44,6 @@ from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
     TableIO,
     aligned_partitions,
-    local_frame,
     with_bucket,
 )
 
@@ -304,86 +303,56 @@ def annotated_run_rows(spark: SparkSession, path: str, run_id: str) -> DataFrame
 
 def lineage_metrics(
     annotated_out: DataFrame, run_id: str, buckets: list[int]
-) -> DataFrame:
-    """Aggregate per-bucket lineage rows from the written annotated table.
+) -> list[tuple]:
+    """Per-bucket lineage rows, as the tuples `LineageStore.append` takes,
+    from the written annotated table.
 
     `buckets` is the full set of buckets this run covered — buckets that
     happen to contain zero rows still get a (rows_in=0, complete) row,
     otherwise a rerun would re-process them forever (found by the
     kill-and-resume probe).
 
-    Plan shape: ONE scan of the written table and ONE groupBy(bucket)
-    whose aggregate list is built from the FIXED taxonomies — one
-    conditional sum per drop reason (config.DROP_REASONS) and per PII
-    type (scrub.PII_TYPES, the types of `scrub.PATTERNS`) — then the
-    maps are reassembled from the nonzero columns. No explode, no
-    per-key shuffle, no collect_list pivot: the previous explode shape
-    re-materialized ~3 rows per output row before its (bucket, kind, key)
-    exchange, which at 100 TB tripled the pass this table exists to keep
-    cheap. The taxonomy-column trick
-    is only legal because both key sets are closed at config time (the
-    reference's Manifest counts are likewise a fixed column set,
+    ONE scan of the written table and ONE groupBy(bucket) whose aggregate
+    list is built from the FIXED taxonomies — one conditional sum per
+    drop reason (config.DROP_REASONS) and per PII type (scrub.PII_TYPES,
+    the types of `scrub.PATTERNS`) — collected to the driver: at most one
+    row per bucket. The rows are then assembled in plain Python; each
+    map holds the nonzero counts in sorted key order and is NULL when
+    every count is zero. No explode and no per-key shuffle: the taxonomy
+    columns are legal because both key sets are closed at config time
+    (the reference's Manifest counts are likewise a fixed column set,
     pii-output.py:91-93)."""
     from pii_redaction_data_pipeline_spark.config import DROP_REASONS
     from pii_redaction_data_pipeline_spark.functions.scrub import PII_TYPES
 
     reasons = F.coalesce("drop_reasons", F.array().cast("array<string>"))
     scrubs = F.coalesce("scrub_counts", F.create_map().cast("map<string,int>"))
+    drop_keys, scrub_keys = sorted(DROP_REASONS), sorted(PII_TYPES)
     aggs = [
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.col("keep").cast("long")).alias("rows_out"),
     ]
-    for r in DROP_REASONS:
-        aggs.append(F.sum(F.array_contains(reasons, r).cast("long")).alias(f"_r_{r}"))
-    for t in PII_TYPES:
+    for r in drop_keys:
+        aggs.append(F.sum(F.array_contains(reasons, r).cast("long")))
+    for t in scrub_keys:
         aggs.append(
             F.sum(F.coalesce(F.element_at(scrubs, F.lit(t)), F.lit(0)).cast("long"))
-            .alias(f"_s_{t}")
         )
-    agg = annotated_out.groupBy(BUCKET_COL).agg(*aggs)
+    agg = {r[0]: r[1:] for r in annotated_out.groupBy(BUCKET_COL).agg(*aggs).collect()}
 
-    def tax_map(prefix: str, keys) -> F.Column:
-        # entries in sorted key order (the pivot shape array_sorted too);
-        # zero counts drop out, all-zero -> NULL like the old left join
-        entries = F.filter(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("key"), F.col(f"{prefix}{k}").alias("value")
-                    )
-                    for k in sorted(keys)
-                ]
-            ),
-            lambda s: s["value"] > 0,
-        )
-        return F.when(F.size(entries) > 0, F.map_from_entries(entries))
+    def count_map(keys, counts) -> dict | None:
+        return {k: n for k, n in zip(keys, counts) if n} or None
 
-    totals = agg.select(
-        BUCKET_COL,
-        "rows_in",
-        "rows_out",
-        tax_map("_r_", DROP_REASONS).alias("drop_reason_counts"),
-        tax_map("_s_", PII_TYPES).alias("scrub_counts"),
-    )
-    all_buckets = local_frame(
-        annotated_out.sparkSession, [(int(b),) for b in buckets], f"{BUCKET_COL} int"
-    )
-    totals = (
-        all_buckets.join(totals, BUCKET_COL, "left")
-        .na.fill({"rows_in": 0, "rows_out": 0})
-    )
-    out = (
-        totals.select(
-            F.lit(run_id).alias("run_id"),
-            F.col(BUCKET_COL).cast("string").alias("partition_id"),
-            "rows_in",
-            "rows_out",
-            "drop_reason_counts",
-            "scrub_counts",
-            F.lit("complete").alias("status"),
-            F.lit(int(time.time() * 1000)).alias("finished_seq"),
-        )
-    )
+    finished_seq = int(time.time() * 1000)
+    out = []
+    for b in buckets:
+        rows_in, rows_out, *counts = agg.get(b, (0, 0))
+        out.append((
+            run_id, str(b), rows_in, rows_out,
+            count_map(drop_keys, counts[: len(drop_keys)]),
+            count_map(scrub_keys, counts[len(drop_keys):]),
+            "complete", finished_seq,
+        ))
     return out
 
 

@@ -9,7 +9,17 @@ UnprocessedFilesCount) into one table with a row per (run_id, bucket):
   drop_reason_counts map<string,long>, scrub_counts map<string,long>,
   status ('complete'), finished_seq
 
-Resume = anti-join of input buckets vs completed lineage rows — the
+plus one row per completed curation stage, keyed (run_id,
+"stage:<name>") with NULL count maps (`stage_row`, plans/curate.py).
+
+Callers hand `LineageStore.append` plain tuples in `LINEAGE_SCHEMA`
+order; only the store turns rows into a frame, and no other module
+imports the schema. A run writes at most one row per bucket, so its
+rows are assembled on the driver (plans/pipeline.lineage_metrics
+collects one per-bucket aggregate) and cross to the JVM as one Arrow
+table.
+
+Resume = the input buckets minus the run's completed lineage rows — the
 Spark translation of the reference's "processed files < input files →
 submit more work" loop (textract-bulk.py:108-118). Appends are atomic at
 file granularity; a bucket is only trusted once its row says complete,
@@ -18,6 +28,8 @@ so a crash mid-run re-processes at most the in-flight buckets
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +52,13 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def stage_row(run_id: str, stage: str, rows_out: int) -> tuple:
+    """The lineage row that marks `stage` of `run_id` complete: partition
+    `stage:<stage>`, rows_in = rows_out, NULL count maps."""
+    return (run_id, f"stage:{stage}", rows_out, rows_out, None, None,
+            "complete", int(time.time() * 1000))
+
+
 class LineageStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -60,31 +79,50 @@ class LineageStore:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return local_frame(self.spark, [], LINEAGE_SCHEMA)
+            return self._frame([])
         try:
             return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
         except AnalysisException:  # raced away between probe and read
-            return local_frame(self.spark, [], LINEAGE_SCHEMA)
+            return self._frame([])
+
+    def _completed(self, run_id: str) -> dict[str, int]:
+        """rows_in of each of `run_id`'s complete rows, by partition_id
+        (bucket numbers and "stage:<name>" alike). A store that does not
+        exist yet (every fresh run) answers without a Spark job."""
+        if not self._exists():
+            return {}
+        rows = (
+            self.read()
+            .filter((F.col("run_id") == run_id) & (F.col("status") == "complete"))
+            .select("partition_id", "rows_in")
+            .collect()
+        )
+        return {r.partition_id: r.rows_in for r in rows}
 
     def completed_buckets(self, run_id: str) -> list[int]:
-        # a store that does not exist yet (every fresh run) answers
-        # without a Spark job
-        if not self._exists():
-            return []
-        # partition_id also carries stage-boundary rows ("stage:<name>",
-        # plans/curate.py) — bucket resume only reads the numeric ones
-        df = self.read().filter(
-            (F.col("run_id") == run_id)
-            & (F.col("status") == "complete")
-            & F.col("partition_id").rlike("^[0-9]+$")
-        )
-        return [int(r.partition_id) for r in df.select("partition_id").distinct().collect()]
+        return [int(p) for p in self._completed(run_id) if p.isdecimal()]
 
-    def append(self, df: DataFrame):
-        # one file per append: a frame here is at most one row per bucket
-        # (or one stage row), so the write's partitioning would only
-        # spray tiny files that every later read opens one task each for
-        df.coalesce(1).write.mode("append").parquet(self.path)
+    def completed_stages(self, run_id: str) -> set[str]:
+        return {
+            p.removeprefix("stage:") for p in self._completed(run_id)
+            if p.startswith("stage:")
+        }
+
+    def annotated_rows(self, run_id: str) -> int:
+        """rows_in summed over `run_id`'s complete bucket rows: the run's
+        annotated row count, including buckets that an earlier, resumed
+        session finished."""
+        return sum(n for p, n in self._completed(run_id).items() if p.isdecimal())
+
+    def _frame(self, rows: list[tuple]) -> DataFrame:
+        return local_frame(self.spark, rows, LINEAGE_SCHEMA)
+
+    def append(self, rows: list[tuple]):
+        """Append `rows` (tuples in LINEAGE_SCHEMA order) as ONE file: they
+        are at most one row per bucket (or one stage row), so the write's
+        partitioning would only spray tiny files that every later read
+        opens one task each for."""
+        self._frame(rows).coalesce(1).write.mode("append").parquet(self.path)
 
     def status(
         self,
@@ -106,6 +144,8 @@ class LineageStore:
         if end_seq is not None:
             df = df.filter(F.col("finished_seq") <= end_seq)
         # partition_id is stored as string; order buckets numerically
+        # (try_cast: a "stage:<name>" row is NULL here, where ANSI mode's
+        # cast would fail the query)
         return df.orderBy(
-            F.col("finished_seq").desc(), F.col("partition_id").cast("int")
+            F.col("finished_seq").desc(), F.col("partition_id").try_cast("int")
         )

@@ -64,6 +64,33 @@ def test_kill_and_resume_across_stages(spark, tinydup_path, tmp_path, crash_afte
     assert _packed_canonical(spark, resumed["paths"]["packed"]) == want
 
 
+def test_annotate_mark_counts_resumed_rows(spark, tinydup_path, tmp_path):
+    """The stage:annotate lineage row records the run's annotated row
+    count, including buckets that an earlier, crashed session finished."""
+    import dataclasses
+
+    from pii_redaction_data_pipeline_spark.config import PipelineConfig
+    from pii_redaction_data_pipeline_spark.plans.pipeline import run_pipeline
+    from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
+
+    wd = tmp_path / "w"
+    cfg = dataclasses.replace(PipelineConfig(), retain_original_text=False)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, tinydup_path, str(wd / "annotated"),
+                     str(wd / "lineage"), run_id="c3", cfg=cfg,
+                     fail_after_buckets=5)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_curation(spark, tinydup_path, str(wd), run_id="c3",
+                     fail_after_stage="annotate")
+    (mark,) = (
+        LineageStore(spark, str(wd / "lineage")).read()
+        .filter("partition_id = 'stage:annotate'").collect()
+    )
+    n = spark.read.parquet(str(wd / "annotated")).count()
+    assert spark.read.parquet(tinydup_path).count() == n
+    assert (mark.rows_in, mark.rows_out) == (n, n)
+
+
 def test_dedup_stage_drops_planted_clones(spark, tinydup_path, tmp_path):
     """The conv_dedup stage must drop exactly the planted '-dup' clones
     whose pair survived the verdict gate, always keeping the original

@@ -19,7 +19,6 @@ from pyspark.sql import types as T
 from pii_redaction_data_pipeline_spark.operators.components import (
     _driver_components,
 )
-from pii_redaction_data_pipeline_spark.plans.curate import stage_mark
 from pii_redaction_data_pipeline_spark.plans.pipeline import (
     annotated_run_rows,
     lineage_metrics,
@@ -27,6 +26,7 @@ from pii_redaction_data_pipeline_spark.plans.pipeline import (
 from pii_redaction_data_pipeline_spark.sources.lineage import (
     LINEAGE_SCHEMA,
     LineageStore,
+    stage_row,
 )
 
 PACKAGE = os.path.join(
@@ -48,15 +48,20 @@ def run_rows(spark, tiny_annotated):
     return annotated_run_rows(spark, tiny_annotated[0], "test-run")
 
 
+def lineage_frame(spark, tmp_path, rows):
+    """The frame `LineageStore.append` writes for `rows`."""
+    return LineageStore(spark, str(tmp_path / "lineage"))._frame(rows)
+
+
 FRAMES = {
-    "lineage_metrics": lambda spark, run_rows, tmp_path: lineage_metrics(
-        run_rows, "test-run", list(range(16))
+    "lineage_metrics": lambda spark, run_rows, tmp_path: lineage_frame(
+        spark, tmp_path, lineage_metrics(run_rows, "test-run", list(range(16)))
     ),
     "missing_store_read": lambda spark, run_rows, tmp_path: LineageStore(
         spark, str(tmp_path / "absent")
     ).read(),
-    "stage_mark": lambda spark, run_rows, tmp_path: stage_mark(
-        spark, "r", "conv_dedup", 7
+    "stage_mark": lambda spark, run_rows, tmp_path: lineage_frame(
+        spark, tmp_path, [stage_row("r", "conv_dedup", 7)]
     ),
     "components_string": lambda spark, run_rows, tmp_path: _driver_components(
         spark, pd.DataFrame({"u": ["a", "a", "c"], "v": ["b", "c", "d"]}), "string"
@@ -89,9 +94,11 @@ def test_driver_components_values(spark):
     assert sorted(map(tuple, got.collect())) == [(3, 3), (9, 3), (2**40, 3)]
 
 
-def test_lineage_metrics_of_no_buckets_is_empty(run_rows):
+def test_lineage_metrics_of_no_buckets_is_empty(spark, run_rows, tmp_path):
     """The fail_after_buckets=0 path: no buckets, no rows, lineage schema."""
-    out = lineage_metrics(run_rows.filter(F.lit(False)), "test-run", buckets=[])
+    rows = lineage_metrics(run_rows.filter(F.lit(False)), "test-run", buckets=[])
+    assert rows == []
+    out = lineage_frame(spark, tmp_path, rows)
     assert fields(out.schema) == fields(LINEAGE_SCHEMA)
     assert out.collect() == []
 
@@ -104,11 +111,10 @@ def test_missing_store_reads_empty_lineage_schema(spark, tmp_path):
 
 def test_stage_mark_null_maps_round_trip(spark, tmp_path):
     store = LineageStore(spark, str(tmp_path / "lineage"))
-    mark = stage_mark(spark, "r", "sample", 42)
-    assert mark.schema == LINEAGE_SCHEMA
-    store.append(mark)
-    assert store.read().collect() == mark.collect()
+    mark = stage_row("r", "sample", 42)
+    store.append([mark])
     (row,) = store.read().collect()
+    assert tuple(row) == mark
     assert row.partition_id == "stage:sample"
     assert (row.rows_in, row.rows_out) == (42, 42)
     assert row.drop_reason_counts is None and row.scrub_counts is None

@@ -82,6 +82,79 @@ def test_lineage_totals(spark, tiny, tiny_annotated):
     assert {r.r: r["count"] for r in reasons} == {r.r: r["count"] for r in lin_reasons}
 
 
+def _expected_lineage(rows, buckets):
+    """Lineage rows (without finished_seq) re-derived in plain Python from
+    annotated rows: per listed bucket the row counts and both count maps,
+    zero counts left out, NULL when every count is zero, keys sorted."""
+    from collections import Counter
+
+    def count_map(counter):
+        return sorted((k, v) for k, v in counter.items() if v) or None
+
+    out = []
+    for b in buckets:
+        rs = [r for r in rows if r.part_bucket == b]
+        reasons = Counter(x for r in rs for x in set(r.drop_reasons or ()))
+        scrubs = Counter()
+        for r in rs:
+            scrubs.update(r.scrub_counts or {})
+        out.append((
+            "test-run", str(b), len(rs), sum(r.keep for r in rs),
+            count_map(reasons), count_map(scrubs), "complete",
+        ))
+    return sorted(out)
+
+
+def _stored_lineage(store):
+    """The store's rows without finished_seq, maps as sorted entry lists
+    (a collected map does not keep its stored order); plus the set of
+    finished_seq values."""
+    rows = store.read().collect()
+
+    def entries(m):
+        return None if m is None else sorted(m.items())
+
+    got = sorted(
+        (r.run_id, r.partition_id, r.rows_in, r.rows_out,
+         entries(r.drop_reason_counts), entries(r.scrub_counts), r.status)
+        for r in rows
+    )
+    return got, {r.finished_seq for r in rows}
+
+
+def test_lineage_rows_exact(spark, tiny_annotated, tmp_path):
+    """Every lineage row equals its plain-Python derivation from the
+    annotated rows, including a listed bucket that holds no rows
+    (rows_in=0, NULL maps); one append shares one finished_seq."""
+    from pii_redaction_data_pipeline_spark.plans.pipeline import (
+        annotated_run_rows,
+        lineage_metrics,
+    )
+    from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
+    from pii_redaction_data_pipeline_spark.sources.tables import BUCKET_COL
+
+    run_rows = annotated_run_rows(spark, tiny_annotated[0], "test-run")
+    rows = run_rows.select(BUCKET_COL, "keep", "drop_reasons", "scrub_counts").collect()
+    buckets = list(range(16))
+
+    got, seqs = _stored_lineage(LineageStore(spark, tiny_annotated[1]))
+    assert got == _expected_lineage(rows, buckets)
+    assert len(seqs) == 1
+
+    # a listed bucket without rows: drop bucket `empty` from the input
+    empty = rows[0].part_bucket
+    store = LineageStore(spark, str(tmp_path / "lineage"))
+    store.append(lineage_metrics(
+        run_rows.filter(F.col(BUCKET_COL) != empty), "test-run", buckets
+    ))
+    kept = [r for r in rows if r.part_bucket != empty]
+    want = _expected_lineage(kept, buckets)
+    assert ("test-run", str(empty), 0, 0, None, None, "complete") in want
+    got, seqs = _stored_lineage(store)
+    assert got == want
+    assert len(seqs) == 1
+
+
 def test_drop_original_text_mode(spark, tiny):
     """retain_original_text=False (reference retain_orig_docs=false,
     redact.py:240-243): raw text absent from the output, verdicts and

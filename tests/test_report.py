@@ -52,16 +52,10 @@ def test_lineage_status_api(spark, tiny_annotated, tmp_path):
     store = LineageStore(spark, lp)
 
     # append a NEWER run so ordering and filtering are non-vacuous
-    newer = store.read().limit(3).select(
-        F.lit("run-2").alias("run_id"),
-        F.col("partition_id"),
-        "rows_in",
-        "rows_out",
-        "drop_reason_counts",
-        "scrub_counts",
-        "status",
-        (F.col("finished_seq") + 1000).alias("finished_seq"),
-    )
+    newer = [
+        ("run-2", *r[1:-1], r.finished_seq + 1000)
+        for r in store.read().limit(3).collect()
+    ]
     store.append(newer)
 
     all_rows = store.status().collect()

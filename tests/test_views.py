@@ -121,21 +121,28 @@ def test_unknown_role_rejected(annotated):
 
 
 def test_lineage_status_range(spark, tmp_path):
-    from pii_redaction_data_pipeline_spark.sources.lineage import (
-        LINEAGE_SCHEMA,
-        LineageStore,
-    )
+    from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
 
     store = LineageStore(spark, str(tmp_path / "lineage"))
     rows = [
         ("r1", str(b), 10, 9, {}, {}, "complete", seq)
         for b, seq in [(0, 100), (1, 200), (2, 300)]
     ]
-    store.append(spark.createDataFrame(rows, LINEAGE_SCHEMA))
+    store.append(rows)
     got = store.status(start_seq=150, end_seq=250).collect()
     assert [r["partition_id"] for r in got] == ["1"]
     assert store.status(run_id="r1").count() == 3
     assert store.status(run_id="r1", start_seq=250).count() == 1
+
+    # a curation store mixes bucket rows with "stage:<name>" rows; the
+    # numeric bucket order must not fail on them, and buckets 10 > 9
+    store.append([
+        ("r2", "10", 10, 9, None, None, "complete", 500),
+        ("r2", "stage:annotate", 20, 20, None, None, "complete", 500),
+        ("r2", "9", 10, 9, None, None, "complete", 500),
+    ])
+    got = [r["partition_id"] for r in store.status(run_id="r2").collect()]
+    assert got == ["stage:annotate", "9", "10"]
 
 
 def test_turn_fp_pruned_for_non_admin(spark):

@@ -13,10 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pii_redaction_data_pipeline_spark.sources.lineage import (
-    LINEAGE_SCHEMA,
-    LineageStore,
-)
+from pii_redaction_data_pipeline_spark.sources.lineage import LineageStore
 from pii_redaction_data_pipeline_spark.sources.tables import (
     BUCKET_COL,
     aligned_partitions,
@@ -75,8 +72,9 @@ def test_lineage_append_writes_one_file(spark, tmp_path):
     rows = [
         ("r", str(b), 10, 9, None, None, "complete", 1) for b in range(16)
     ]
-    frame = spark.createDataFrame(rows, LINEAGE_SCHEMA).repartition(4)
     store = LineageStore(spark, path)
-    store.append(frame)
+    # 16 rows plan as up to defaultParallelism partitions: without the
+    # store's coalesce(1) this append would write one file per partition
+    store.append(rows)
     assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
     assert sorted(store.completed_buckets("r")) == list(range(16))
